@@ -29,7 +29,17 @@ import graft.search.{HybridParams, HybridSearch, SearchParams, Searcher}
 final class GraftIndex private (val spark: SparkSession, val path: String) {
 
   def index: MultiVectorIndex = new MultiVectorIndex(spark, path)
-  def ftsIndex: FtsIndex = new FtsIndex(spark, s"$path/fts")
+  /** The FTS handle: one per GraftIndex, following the artifact's own
+    * files ([[FtsIndex.stamp]]), so a serving loop keeps its resident
+    * BM25 image until a write touches the artifact. Keyed on the FTS
+    * files, not the manifest build id: inside an update the FTS append
+    * or delete mapping lands AFTER the manifest bump, so a
+    * manifest-keyed image could be built between the two writes and
+    * then serve stale postings. Its image shares
+    * `localIndexBudgetBytes` with the semantic image
+    * ([[Searcher.residentBytes]]). */
+  lazy val ftsIndex: FtsIndex =
+    new FtsIndex(spark, s"$path/fts", budget => Searcher.residentBytes(index, budget))
   private def metaPath = s"$path/meta"
 
   def metadata: DataFrame = spark.read.parquet(metaPath)
@@ -170,7 +180,9 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
     * flip between handle construction and the fast path's stale-image
     * guard; the facade does what a serving loop would — drop the cached
     * handle and retry on a fresh one (bounded: another racing update
-    * just retries again, and a search between updates always wins). */
+    * just retries again, and a search between updates always wins);
+    * the FTS handle re-derives its frames from the moved stamp on the
+    * retry. */
   private def retryingStale[A](attempts: Int = 3)(f: Searcher => A): A = {
     val s = searcher
     try f(s)

@@ -1011,54 +1011,6 @@ object OptProbe {
   /** duplicateClusters with the per-round count of the PREVIOUS edge
     * set carried in a driver variable instead of re-counted from its
     * checkpointed blocks every round (exact same convergence test). */
-  /** duplicateClusters with the LARGE-star output checkpointed per
-    * round: `large` feeds two consumers (the small-star min aggregate's
-    * build and the re-point join's probe), so without a barrier its
-    * groupBy+join+distinct subtree derives twice per round. */
-  def clustersLargeCkpt(docs: DataFrame, idCol: String,
-      pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    val spark = docs.sparkSession
-    var edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    var edgeCount = edges.count()
-    var converged = edgeCount == 0L
-    var it = 0
-    while (!converged && it < maxIters) {
-      val nbrs = edges.select(col("a").as("v"), col("b").as("u"))
-        .union(edges.select(col("b").as("v"), col("a").as("u")))
-      val mins = nbrs.groupBy("v").agg(least(min("u"), first("v")).as("m"))
-      val large = nbrs.join(mins, "v")
-        .filter(col("u") > col("v"))
-        .select(col("u").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint()
-      val dir = large.select(greatest(col("a"), col("b")).as("v"),
-        least(col("a"), col("b")).as("u"))
-      val smins = dir.groupBy("v").agg(min("u").as("m"))
-      val small = dir.join(smins, "v")
-        .select(col("u").as("a"), col("m").as("b"))
-        .union(smins.select(col("v").as("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint()
-      val smallCount = small.count()
-      converged = smallCount == edgeCount && small.except(edges).isEmpty
-      edges = small
-      edgeCount = smallCount
-      it += 1
-    }
-    require(converged, s"clustersLargeCkpt did not converge in $maxIters rounds")
-    val labels = edges.groupBy(col("a").as("doc_id")).agg(min("b").as("lbl"))
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
-      .withColumn("keep", col("doc_id") === col("cluster_id"))
-  }
-
   def clustersCarriedCount(docs: DataFrame, idCol: String,
       pairs: DataFrame, maxIters: Int = 30): DataFrame = {
     var edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
@@ -1231,20 +1183,6 @@ object OptProbe {
         () => clustersCarriedCount(docs, "doc_id", pairs),
         () => graft.pipeline.Dedup.duplicateClusters(docs, "doc_id", pairs))
     }
-
-    if (want("clusters3")) ab("clusters3",
-      () => {
-        val docs = Tables(spark, sfDir, "documents")
-        graft.pipeline.Dedup.duplicateClusters(docs, "doc_id",
-          graft.pipeline.Dedup.minhashDedupPairs(docs, "doc_id", "text",
-            shingleSize = 3, numPerm = 16, rowsPerBand = 4, minJaccard = 0.5))
-      },
-      () => {
-        val docs = Tables(spark, sfDir, "documents")
-        clustersLargeCkpt(docs, "doc_id",
-          graft.pipeline.Dedup.minhashDedupPairs(docs, "doc_id", "text",
-            shingleSize = 3, numPerm = 16, rowsPerBand = 4, minJaccard = 0.5))
-      })
 
     if (want("prlocal")) {
       def prEdges = {

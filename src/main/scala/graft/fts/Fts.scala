@@ -172,14 +172,35 @@ object Fts {
       subset: Option[DataFrame] = None,
       doclensOpt: Option[DataFrame] = None
   ): DataFrame = {
-    val terms = tokenizerName match {
+    val scored = bm25(spark, postings, queryTerms(tokenizerName, query),
+      andSemantics(tokenizerName), subset, doclensOpt)
+    graft.operators.Rankers.topKGlobal(
+      scored, Seq(col("score").desc, col("doc_id").asc), topK)
+  }
+
+  /** The query tokenizer dispatch shared by [[search]] and the resident
+    * image ([[FtsIndex]]): identifier-aware queries OR their terms, the
+    * other tokenizers AND them. */
+  def queryTerms(tokenizerName: String, query: String): Seq[String] =
+    tokenizerName match {
       case "identifier_aware" => Tokenizers.sanitizeQueryTermsOr(query)
       case "trigram"          => Tokenizers.trigram(query).distinct
       case _                  => Tokenizers.sanitizeQueryTerms(query)
     }
-    val andSem = tokenizerName != "identifier_aware"
-    val scored = bm25(spark, postings, terms, andSem, subset, doclensOpt)
-    graft.operators.Rankers.topKGlobal(
-      scored, Seq(col("score").desc, col("doc_id").asc), topK)
+
+  def andSemantics(tokenizerName: String): Boolean = tokenizerName != "identifier_aware"
+
+  /** Scalar twin of [[bm25]]'s idf column: Spark's `log` is
+    * `StrictMath.log` and yields null (so `greatest` picks the floor) for
+    * a non-positive argument. */
+  def idf(nDocs: Double, df: Double): Double = {
+    val x = (nDocs - df + 0.5) / (df + 0.5)
+    if (x <= 0.0) 1e-6 else math.max(StrictMath.log(x), 1e-6)
   }
+
+  /** Scalar twin of [[bm25]]'s per-posting score column, operation for
+    * operation in the same order, so a single posting scores
+    * bit-identically on both paths. */
+  def termScore(idf: Double, tf: Long, dl: Long, avgdl: Double): Double =
+    idf * (tf * (K1 + 1)) / (tf + K1 * ((1.0 - B) + B * dl / avgdl))
 }

@@ -19,24 +19,353 @@ import graft.util.Fs
   * Searches read the persisted postings (no per-query re-tokenization of
   * the corpus); maintenance ops are bounded by the touched docs — delete
   * is an anti-join, update_rows re-tokenizes only the changed rows.
+  *
+  * A handle follows the artifact: every access takes a stamp of the
+  * artifact's OWN files ([[FtsIndex.stamp]]: every file under `<path>`,
+  * one directory listing) and re-derives the postings and doclens
+  * frames, the tokenizer and the resident image whenever the stamp
+  * moved. Any append, delete mapping, update or rebuild — through this
+  * handle or another — moves it, so a held handle never serves
+  * pre-write postings.
+  *
+  * Serving: the first search of a version collects a driver-resident
+  * BM25 image ([[FtsIndex.Bm25Image]]: per-term primitive postings, the
+  * doclens, `n_docs`, `avgdl`) when its estimated JVM footprint
+  * ([[FtsIndex.residentBytesEstimate]]) plus `coResidentBytes` — the
+  * driver bytes another resident image charges against the same budget
+  * ([[graft.GraftIndex]] charges its semantic image) — fits the
+  * search's `localIndexBudgetBytes` (the [[graft.search.SearchParams]]
+  * budget, 768 MB by default), and answers every later search of that
+  * version from it with no Spark job — the reference answers from
+  * in-process SQLite FTS5 the same way. The image applies a subset and
+  * excluded ids as driver bit sets and keeps [[Fts.bm25]]'s arithmetic,
+  * AND/OR semantics, tokenizer dispatch and (score desc, doc_id asc)
+  * ties. It sums a doc's per-term scores in term order — the
+  * distributed plan's order when the doc's postings sit in one
+  * term-sorted file; across files Spark sums in partition order, so a
+  * multi-term score can differ in its last bits. The distributed plan
+  * ([[Fts.search]]) runs when the budget is 0, the estimate does not
+  * fit it, or a subset has more ids than [[FtsIndex.boundedIds]] admits
+  * — the 100 TB path, unchanged.
   */
-final class FtsIndex(val spark: SparkSession, val path: String) {
-  lazy val postings: DataFrame = spark.read.parquet(s"$path/postings")
-  lazy val doclens: DataFrame = spark.read.parquet(s"$path/doclens")
+final class FtsIndex(
+    val spark: SparkSession, val path: String,
+    coResidentBytes: Long => Long = _ => 0L) {
 
-  lazy val tokenizerName: String = {
-    val node = graft.index.MultiVectorIndex.jsonMapper.readTree(
-      Fs.readBytes(s"$path/fts.json"))
-    node.get("tokenizer").asText()
+  /** The artifact version last observed (frames, tokenizer, estimate and
+    * image of ONE stamp). */
+  @volatile private var observed: FtsIndex.Version = _
+
+  /** The version of the artifact's current files: reused while the
+    * stamp holds, re-derived after any write. */
+  private def current: FtsIndex.Version = {
+    val s = FtsIndex.stamp(path)
+    val v = observed
+    if (v != null && v.stamp == s) v
+    else {
+      val fresh = new FtsIndex.Version(spark, path, s)
+      observed = fresh
+      fresh
+    }
   }
 
-  /** F4/F5 search over the persisted postings + doclens. */
-  def search(query: String, topK: Int, subset: Option[DataFrame] = None): DataFrame =
-    Fts.search(spark, postings, query, topK, tokenizerName, subset,
-      doclensOpt = Some(doclens))
+  def postings: DataFrame = current.postings
+  def doclens: DataFrame = current.doclens
+  def tokenizerName: String = current.tokenizer
+
+  /** F4/F5 search over the persisted postings + doclens: from the
+    * resident image when it fits `localBudgetBytes` (0 = never), else
+    * the distributed plan. Returns `(doc_id, score, rank)`. */
+  def search(
+      query: String, topK: Int, subset: Option[DataFrame] = None,
+      localBudgetBytes: Long = graft.search.SearchParams().localIndexBudgetBytes): DataFrame = {
+    val v = current
+    val local = for {
+      img <- resident(v, localBudgetBytes)
+      ids <- subset.fold(Option(Option.empty[Array[Long]]))(
+        FtsIndex.boundedIds(_, localBudgetBytes).map(Some(_)))
+    } yield img.frame(spark, img.topK(query, topK, ids, Array.emptyLongArray))
+    local.getOrElse(Fts.search(spark, v.postings, query, topK, v.tokenizer, subset,
+      doclensOpt = Some(v.doclens)))
+  }
+
+  /** The resident image of the artifact's current files, or None when
+    * `budgetBytes` is 0 or the estimate plus `coResidentBytes` does not
+    * fit it. */
+  private[graft] def residentImage(budgetBytes: Long): Option[FtsIndex.Bm25Image] =
+    if (budgetBytes <= 0) None else resident(current, budgetBytes)
+
+  /** An image is built only from a version whose files did not change
+    * during the collect; a build that races a write is retried on the
+    * newer version, paced like [[graft.GraftIndex.fsck]]. An image the
+    * budget no longer admits is released. */
+  @annotation.tailrec
+  private def resident(v: FtsIndex.Version, budgetBytes: Long,
+      attempt: Int = 1): Option[FtsIndex.Bm25Image] = {
+    if (budgetBytes <= 0) return None
+    // None: the build raced a write
+    val outcome: Option[Option[FtsIndex.Bm25Image]] =
+      try {
+        if (v.estimate + coResidentBytes(budgetBytes) <= budgetBytes) v.image.map(Some(_))
+        else {
+          v.release()
+          Some(None)
+        }
+      } catch {
+        case _: java.io.IOException if FtsIndex.stamp(path) != v.stamp => None
+      }
+    outcome match {
+      case Some(img) => img
+      case None if attempt < FtsIndex.BuildAttempts =>
+        Thread.sleep(40L * attempt)
+        resident(current, budgetBytes, attempt + 1)
+      case None =>
+        throw new IllegalStateException(
+          s"FTS artifact at $path changed on disk during each of " +
+          s"${FtsIndex.BuildAttempts} image builds")
+    }
+  }
 }
 
 object FtsIndex {
+
+  /** Image builds tried before a build racing a write storm gives up. */
+  private[fts] val BuildAttempts = 5
+
+  /** One observed version of the artifact at `path`: its frames,
+    * tokenizer, footprint estimate and — once a search admits it — its
+    * resident image, all keyed on one [[stamp]]. */
+  private final class Version(spark: SparkSession, path: String, val stamp: String) {
+    lazy val postings: DataFrame = spark.read.parquet(s"$path/postings")
+    lazy val doclens: DataFrame = spark.read.parquet(s"$path/doclens")
+    lazy val tokenizer: String = readTokenizer(path)
+    lazy val estimate: Long = residentBytesEstimate(path)
+
+    @volatile private var img: Bm25Image = _
+
+    /** This version's image, collected on first use from fresh reads;
+      * None when a write landed during the collect (the stamp moved, or
+      * a file was swapped away under it), so an image is exactly the
+      * content of the stamp it is keyed on. */
+    def image: Option[Bm25Image] = synchronized {
+      if (img == null) {
+        val built =
+          try Some(Bm25Image.collect(spark, path))
+          catch { case _: Exception if FtsIndex.stamp(path) != stamp => None }
+        built.filter(_ => FtsIndex.stamp(path) == stamp).foreach(img = _)
+      }
+      Option(img)
+    }
+
+    def release(): Unit = img = null
+  }
+
+  /** Driver bytes per subset id held while a resident search applies a
+    * subset: ~64 B per boxed id, as [[graft.search.Searcher]]'s sharded
+    * dispatch counts them. */
+  private val SubsetBytesPerId = 64L
+
+  /** The ids of `subset(doc_id)`, collected to the driver only when its
+    * count (taken once, before the collect) × [[SubsetBytesPerId]] fits
+    * `budgetBytes`; None sends the caller to its distributed plan, whose
+    * subset joins are size-planned — a broad filter must never be
+    * driver-collected. */
+  private[graft] def boundedIds(subset: DataFrame, budgetBytes: Long): Option[Array[Long]] = {
+    val spark = subset.sparkSession
+    import spark.implicits._
+    val ids = subset.select(col("doc_id").cast("long"))
+    if (ids.count() * SubsetBytesPerId > budgetBytes) None
+    else Some(ids.as[Long].collect())
+  }
+
+  /** Estimated peak driver bytes per postings row and per doclens row
+    * while the resident image is collected and held. The held image
+    * measured 6.6–9.1 B per posting, doclens included (Spark's
+    * `SizeEstimator` on the images of the sf0.01 and sf0.1 documents
+    * tables under all three tokenizers: 11.7k–713k postings, 31–377
+    * terms): 8 B of (doc index, tf) per posting, 16 B per doc and
+    * ~150 B per term. The collect holds two more copies while it runs —
+    * the decoded result rows and the per-partition blocks, ~12 B per
+    * posting and 16 B per doc each — so the peak is ~32 B per posting;
+    * 48 B leaves room for a vocabulary of up to one term per ten
+    * postings. */
+  val ResidentBytesPerPosting = 48L
+  val ResidentBytesPerDoc = 48L
+
+  /** Estimated driver footprint of the resident image of the artifact at
+    * `path`: row counts from the parquet footers (driver-side metadata
+    * reads, no Spark job) × the per-row factors above. */
+  def residentBytesEstimate(path: String): Long =
+    Fs.parquetRows(s"$path/postings") * ResidentBytesPerPosting +
+      Fs.parquetRows(s"$path/doclens") * ResidentBytesPerDoc
+
+  /** Stamp of the artifact's own files ([[Fs.fingerprint]] of `path`:
+    * names, lengths and mtimes, no data read). Every write names new
+    * part files, so any append, delete mapping, update or rebuild
+    * changes it. A listing that races a directory swap is retried. */
+  def stamp(path: String): String = {
+    @annotation.tailrec
+    def go(attempt: Int): String =
+      (try Some(Fs.fingerprint(path))
+       catch { case _: java.io.FileNotFoundException if attempt < BuildAttempts => None }) match {
+        case Some(fp) => fp
+        case None =>
+          Thread.sleep(10L * attempt)
+          go(attempt + 1)
+      }
+    go(1)
+  }
+
+  private[fts] def readTokenizer(path: String): String =
+    graft.index.MultiVectorIndex.jsonMapper.readTree(
+      Fs.readBytes(s"$path/fts.json")).get("tokenizer").asText()
+
+  /** Driver-resident BM25 image of one artifact version: per-term
+    * postings as primitive arrays of (doc index, tf) — doc index into
+    * the doc_id-sorted `docIds`/`dls` arrays —, each term's corpus df,
+    * and the corpus statistics. Postings of docs without a doclen are
+    * dropped (the distributed plan's doclens join drops them) but still
+    * count in df (it counts postings rows before that join). */
+  final class Bm25Image private (
+      val tokenizer: String,
+      docIdType: org.apache.spark.sql.types.DataType,
+      terms: java.util.HashMap[String, Bm25Image.Postings],
+      docIds: Array[Long],
+      dls: Array[Long]) {
+
+    val nDocs: Double = docIds.length.toDouble
+    /** avg(dl): the sum of integral doubles is exact below 2^53, so
+      * this equals Spark's `avg` whatever the summation order. */
+    val avgdl: Double = dls.iterator.map(_.toDouble).sum / nDocs
+
+    private def indexOf(id: Long): Int = java.util.Arrays.binarySearch(docIds, id)
+
+    private def bits(ids: Iterable[Long]): java.util.BitSet = {
+      val b = new java.util.BitSet(docIds.length)
+      ids.foreach { id => val i = indexOf(id); if (i >= 0) b.set(i) }
+      b
+    }
+
+    /** [[Fts.search]] over this image: `(doc_id, score, rank)` of the
+      * top `k` by (score desc, doc_id asc). `subset` restricts and
+      * `exclude` removes candidate docs; neither changes the corpus
+      * statistics (FTS5 computes idf on the whole table). */
+    def topK(query: String, k: Int, subset: Option[Array[Long]],
+        exclude: Array[Long]): Array[(Long, Double, Int)] = {
+      // a doc's per-term scores are summed in term order: the order of
+      // one term-sorted postings file, which is the order the
+      // distributed plan sums in when a doc's postings sit in one file
+      val qTerms = Fts.queryTerms(tokenizer, query).distinct.sorted
+      val allowed = subset.map(bits(_))
+      val excluded = bits(exclude)
+      // per candidate doc index: (summed score, matched postings)
+      val acc = scala.collection.mutable.LongMap.empty[Array[Double]]
+      qTerms.foreach { t =>
+        val p = terms.get(t)
+        if (p != null) {
+          val idf = Fts.idf(nDocs, p.df.toDouble)
+          var j = 0
+          while (j < p.docs.length) {
+            val d = p.docs(j)
+            if (allowed.forall(_.get(d)) && !excluded.get(d)) {
+              val a = acc.getOrElseUpdate(d.toLong, new Array[Double](2))
+              a(0) += Fts.termScore(idf, p.tfs(j), dls(d), avgdl)
+              a(1) += 1
+            }
+            j += 1
+          }
+        }
+      }
+      val need = if (Fts.andSemantics(tokenizer)) qTerms.length.toDouble else 0.0
+      val hits = acc.iterator
+        .filter { case (_, a) => need == 0.0 || a(1) == need }
+        .map { case (d, a) => (d.toInt, a(0)) }
+        .toArray
+      // doc index order is doc_id order: docIds is sorted
+      java.util.Arrays.sort(hits, Bm25Image.ScoreDescDocAsc)
+      hits.iterator.take(math.max(k, 0)).zipWithIndex
+        .map { case ((d, sc), r) => (docIds(d), sc, r + 1) }.toArray
+    }
+
+    /** Hits as the distributed plan's `(doc_id, score, rank)` frame — a
+      * local relation, so collecting it runs no Spark job. */
+    def frame(spark: SparkSession, hits: Array[(Long, Double, Int)]): DataFrame = {
+      import spark.implicits._
+      hits.toSeq.toDF("doc_id", "score", "rank")
+        .select(col("doc_id").cast(docIdType).as("doc_id"), col("score"), col("rank"))
+    }
+  }
+
+  object Bm25Image {
+
+    final class Postings(val df: Long, val docs: Array[Int], val tfs: Array[Int])
+
+    private val ScoreDescDocAsc: java.util.Comparator[(Int, Double)] =
+      (a: (Int, Double), b: (Int, Double)) => {
+        val c = java.lang.Double.compare(b._2, a._2)
+        if (c != 0) c else Integer.compare(a._1, b._1)
+      }
+
+    /** Collect the artifact at `path` (fresh reads, not a handle's cached
+      * frames). Each partition is compacted executor-side into primitive
+      * per-term blocks before it reaches the driver, so the collect never
+      * holds a boxed row per posting. */
+    def collect(spark: SparkSession, path: String): Bm25Image = {
+      import spark.implicits._
+      val tokenizer = readTokenizer(path)
+      val post = spark.read.parquet(s"$path/postings")
+      val docBlocks = spark.read.parquet(s"$path/doclens")
+        .select(col("doc_id").cast("long"), col("dl").cast("long")).as[(Long, Long)]
+        .mapPartitions { it =>
+          val ids = Array.newBuilder[Long]
+          val dls = Array.newBuilder[Long]
+          it.foreach { case (d, l) => ids += d; dls += l }
+          Iterator.single((ids.result(), dls.result()))
+        }.collect()
+      val termBlocks = post
+        .select(col("term"), col("doc_id").cast("long"), col("tf").cast("int"))
+        .as[(String, Long, Int)]
+        .mapPartitions { it =>
+          val m = new java.util.HashMap[String,
+            (scala.collection.mutable.ArrayBuilder.ofLong,
+              scala.collection.mutable.ArrayBuilder.ofInt)]()
+          it.foreach { case (t, d, tf) =>
+            val b = m.computeIfAbsent(t, _ => (new scala.collection.mutable.ArrayBuilder.ofLong,
+              new scala.collection.mutable.ArrayBuilder.ofInt))
+            b._1 += d
+            b._2 += tf
+          }
+          val out = new scala.collection.mutable.ArrayBuffer[(String, Array[Long], Array[Int])](m.size)
+          m.forEach((t, b) => out += ((t, b._1.result(), b._2.result())))
+          out.iterator
+        }.collect()
+
+      val ids0 = docBlocks.flatMap(_._1)
+      val dls0 = docBlocks.flatMap(_._2)
+      val order = ids0.indices.sortBy(ids0(_)).toArray
+      val docIds = order.map(ids0)
+      val dls = order.map(dls0)
+
+      val byTerm = termBlocks.groupBy(_._1)
+      val terms = new java.util.HashMap[String, Postings](byTerm.size * 2)
+      byTerm.foreach { case (t, blocks) =>
+        val docs = Array.newBuilder[Int]
+        val tfs = Array.newBuilder[Int]
+        var df = 0L
+        blocks.foreach { case (_, ds, fs) =>
+          df += ds.length
+          var j = 0
+          while (j < ds.length) {
+            val i = java.util.Arrays.binarySearch(docIds, ds(j))
+            if (i >= 0) { docs += i; tfs += fs(j) }
+            j += 1
+          }
+        }
+        terms.put(t, new Postings(df, docs.result(), tfs.result()))
+      }
+      new Bm25Image(tokenizer, post.schema("doc_id").dataType, terms, docIds, dls)
+    }
+  }
 
   /** Postings files are sorted by term (partition-local — no extra
     * shuffle beyond the build aggregation), so a term-filtered scan

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * distributed twins of the reference's list-fusion kernels
   * (next-plaid/src/text_search.rs:1000-1075) and the API orchestration
   * rules (handlers/search.rs: alpha default 0.75, fetch_k = top_k*3,
-  * default fusion = relative_score).
+  * default fusion = relative_score) — plus driver-side twins of the
+  * per-query variants for serving-shaped batches, whose lists are at
+  * most queries × fetch_k rows.
   */
 object Hybrid {
 
@@ -92,5 +94,53 @@ object Hybrid {
       .select("query_id", "doc_id", "score")
     graft.operators.Rankers.topKPerGroup(fused, Seq(col("query_id")),
       Seq(col("score").desc, col("doc_id").asc), topK)
+  }
+
+  // ---- driver-side per-query fusion (the reference's in-memory list
+  // fusion): same arithmetic in the same operation order and the same
+  // (score desc, doc_id asc) per-query cut as the grouped variants, so
+  // results are identical ----
+
+  /** A per-query ranked-list row `(query_id, doc_id, score, rank)`. */
+  type Hit = (Long, Long, Double, Int)
+
+  /** [[rrfGrouped]] on driver-held lists. */
+  def rrfLocal(sem: Seq[Hit], kw: Seq[Hit], alpha: Double, topK: Int): Seq[Hit] =
+    fuseLocal(
+      sem.map(h => (h._1, h._2, alpha / (RrfK + h._4))),
+      kw.map(h => (h._1, h._2, (1.0 - alpha) / (RrfK + h._4))),
+      topK)(_ + _)
+
+  /** [[relativeScoreGrouped]] on driver-held lists. */
+  def relativeScoreLocal(sem: Seq[Hit], kw: Seq[Hit], alpha: Double, topK: Int): Seq[Hit] =
+    fuseLocal(normalizeLocal(sem), normalizeLocal(kw), topK)(
+      (s, k) => alpha * s + (1.0 - alpha) * k)
+
+  /** Per-query min-max normalization (constant list -> all 1.0). */
+  private def normalizeLocal(list: Seq[Hit]): Seq[(Long, Long, Double)] = {
+    val range = list.groupBy(_._1).view
+      .mapValues(hs => (hs.map(_._3).min, hs.map(_._3).max)).toMap
+    list.map { case (q, d, sc, _) =>
+      val (lo, hi) = range(q)
+      (q, d, if (hi == lo) 1.0 else (sc - lo) / (hi - lo))
+    }
+  }
+
+  /** Full outer join on (query_id, doc_id) — a side a doc is missing
+    * from contributes 0.0, like the grouped variants' coalesce — then
+    * each query's top `topK`. */
+  private def fuseLocal(sem: Seq[(Long, Long, Double)], kw: Seq[(Long, Long, Double)],
+      topK: Int)(combine: (Double, Double) => Double): Seq[Hit] = {
+    val parts = scala.collection.mutable.HashMap.empty[(Long, Long), Array[Double]]
+    sem.foreach { case (q, d, v) => parts.getOrElseUpdate((q, d), new Array[Double](2))(0) = v }
+    kw.foreach { case (q, d, v) => parts.getOrElseUpdate((q, d), new Array[Double](2))(1) = v }
+    parts.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1).flatMap { case (q, rows) =>
+      rows.map { case ((_, d), v) => (d, combine(v(0), v(1))) }
+        .sortWith { (a, b) =>
+          val c = java.lang.Double.compare(b._2, a._2)
+          c < 0 || (c == 0 && a._1 < b._1)
+        }
+        .take(topK).zipWithIndex.map { case ((d, sc), i) => (q, d, sc, i + 1) }
+    }
   }
 }

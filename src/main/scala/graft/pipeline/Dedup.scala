@@ -751,7 +751,8 @@ object Dedup {
       // re-point join's probe): checkpoint so its groupBy+join+distinct
       // subtree runs once per round, not twice (r20; interleaved A/B
       // `clusters3`, hash-identical: wins 4/4, 4.01 -> 3.72 s warm,
-      // 10.8 -> 4.5 s cold through the full p_dedup_groups chain)
+      // 10.8 -> 4.5 s cold through the full p_dedup_groups chain; the
+      // leg was retired once this shape became the only one)
       val large = nbrs.join(mins, "v")
         .filter(col("u") > col("v"))
         .select(col("u").as("a"), col("m").as("b"))

@@ -14,6 +14,16 @@ import graft.meta.{MetadataOps, Where}
   * {rrf, relative_score} (default relative_score), optional
   * filter_condition resolved to a doc-id subset FIRST (so both retrieval
   * legs prune), hybrid over-fetch fetch_k = 3·top_k.
+  *
+  * Keyword and hybrid requests of at most [[Searcher.LocalMaxBatch]]
+  * queries whose FTS artifact has a resident image within
+  * `searchParams.localIndexBudgetBytes` are answered on the driver, as
+  * the reference fuses in memory: both legs are collected (each at most
+  * queries × fetch_k rows), fused by [[Hybrid.rrfLocal]] /
+  * [[Hybrid.relativeScoreLocal]] and cut per query — with a resident
+  * semantic image too, no Spark job runs. Larger batches, a budget of 0,
+  * artifacts above it, and filters or tombstone sets too large to
+  * collect ([[graft.fts.FtsIndex.boundedIds]]) keep the distributed plan.
   */
 final case class HybridParams(
     mode: String = "hybrid",
@@ -51,48 +61,103 @@ object HybridSearch {
     val subset: Option[DataFrame] = filter.map { case (meta, cond, ps) =>
       MetadataOps.whereCondition(meta, "doc_id", cond, ps).select("doc_id")
     }
-    // the FTS leg must not resurface tombstoned docs (the vector leg
-    // excludes them inside Searcher); fold the tombstones into the FTS
-    // subset as an anti-join
-    val ftsSubset: Option[DataFrame] = (subset, index.tombstonesOpt) match {
-      case (s, None) => s
-      case (Some(s), Some(tomb)) => Some(s.join(tomb, Seq("doc_id"), "left_anti"))
-      case (None, Some(tomb)) =>
-        Some(fts.doclens.select("doc_id").join(tomb, Seq("doc_id"), "left_anti"))
-    }
     val fetchK = if (params.mode == "hybrid") Hybrid.fetchK(params.topK) else params.topK
+    val budget = params.searchParams.localIndexBudgetBytes
 
-    def semList: DataFrame = searcherOpt.getOrElse(new Searcher(index))
-      .search(queries, params.searchParams.copy(topK = fetchK), subset)
+    def semList(sub: Option[DataFrame]): DataFrame = searcherOpt.getOrElse(new Searcher(index))
+      .search(queries, params.searchParams.copy(topK = fetchK), sub)
       .select("query_id", "doc_id", "score", "rank")
 
-    def kwList: DataFrame = {
-      val hits = fts.search(textQuery, fetchK, ftsSubset)
-        .select("doc_id", "score", "rank")
-      // the single keyword list pairs with every vector query
-      queries.select("query_id").distinct().crossJoin(broadcast(hits))
-    }
+    // serving-shaped keyword/hybrid batch over a resident FTS image: the
+    // query ids are collected only once the image serves, and a filter
+    // only when its count fits the budget (tombstones likewise)
+    val local: Option[Local] =
+      for {
+        img <- if (params.mode == "semantic") None else fts.residentImage(budget)
+        qids <- {
+          import spark.implicits._
+          val ids = queries.select(col("query_id").cast("long"))
+            .limit(Searcher.LocalMaxBatch + 1).as[Long].collect()
+          if (ids.length > Searcher.LocalMaxBatch) None else Some(ids.distinct.sorted)
+        }
+        subsetIds <- subset.fold(Option(Option.empty[Array[Long]]))(
+          FtsIndex.boundedIds(_, budget).map(Some(_)))
+        tombIds <- index.tombstonesOpt.fold(Option(Array.emptyLongArray))(
+          FtsIndex.boundedIds(_, budget))
+      } yield Local(img, qids, subsetIds, tombIds)
 
-    params.mode match {
-      case "semantic" => semList
-      case "keyword" =>
-        // fetchK == params.topK outside hybrid mode, so the shared
-        // kwList IS the keyword result — one retrieval code path to
-        // keep tombstone/subset wiring in sync
-        kwList.select("query_id", "doc_id", "score", "rank")
-      case "hybrid" =>
-        val fused =
-          if (params.fusion == "rrf")
+    local match {
+      case Some(l) =>
+        searchLocal(spark, index, l, textQuery, params, fetchK, subset, semList)
+      case None if params.mode == "semantic" => semList(subset)
+      case None =>
+        // the FTS leg must not resurface tombstoned docs (the vector leg
+        // excludes them inside Searcher); fold the tombstones into the
+        // FTS subset as an anti-join
+        val ftsSubset: Option[DataFrame] = (subset, index.tombstonesOpt) match {
+          case (s, None) => s
+          case (Some(s), Some(tomb)) => Some(s.join(tomb, Seq("doc_id"), "left_anti"))
+          case (None, Some(tomb)) =>
+            Some(fts.doclens.select("doc_id").join(tomb, Seq("doc_id"), "left_anti"))
+        }
+        // the single keyword list pairs with every vector query; fetchK
+        // == params.topK outside hybrid mode, so in keyword mode this IS
+        // the result. Budget 0: the distributed BM25 plan, as before the
+        // driver path existed
+        val kwList = queries.select("query_id").distinct().crossJoin(broadcast(
+          fts.search(textQuery, fetchK, ftsSubset, localBudgetBytes = 0L)
+            .select("doc_id", "score", "rank")))
+        val out =
+          if (params.mode == "keyword") kwList
+          else if (params.fusion == "rrf")
             Hybrid.rrfGrouped(
-              semList.select("query_id", "doc_id", "rank"),
+              semList(subset).select("query_id", "doc_id", "rank"),
               kwList.select("query_id", "doc_id", "rank"),
               params.alpha, params.topK)
           else
             Hybrid.relativeScoreGrouped(
-              semList.select("query_id", "doc_id", "score"),
+              semList(subset).select("query_id", "doc_id", "score"),
               kwList.select("query_id", "doc_id", "score"),
               params.alpha, params.topK)
-        fused.select("query_id", "doc_id", "score", "rank")
+        out.select("query_id", "doc_id", "score", "rank")
     }
+  }
+
+  /** A keyword/hybrid request the driver answers: the resident image,
+    * the batch's query ids, and the collected filter and tombstone ids. */
+  private final case class Local(img: FtsIndex.Bm25Image, qids: Array[Long],
+      subsetIds: Option[Array[Long]], tombIds: Array[Long])
+
+  /** The driver-side keyword/hybrid request: the keyword leg from the
+    * resident BM25 image (subset and tombstones applied as driver
+    * sets), the semantic leg collected from the Searcher (at most
+    * queries × fetch_k rows), fusion and per-query top-k on the driver.
+    * The result is a local relation. */
+  private def searchLocal(
+      spark: SparkSession, index: MultiVectorIndex, l: Local, textQuery: String,
+      params: HybridParams, fetchK: Int, subset: Option[DataFrame],
+      semList: Option[DataFrame] => DataFrame): DataFrame = {
+    import spark.implicits._
+    val hits = l.img.topK(textQuery, fetchK, l.subsetIds, l.tombIds)
+    val kw: Seq[Hybrid.Hit] =
+      for (q <- l.qids.toSeq; (d, sc, r) <- hits.toSeq) yield (q, d, sc, r)
+    val rows =
+      if (params.mode == "keyword") kw
+      else {
+        // a Searcher answering from its resident image collects the
+        // filter anyway, so it gets the ids already collected (the
+        // filter is evaluated once, not once per leg); any other plan
+        // gets the filter itself, whose subset joins are size-planned
+        val semSubset =
+          if (Searcher.servesLocally(index, params.searchParams, l.qids.length))
+            l.subsetIds.map(_.toSeq.toDF("doc_id"))
+          else subset
+        val sem = semList(semSubset)
+          .select(col("query_id"), col("doc_id"), col("score"), col("rank").cast("int"))
+          .as[(Long, Long, Double, Int)].collect().toSeq
+        if (params.fusion == "rrf") Hybrid.rrfLocal(sem, kw, params.alpha, params.topK)
+        else Hybrid.relativeScoreLocal(sem, kw, params.alpha, params.topK)
+      }
+    rows.toDF("query_id", "doc_id", "score", "rank")
   }
 }

@@ -49,11 +49,18 @@ final case class SearchParams(
       * with the footprint now counted honestly (~10% of the default
       * 8 GB driver heap). Above the budget — the 100 TB regime — the
       * distributed funnel is the only correct plan and runs unchanged.
-      * 0 disables BOTH resident-image fast paths (local AND sharded —
-      * sharded dispatch is gated on this budget too, since its slices
-      * are the same collected-image idea spread across executors);
-      * to disable only the sharded path set shardedScoreBudgetBytes
-      * to 0. */
+      * The same budget bounds THREE resident images: the local packed
+      * index image above, the sharded slices below (sharded dispatch is
+      * gated on this budget too, since its slices are the same
+      * collected-image idea spread across executors), and the FTS
+      * artifact's BM25 image ([[graft.fts.FtsIndex]]), which also gates
+      * driver-side keyword/hybrid fusion in [[HybridSearch]]. The two
+      * DRIVER images share it: a [[graft.GraftIndex]]'s FTS image is
+      * admitted only when [[graft.fts.FtsIndex.residentBytesEstimate]]
+      * plus the local image's residency ([[Searcher.residentBytes]],
+      * charged whenever that image fits) fits the budget, so their
+      * combined estimate never exceeds it. 0 disables all three; to
+      * disable only the sharded path set shardedScoreBudgetBytes to 0. */
     localIndexBudgetBytes: Long = 768L << 20,
     /** Sharded serving fast path: when the packed image EXCEEDS the
       * local budget (too big to collect to one node) but the batch is
@@ -143,10 +150,7 @@ final class Searcher(index: MultiVectorIndex) {
     // bounds estimated driver RESIDENCY (~3x the packed image: the
     // transient collect rows, the driver copy, and the broadcast
     // block), not the raw image size — see localIndexBudgetBytes.
-    if (params.localIndexBudgetBytes > 0 &&
-        queryMap.size <= Searcher.LocalMaxBatch &&
-        index.packedBytesEstimate * Searcher.LocalResidencyFactor <=
-          params.localIndexBudgetBytes)
+    if (Searcher.servesLocally(index, params, queryMap.size))
       return searchLocal(queryMap, params, subset)
 
     // Subset counted ONCE (drives sharded dispatch, probe scaling, and
@@ -1182,6 +1186,24 @@ object Searcher {
     * (collected intermediate rows + the held image + its broadcast
     * block). localIndexBudgetBytes bounds N × this factor. */
   private[search] val LocalResidencyFactor = 3L
+
+  /** Estimated driver residency of `index`'s local image (packed
+    * estimate × [[LocalResidencyFactor]]) when `budgetBytes` admits it,
+    * else 0 — what a sibling resident image (the FTS image of
+    * [[graft.GraftIndex]]) charges against the same budget. */
+  def residentBytes(index: MultiVectorIndex, budgetBytes: Long): Long = {
+    val r = index.packedBytesEstimate * LocalResidencyFactor
+    if (budgetBytes > 0 && r <= budgetBytes) r else 0L
+  }
+
+  /** True when [[Searcher.search]] answers an `nQueries` batch from the
+    * resident local image — the dispatch itself, shared with callers
+    * that decide what to hand the search. */
+  private[search] def servesLocally(
+      index: MultiVectorIndex, params: SearchParams, nQueries: Int): Boolean =
+    index.manifest("num_partitions").toInt <= params.sparseCentroidThreshold &&
+      nQueries <= LocalMaxBatch && params.localIndexBudgetBytes > 0 &&
+      index.packedBytesEstimate * LocalResidencyFactor <= params.localIndexBudgetBytes
 
   /** S1–S6 for ONE query against a collected index image: probe,
     * candidate gather, approximate scoring, funnel cut — NO decode.

@@ -109,6 +109,31 @@ object Fs {
     n
   }
 
+  /** Row count of the parquet table at `path` from its file footers —
+    * driver-side metadata reads, no Spark job, no data pages (0 if
+    * absent). Skips writer side-markers like [[countDataFiles]]. */
+  def parquetRows(path: String): Long = {
+    val (f, p) = fs(path)
+    if (!f.exists(p)) return 0L
+    filesUnder(f, p).filter { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }.map { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, f.getConf))
+      try r.getRecordCount
+      finally r.close()
+    }.sum
+  }
+
+  /** Every file under `p`, recursively, by `listStatus`: unlike
+    * `listFiles`, whose located statuses load permissions (a forked
+    * `ls` per file on the local filesystem), a bare status costs one
+    * directory read per directory. */
+  private def filesUnder(f: FileSystem, p: HPath): Seq[org.apache.hadoop.fs.FileStatus] =
+    f.listStatus(p).toSeq.flatMap(st =>
+      if (st.isDirectory) filesUnder(f, st.getPath) else Seq(st))
+
   /** (modification time, length) stamp of a side file — cheap change
     * detection for cached readers (a rewritten manifest.json means the
     * index tables changed underneath an open handle). (0, 0) when
@@ -209,9 +234,7 @@ object Fs {
     // a stale index (r18 advice).
     val rootUri = f.makeQualified(p).toUri.getPath.stripSuffix("/")
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = f.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
+    filesUnder(f, p).foreach { st =>
       val full = st.getPath.toUri.getPath
       val rel =
         if (full.startsWith(rootUri)) full.substring(rootUri.length).stripPrefix("/")

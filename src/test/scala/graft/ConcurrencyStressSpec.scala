@@ -22,9 +22,11 @@ import graft.search.SearchParams
   *     to truncate+write (`writeBytes`) makes readers observe
   *     empty/torn bodies within a few hundred iterations, failing
   *     this test deterministically;
-  *  2. N threads of search / manifest-read / fsck interleaved with a
-  *     driver performing real add/delete update cycles on ONE
-  *     GraftIndex, asserting every search completes, every manifest
+  *  2. N threads of search / hybrid + keyword / manifest-read / fsck
+  *     interleaved with a driver performing real add/delete update
+  *     cycles on ONE GraftIndex with JSON metadata (so every cycle
+  *     also appends to and re-maps the FTS artifact), asserting every
+  *     search completes with a full result set, every manifest
   *     observation is complete (all keys present — the r17 symptom
   *     was `key not found: num_partitions`), and the doc count
   *     matches the expected value after every step.
@@ -164,12 +166,18 @@ class ConcurrencyStressSpec extends AnyFunSuite {
     mdocs.unpersist()
   }
 
+  private def metaJson(ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i, s"""{"title": "doc $i", "lang": "en"}""")).toDF("order", "json")
+  }
+
   test("one index, N threads: search/manifest/fsck interleave real update cycles") {
     requireTestdata()
     val path = "/tmp/graft_stress_idx"
     graft.util.Fs.deleteRecursively(path)
     UpdateJobs.reset()
-    val gi = GraftIndex.create(spark, path, docs.filter(col("doc_id") < 20))
+    val gi = GraftIndex.create(spark, path, docs.filter(col("doc_id") < 20),
+      Some(metaJson(0L until 20L)))
     val qs = docs.filter(col("doc_id") < 2)
       .select(col("doc_id").as("query_id"), col("embeddings"))
     val upCfg = graft.index.UpdateConfig(startFromScratch = 0, bufferSize = 1000)
@@ -179,6 +187,7 @@ class ConcurrencyStressSpec extends AnyFunSuite {
     val searches = new java.util.concurrent.atomic.AtomicLong(0L)
     val manifestReads = new java.util.concurrent.atomic.AtomicLong(0L)
     val fscks = new java.util.concurrent.atomic.AtomicLong(0L)
+    val keywordCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 
     // 2 search threads: every search must COMPLETE with full result
     // sets (the facade's bounded stale-handle retry absorbs build
@@ -196,6 +205,26 @@ class ConcurrencyStressSpec extends AnyFunSuite {
         }
       })
     }
+    // hybrid + keyword thread: every doc's metadata holds "doc", so a
+    // full result set is topK rows per query; the FTS stamp (a fresh
+    // resident image after each FTS write) plus the facade's retry
+    // absorb the index flips
+    val keywordThread = new Thread(() => {
+      while (!stop.get()) {
+        try {
+          val h = gi.hybrid(qs, "doc", graft.search.HybridParams(topK = 3)).count()
+          if (h != 6L) errs.add(s"hybrid: $h rows, expected 6")
+          val k = gi.ftsIndex.search("doc", 3).count()
+          if (k != 3L) errs.add(s"keyword: $k rows, expected 3")
+          keywordCalls.incrementAndGet()
+        } catch {
+          case e: Throwable => errs.add(s"hybrid/keyword: $e"); stop.set(true)
+        }
+        // paced like the fsck thread: interleaving, not CPU pressure
+        // on the writer, is what this thread exercises
+        Thread.sleep(50)
+      }
+    })
     // manifest observer: every read must be a COMPLETE manifest — the
     // r17 torn read surfaced exactly here as a missing num_partitions
     val manifestThread = new Thread(() => {
@@ -222,17 +251,20 @@ class ConcurrencyStressSpec extends AnyFunSuite {
         Thread.sleep(50)
       }
     })
-    (searchThreads :+ manifestThread :+ fsckThread).foreach(_.start())
+    val threads = searchThreads ++ Seq(keywordThread, manifestThread, fsckThread)
+    threads.foreach(_.start())
 
     // driver: real update cycles — async append, then synchronous
-    // delete with dense renumbering; doc count asserted at EVERY step
+    // delete with dense renumbering; doc count asserted at EVERY step.
+    // Each cycle writes the vector tables, the metadata and both FTS
+    // tables, so the hybrid/keyword thread sees two FTS writes a cycle
     var expected = 20L
     try {
       for (c <- 0 until 4) {
         val lo = 20 + 5 * c
         val batch = docs.filter(col("doc_id") >= lo && col("doc_id") < lo + 5)
           .withColumn("doc_id", col("doc_id") - lo)
-        gi.addDocumentsAsync(batch, cfg = upCfg).get()
+        gi.addDocumentsAsync(batch, Some(metaJson(0L until 5L)), cfg = upCfg).get()
         expected += 5
         assert(gi.count === expected, s"cycle $c after add")
         gi.deleteDocuments(ids = Some(Seq(expected - 1, expected - 3)))
@@ -242,11 +274,12 @@ class ConcurrencyStressSpec extends AnyFunSuite {
       }
     } finally {
       stop.set(true)
-      (searchThreads :+ manifestThread :+ fsckThread).foreach(_.join())
+      threads.foreach(_.join())
     }
     assert(errs.isEmpty, s"${errs.size} concurrent failures, e.g.: ${errs.peek()}")
     assert(searches.get() > 0L, "searches never ran concurrently")
     assert(manifestReads.get() > 0L, "manifest observer never ran")
+    assert(keywordCalls.get() > 0L, "hybrid/keyword searches never ran concurrently")
     // with the stale-read retry in fsck, at least some interleaved
     // sweeps must COMPLETE (not merely be tolerated) — zero completions
     // would mean fsck cannot run at all against a live index

@@ -57,9 +57,36 @@ class GraphSpec extends AnyFunSuite {
     val df = edges.toDF("src", "dst")
     val local = Graph.pageRank(spark, df, iterations = 6)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dist = Graph.pageRank(spark, df, iterations = 6, maxLocalNodes = 0L)
+    val dist = Graph.pageRank(spark, df, iterations = 6, maxLocalBytes = 0L)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(local === dist)
+  }
+
+  test("pageRank: the local gate bounds bytes — wide string ids take the distributed loop") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val edges = (1 to 200).map(_ => (rnd.nextInt(40), rnd.nextInt(40)))
+    def isLocal(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // same 40-node graph, same 64 KB bound: ~260 B per narrow id node
+    // fits, ~4.3 KB per 4,000-char id node does not
+    val bound = 64L << 10
+    val narrow = edges.map { case (a, b) => (s"n$a", s"n$b") }.toDF("src", "dst")
+    val pad = "x" * 4000
+    val wide = edges.map { case (a, b) => (s"$pad$a", s"$pad$b") }.toDF("src", "dst")
+    val narrowRun = Graph.pageRank(spark, narrow, iterations = 4, maxLocalBytes = bound)
+    val wideRun = Graph.pageRank(spark, wide, iterations = 4, maxLocalBytes = bound)
+    assert(isLocal(narrowRun), "narrow ids should iterate on the driver")
+    assert(!isLocal(wideRun), "wide ids reached the driver-local loop")
+    // the distributed answer equals the local loop's on the same graph
+    val wideLocal = Graph.pageRank(spark, wide, iterations = 4, maxLocalBytes = 1L << 30)
+    assert(isLocal(wideLocal))
+    assert(ranks(wideRun) === ranks(wideLocal))
+    assert(ranks(narrowRun).map { case (k, v) => k.stripPrefix("n") -> v } ===
+      ranks(wideRun).map { case (k, v) => k.stripPrefix(pad) -> v })
   }
 
   /** Brute-force triangle reference: count id-ordered closed triples. */

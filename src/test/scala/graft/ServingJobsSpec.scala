@@ -1,0 +1,95 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.search.{HybridParams, SearchParams}
+
+/** Job-count guard for the serving paths: a warm keyword search and a
+  * warm hybrid search on a small index run NO Spark job (resident BM25
+  * image, resident semantic image, driver-side fusion), and a zero
+  * resident budget keeps the distributed plan reachable. */
+class ServingJobsSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[8]")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+
+  /** Counts job starts; a job run under the `graft.fence` local
+    * property is a fence: listener events arrive in order, so once the
+    * fence's start is seen every earlier job start has been counted. */
+  private object Jobs extends SparkListener {
+    val started = new AtomicInteger(0)
+    @volatile var fence = ""
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("graft.fence"))) match {
+        case Some(f) => fence = f
+        case None => started.incrementAndGet()
+      }
+  }
+
+  private def drain(): Unit = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    sc.setLocalProperty("graft.fence", id)
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty("graft.fence", null)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (Jobs.fence != id) {
+      assert(System.nanoTime() < deadline, "listener fence never arrived")
+      Thread.sleep(5)
+    }
+  }
+
+  private def jobsOf(f: => Unit): Int = {
+    drain()
+    Jobs.started.set(0)
+    f
+    drain()
+    Jobs.started.get()
+  }
+
+  test("warm keyword and hybrid requests run 0 Spark jobs; budget 0 runs the distributed plan") {
+    IndexFixtures.requireTestdata()
+    import spark.implicits._
+    val path = "/tmp/graft_serving_jobs"
+    graft.util.Fs.deleteRecursively(path)
+    val docs = IndexFixtures.docs(spark).filter(col("doc_id") < 30)
+    val meta = (0L until 30L).map(i =>
+      (i, s"""{"title": "doc $i", "group": ${i % 3}}""")).toDF("order", "json")
+    val gi = GraftIndex.create(spark, path, docs, Some(meta))
+    // one serving request: a local query frame, as a request handler builds
+    val q = docs.filter(col("doc_id") === 4L)
+      .select(col("doc_id").as("query_id"), col("embeddings"))
+      .as[(Long, Array[Array[Float]])].collect().toSeq.toDF("query_id", "embeddings")
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      // warm: the first calls collect the resident images
+      gi.ftsIndex.search("doc", 10).collect()
+      gi.hybrid(q, "doc").collect()
+      assert(jobsOf(assert(gi.ftsIndex.search("doc", 10).collect().length === 10)) === 0,
+        "warm keyword search launched Spark jobs")
+      for (fusion <- Seq("relative_score", "rrf"); mode <- Seq("hybrid", "keyword"))
+        assert(jobsOf(assert(gi.hybrid(q, "doc",
+            HybridParams(mode = mode, fusion = fusion)).collect().length === 10)) === 0,
+          s"warm $mode/$fusion search launched Spark jobs")
+      val distributed = HybridParams(searchParams = SearchParams(localIndexBudgetBytes = 0L))
+      var viaPlan: Array[org.apache.spark.sql.Row] = null
+      assert(jobsOf { viaPlan = gi.hybrid(q, "doc", distributed).collect() } > 0,
+        "a zero budget must keep the distributed hybrid plan")
+      // and both plans answer alike (same docs, same ranks)
+      val resident = gi.hybrid(q, "doc").collect()
+      def key(rs: Array[org.apache.spark.sql.Row]) =
+        rs.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("rank"))).sortBy(_._2).toSeq
+      assert(key(viaPlan) === key(resident))
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+    gi.drop()
+  }
+}
