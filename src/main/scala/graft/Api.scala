@@ -25,13 +25,23 @@ import graft.search.{HybridParams, HybridSearch, SearchParams, Searcher}
   *  .../metadata{,/count,/query,/get,/update}  -> metadata* methods
   * POST   /rerank                     -> rerank
   * }}}
+  *
+  * A handle keeps three driver-resident images across requests, each
+  * keyed on a stamp of the files it was collected from, so a write
+  * through any handle is seen by the next request: the semantic image
+  * (held by the cached [[Searcher]], manifest build id), the BM25 image
+  * ([[ftsIndex]], the FTS artifact's files) and the metadata image that
+  * filtered searches evaluate their condition on ([[filterSource]], the
+  * metadata table's files). The three share
+  * `SearchParams.localIndexBudgetBytes` in that admission order; writes
+  * and the metadata routes read the stored tables.
   */
 final class GraftIndex private (val spark: SparkSession, val path: String) {
 
   def index: MultiVectorIndex = new MultiVectorIndex(spark, path)
   /** The FTS handle: one per GraftIndex, following the artifact's own
-    * files ([[FtsIndex.stamp]]), so a serving loop keeps its resident
-    * BM25 image until a write touches the artifact. Keyed on the FTS
+    * files ([[graft.util.Fs.settledFingerprint]]), so a serving loop
+    * keeps its resident BM25 image until a write touches the artifact. Keyed on the FTS
     * files, not the manifest build id: inside an update the FTS append
     * or delete mapping lands AFTER the manifest bump, so a
     * manifest-keyed image could be built between the two writes and
@@ -42,7 +52,79 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
     new FtsIndex(spark, s"$path/fts", budget => Searcher.residentBytes(index, budget))
   private def metaPath = s"$path/meta"
 
+  /** The stored metadata table. Every write path and the metadata routes
+    * read it; filtered searches read [[filterSource]]. */
   def metadata: DataFrame = spark.read.parquet(metaPath)
+
+  /** The metadata version last observed: its estimate and, once a
+    * filtered search admits it, its resident image, keyed on one
+    * [[graft.util.Fs.settledFingerprint]] of the table's files. Any
+    * append, rewrite or update moves the stamp, so a held handle never
+    * filters against pre-write rows. */
+  @volatile private var metaObserved: GraftIndex.MetaVersion = _
+
+  private def metaVersion: GraftIndex.MetaVersion = {
+    val s = graft.util.Fs.settledFingerprint(metaPath)
+    val v = metaObserved
+    if (v != null && v.stamp == s) v
+    else {
+      val fresh = new GraftIndex.MetaVersion(spark, metaPath, s)
+      metaObserved = fresh
+      fresh
+    }
+  }
+
+  /** The frame a filtered search evaluates its condition on: the
+    * resident metadata image when `budgetBytes` admits it
+    * ([[residentMetadata]]), else the stored table. Over the image the
+    * unchanged [[MetadataOps.whereCondition]] predicate is folded by
+    * Catalyst's `ConvertToLocalRelation` into a local relation, so the
+    * subset runs no Spark job. */
+  private def filterSource(budgetBytes: Long): DataFrame =
+    residentMetadata(budgetBytes).getOrElse(metadata)
+
+  /** The resident metadata image of the table's current files: a local
+    * relation with the parquet schema, collected once per stamp. None
+    * when `budgetBytes` is 0, the table is absent, or the image does not
+    * fit: images are admitted in a fixed order — semantic, FTS, metadata
+    * — and this one only when its estimate
+    * ([[GraftIndex.metadataBytesEstimate]]) plus the semantic image's
+    * charge ([[Searcher.residentBytes]]) plus the FTS image's (its
+    * estimate whenever that image is admitted) fits, so the three
+    * driver images' combined estimate never exceeds the budget. A build
+    * racing a write is retried on the newer version, paced like
+    * [[fsck]]. */
+  private[graft] def residentMetadata(budgetBytes: Long): Option[DataFrame] = {
+    @annotation.tailrec
+    def go(v: GraftIndex.MetaVersion, attempt: Int): Option[DataFrame] = {
+      // None: the build raced a write
+      val outcome: Option[Option[DataFrame]] =
+        try {
+          val sem = Searcher.residentBytes(index, budgetBytes)
+          val fts = ftsIndex.residentBytes(budgetBytes)
+          if (v.admit(sem, fts, budgetBytes)) v.image.get.map(Some(_))
+          else Some(None)
+        } catch {
+          case _: java.io.IOException
+              if graft.util.Fs.settledFingerprint(metaPath) != v.stamp => None
+        }
+      outcome match {
+        case Some(img) => img
+        case None if attempt < GraftIndex.ImageBuildAttempts =>
+          Thread.sleep(40L * attempt)
+          go(metaVersion, attempt + 1)
+        case None =>
+          throw new IllegalStateException(
+            s"metadata at $metaPath changed on disk during each of " +
+            s"${GraftIndex.ImageBuildAttempts} image builds")
+      }
+    }
+    if (budgetBytes <= 0) None
+    else {
+      val v = metaVersion
+      if (v.stamp == "absent") None else go(v, 1)
+    }
+  }
 
   // ---- info (GET /indices/{name}) ----
   def info: Map[String, String] = index.manifest
@@ -225,7 +307,8 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
       queries: DataFrame,
       cond: String, condParams: Seq[Where.Param],
       params: SearchParams = SearchParams()): DataFrame = {
-    val subset = MetadataOps.whereCondition(metadata, "_subset_", cond, condParams)
+    val subset = MetadataOps.whereCondition(
+        filterSource(params.localIndexBudgetBytes), "_subset_", cond, condParams)
       .withColumnRenamed("_subset_", "doc_id")
     retryingStale()(_.search(queries, params, Some(subset)))
   }
@@ -235,7 +318,8 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
       params: HybridParams = HybridParams(),
       cond: Option[(String, Seq[Where.Param])] = None): DataFrame = {
     val filter = cond.map { case (c, ps) =>
-      (metadata.withColumnRenamed("_subset_", "doc_id"), c, ps)
+      (filterSource(params.searchParams.localIndexBudgetBytes)
+        .withColumnRenamed("_subset_", "doc_id"), c, ps)
     }
     retryingStale()(s => HybridSearch.search(spark, index, ftsIndex, queries,
       textQuery, params, filter, searcherOpt = Some(s)))
@@ -584,6 +668,67 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
 }
 
 object GraftIndex {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftIndex])
+
+  /** Metadata image builds tried before a build racing a write storm
+    * gives up. */
+  private val ImageBuildAttempts = 5
+
+  /** Estimated peak driver bytes of the resident metadata image, per row
+    * and per uncompressed stored byte. Measured with Spark's
+    * `SizeEstimator` on the images of two 6-column tables: 470 rows
+    * shaped like the `serve` benchmark's metadata (an id, a number and
+    * four strings), 138 uncompressed B per row, held 513 B per
+    * row and peaked at 1,074 B per row while collected (held rows plus
+    * the collect's external rows and encoded rows); the sf0.01
+    * documents table, 500 rows of 326 uncompressed B, held 652 B and
+    * peaked at 1,649 B per row. A fixed width would follow the row count
+    * and under-count text-heavy tables, so the width is 768 B plus 4×
+    * the table's mean uncompressed row bytes (1,320 B and 2,072 B for
+    * the two tables). */
+  val MetaBytesPerRow = 768L
+  val MetaBytesPerStoredByte = 4L
+
+  /** Estimated driver footprint of the resident image of the metadata
+    * table at `metaPath`: row count × (the per-row width above), read
+    * from the parquet footers (no Spark job). */
+  def metadataBytesEstimate(metaPath: String): Long = {
+    val (rows, bytes) = graft.util.Fs.parquetTotals(metaPath)
+    rows * MetaBytesPerRow + bytes * MetaBytesPerStoredByte
+  }
+
+  /** One observed version of a metadata table: its estimate, its image
+    * once admitted, and the last admission decision logged for it. */
+  private final class MetaVersion(spark: SparkSession, path: String, val stamp: String) {
+    lazy val estimate: Long = metadataBytesEstimate(path)
+
+    private var logged: (Boolean, Long, Long, Long) = _
+
+    /** Collected on first use ([[graft.util.StampedImage]]): a local
+      * relation with the parquet schema. */
+    val image = new graft.util.StampedImage(path, stamp, () => {
+      val stored = spark.read.parquet(path)
+      spark.createDataFrame(java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    })
+
+    /** Whether this image fits `budgetBytes` next to the semantic and FTS
+      * charges. The decision is logged once per version, and again only
+      * when its inputs change; a refused image is released. */
+    def admit(sem: Long, fts: Long, budgetBytes: Long): Boolean = {
+      val admitted = estimate + sem + fts <= budgetBytes
+      val decision = (admitted, sem, fts, budgetBytes)
+      synchronized {
+        if (logged != decision) {
+          logged = decision
+          log.info(s"metadata image ${if (admitted) "admitted" else "refused"}: $path " +
+            s"estimate=$estimate semantic=$sem fts=$fts budget=$budgetBytes")
+        }
+      }
+      if (!admitted) image.release()
+      admitted
+    }
+  }
 
   /** Tombstone fraction of the physical corpus at which a deferred
     * delete triggers automatic compaction. */

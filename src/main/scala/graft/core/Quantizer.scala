@@ -93,19 +93,72 @@ final class Quantizer(
     buckets
   }
 
+  /** Bucket weights of every packed byte value, for widths that tile a
+    * byte (`8 % nbits == 0`): entry `b * (8 / nbits) + j` is the weight
+    * of the j-th value packed in byte `b`, in [[unpackBuckets]]' bit
+    * order. Built once per instance (transient: rebuilt after
+    * deserialization); null for other widths, which decode bit by bit. */
+  @transient private lazy val byteWeights: Array[Float] =
+    if (8 % nbits != 0) null
+    else {
+      val per = 8 / nbits
+      val table = new Array[Float](256 * per)
+      var b = 0
+      while (b < 256) {
+        var j = 0
+        while (j < per) {
+          var bucket = 0
+          var k = 0
+          while (k < nbits) {
+            bucket |= ((b >> (7 - (j * nbits + k))) & 1) << k
+            k += 1
+          }
+          table(b * per + j) = bucketWeights(bucket)
+          j += 1
+        }
+        b += 1
+      }
+      table
+    }
+
   /** Decompress one token: centroid + bucket weight per dim, then L2
     * normalize (norm floored at 1e-12, codec.rs:463-468). */
-  def decompress(packed: Array[Byte], centroid: Array[Float]): Array[Float] = {
-    val dim = centroid.length
-    val buckets = unpackBuckets(packed, dim)
+  def decompress(packed: Array[Byte], centroid: Array[Float]): Array[Float] =
+    decompress(packed, centroid, 0, centroid.length)
+
+  /** [[decompress]] against the `dim` centroid values at `off` of
+    * `centroids` (a row of a flattened codebook, read in place). Widths
+    * that tile a byte look each packed byte up in [[byteWeights]]; the
+    * float operations and their order are those of the bit loop, so the
+    * output is bit-identical either way. */
+  def decompress(packed: Array[Byte], centroids: Array[Float], off: Int, dim: Int): Array[Float] = {
     val out = new Array[Float](dim)
-    var i = 0
     var sumSq = 0.0f
-    while (i < dim) {
-      val v = centroid(i) + bucketWeights(buckets(i))
-      out(i) = v
-      sumSq += v * v
-      i += 1
+    var i = 0
+    val table = byteWeights
+    if (table != null) {
+      val per = 8 / nbits
+      var byteIdx = 0
+      while (i < dim) {
+        val base = (packed(byteIdx) & 0xff) * per
+        var j = 0
+        while (j < per && i < dim) {
+          val v = centroids(off + i) + table(base + j)
+          out(i) = v
+          sumSq += v * v
+          i += 1
+          j += 1
+        }
+        byteIdx += 1
+      }
+    } else {
+      val buckets = unpackBuckets(packed, dim)
+      while (i < dim) {
+        val v = centroids(off + i) + bucketWeights(buckets(i))
+        out(i) = v
+        sumSq += v * v
+        i += 1
+      }
     }
     val norm = math.max(math.sqrt(sumSq.toDouble).toFloat, 1e-12f)
     i = 0

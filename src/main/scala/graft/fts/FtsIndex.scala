@@ -21,8 +21,8 @@ import graft.util.Fs
   * is an anti-join, update_rows re-tokenizes only the changed rows.
   *
   * A handle follows the artifact: every access takes a stamp of the
-  * artifact's OWN files ([[FtsIndex.stamp]]: every file under `<path>`,
-  * one directory listing) and re-derives the postings and doclens
+  * artifact's OWN files ([[Fs.settledFingerprint]]: every file under
+  * `<path>`, one directory listing) and re-derives the postings and doclens
   * frames, the tokenizer and the resident image whenever the stamp
   * moved. Any append, delete mapping, update or rebuild — through this
   * handle or another — moves it, so a held handle never serves
@@ -59,7 +59,7 @@ final class FtsIndex(
   /** The version of the artifact's current files: reused while the
     * stamp holds, re-derived after any write. */
   private def current: FtsIndex.Version = {
-    val s = FtsIndex.stamp(path)
+    val s = Fs.settledFingerprint(path)
     val v = observed
     if (v != null && v.stamp == s) v
     else {
@@ -89,6 +89,18 @@ final class FtsIndex(
       doclensOpt = Some(v.doclens)))
   }
 
+  /** The driver bytes this handle's image charges against `budgetBytes`:
+    * its estimate when the image is admitted (the estimate plus
+    * `coResidentBytes` fits), else 0 — what a sibling image admitted
+    * after it (the metadata image of [[graft.GraftIndex]]) counts. Reads
+    * footers, never the postings, and builds no image. */
+  private[graft] def residentBytes(budgetBytes: Long): Long =
+    if (budgetBytes <= 0) 0L
+    else {
+      val est = current.estimate
+      if (est + coResidentBytes(budgetBytes) <= budgetBytes) est else 0L
+    }
+
   /** The resident image of the artifact's current files, or None when
     * `budgetBytes` is 0 or the estimate plus `coResidentBytes` does not
     * fit it. */
@@ -106,13 +118,13 @@ final class FtsIndex(
     // None: the build raced a write
     val outcome: Option[Option[FtsIndex.Bm25Image]] =
       try {
-        if (v.estimate + coResidentBytes(budgetBytes) <= budgetBytes) v.image.map(Some(_))
+        if (v.estimate + coResidentBytes(budgetBytes) <= budgetBytes) v.image.get.map(Some(_))
         else {
-          v.release()
+          v.image.release()
           Some(None)
         }
       } catch {
-        case _: java.io.IOException if FtsIndex.stamp(path) != v.stamp => None
+        case _: java.io.IOException if Fs.settledFingerprint(path) != v.stamp => None
       }
     outcome match {
       case Some(img) => img
@@ -134,30 +146,15 @@ object FtsIndex {
 
   /** One observed version of the artifact at `path`: its frames,
     * tokenizer, footprint estimate and — once a search admits it — its
-    * resident image, all keyed on one [[stamp]]. */
+    * resident image, all keyed on one [[Fs.settledFingerprint]]. */
   private final class Version(spark: SparkSession, path: String, val stamp: String) {
     lazy val postings: DataFrame = spark.read.parquet(s"$path/postings")
     lazy val doclens: DataFrame = spark.read.parquet(s"$path/doclens")
     lazy val tokenizer: String = readTokenizer(path)
     lazy val estimate: Long = residentBytesEstimate(path)
 
-    @volatile private var img: Bm25Image = _
-
-    /** This version's image, collected on first use from fresh reads;
-      * None when a write landed during the collect (the stamp moved, or
-      * a file was swapped away under it), so an image is exactly the
-      * content of the stamp it is keyed on. */
-    def image: Option[Bm25Image] = synchronized {
-      if (img == null) {
-        val built =
-          try Some(Bm25Image.collect(spark, path))
-          catch { case _: Exception if FtsIndex.stamp(path) != stamp => None }
-        built.filter(_ => FtsIndex.stamp(path) == stamp).foreach(img = _)
-      }
-      Option(img)
-    }
-
-    def release(): Unit = img = null
+    /** Collected on first use ([[graft.util.StampedImage]]). */
+    val image = new graft.util.StampedImage(path, stamp, () => Bm25Image.collect(spark, path))
   }
 
   /** Driver bytes per subset id held while a resident search applies a
@@ -174,7 +171,13 @@ object FtsIndex {
     val spark = subset.sparkSession
     import spark.implicits._
     val ids = subset.select(col("doc_id").cast("long"))
-    if (ids.count() * SubsetBytesPerId > budgetBytes) None
+    // a subset the optimizer folds into a local relation (a filter over
+    // a driver-resident image) is counted from its rows: no job
+    val n = ids.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.length.toLong
+      case _ => ids.count()
+    }
+    if (n * SubsetBytesPerId > budgetBytes) None
     else Some(ids.as[Long].collect())
   }
 
@@ -198,23 +201,6 @@ object FtsIndex {
   def residentBytesEstimate(path: String): Long =
     Fs.parquetRows(s"$path/postings") * ResidentBytesPerPosting +
       Fs.parquetRows(s"$path/doclens") * ResidentBytesPerDoc
-
-  /** Stamp of the artifact's own files ([[Fs.fingerprint]] of `path`:
-    * names, lengths and mtimes, no data read). Every write names new
-    * part files, so any append, delete mapping, update or rebuild
-    * changes it. A listing that races a directory swap is retried. */
-  def stamp(path: String): String = {
-    @annotation.tailrec
-    def go(attempt: Int): String =
-      (try Some(Fs.fingerprint(path))
-       catch { case _: java.io.FileNotFoundException if attempt < BuildAttempts => None }) match {
-        case Some(fp) => fp
-        case None =>
-          Thread.sleep(10L * attempt)
-          go(attempt + 1)
-      }
-    go(1)
-  }
 
   private[fts] def readTokenizer(path: String): String =
     graft.index.MultiVectorIndex.jsonMapper.readTree(

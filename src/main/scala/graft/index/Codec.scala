@@ -56,13 +56,8 @@ final case class Codec(
   }
 
   /** B7 decompression: centroid + bucket weights, L2-normalized. */
-  def decode(code: Int, packed: Array[Byte]): Array[Float] = {
-    val cOff = code * dim
-    val cent = new Array[Float](dim)
-    var i = 0
-    while (i < dim) { cent(i) = centroids(cOff + i); i += 1 }
-    quantizer.decompress(packed, cent)
-  }
+  def decode(code: Int, packed: Array[Byte]): Array[Float] =
+    quantizer.decompress(packed, centroids, code * dim, dim)
 
   /** Squared L2 distance to the nearest centroid (U2 outlier detection,
     * update.rs:457-488). */

@@ -207,11 +207,20 @@ object Where {
   /** Session UDF backing the REGEXP operator. */
   val UdfName = "graft_regexp"
 
-  /** Register the REGEXP kernel in the session (idempotent; every
-    * entry point that may evaluate a rendered condition calls this). */
-  def ensureUdfs(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.udf.register(UdfName,
-      (s: String, p: String) => SafeRegex.matches(s, p))
+  /** Register the REGEXP kernel in the session unless its function
+    * registry already holds it (every entry point that may evaluate a
+    * rendered condition calls this, so re-registering would write the
+    * registry and log a replacement warning per request). The check is
+    * per session: a `newSession()` starts without the function and
+    * registers it on its first call. */
+  def ensureUdfs(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(UdfName)
+    if (!registry.functionExists(id)) registry.synchronized {
+      if (!registry.functionExists(id))
+        spark.udf.register(UdfName, (s: String, p: String) => SafeRegex.matches(s, p))
+    }
+  }
 
   private def renderParam(p: Param): String = p match {
     case SStr(v)    => "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -49,18 +49,23 @@ final case class SearchParams(
       * with the footprint now counted honestly (~10% of the default
       * 8 GB driver heap). Above the budget — the 100 TB regime — the
       * distributed funnel is the only correct plan and runs unchanged.
-      * The same budget bounds THREE resident images: the local packed
+      * The same budget bounds FOUR resident images: the local packed
       * index image above, the sharded slices below (sharded dispatch is
       * gated on this budget too, since its slices are the same
-      * collected-image idea spread across executors), and the FTS
+      * collected-image idea spread across executors), the FTS
       * artifact's BM25 image ([[graft.fts.FtsIndex]]), which also gates
-      * driver-side keyword/hybrid fusion in [[HybridSearch]]. The two
-      * DRIVER images share it: a [[graft.GraftIndex]]'s FTS image is
-      * admitted only when [[graft.fts.FtsIndex.residentBytesEstimate]]
-      * plus the local image's residency ([[Searcher.residentBytes]],
-      * charged whenever that image fits) fits the budget, so their
-      * combined estimate never exceeds it. 0 disables all three; to
-      * disable only the sharded path set shardedScoreBudgetBytes to 0. */
+      * driver-side keyword/hybrid fusion in [[HybridSearch]], and a
+      * [[graft.GraftIndex]]'s metadata image, which filtered searches
+      * evaluate their condition on. The three DRIVER images share it,
+      * admitted in a fixed order: the semantic image when its residency
+      * ([[Searcher.residentBytes]]) fits; the FTS image when
+      * [[graft.fts.FtsIndex.residentBytesEstimate]] plus the semantic
+      * charge fits; the metadata image when
+      * [[graft.GraftIndex.metadataBytesEstimate]] plus both charges fits
+      * (each image is charged whenever it is admitted), so their
+      * combined estimate never exceeds the budget. 0 disables all four;
+      * to disable only the sharded path set shardedScoreBudgetBytes
+      * to 0. */
     localIndexBudgetBytes: Long = 768L << 20,
     /** Sharded serving fast path: when the packed image EXCEEDS the
       * local budget (too big to collect to one node) but the batch is
@@ -1189,8 +1194,8 @@ object Searcher {
 
   /** Estimated driver residency of `index`'s local image (packed
     * estimate × [[LocalResidencyFactor]]) when `budgetBytes` admits it,
-    * else 0 — what a sibling resident image (the FTS image of
-    * [[graft.GraftIndex]]) charges against the same budget. */
+    * else 0 — what the sibling resident images of [[graft.GraftIndex]]
+    * (FTS and metadata) charge against the same budget. */
   def residentBytes(index: MultiVectorIndex, budgetBytes: Long): Long = {
     val r = index.packedBytesEstimate * LocalResidencyFactor
     if (budgetBytes > 0 && r <= budgetBytes) r else 0L

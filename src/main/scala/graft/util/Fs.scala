@@ -112,18 +112,27 @@ object Fs {
   /** Row count of the parquet table at `path` from its file footers —
     * driver-side metadata reads, no Spark job, no data pages (0 if
     * absent). Skips writer side-markers like [[countDataFiles]]. */
-  def parquetRows(path: String): Long = {
+  def parquetRows(path: String): Long = parquetTotals(path)._1
+
+  /** (rows, uncompressed bytes) of the parquet table at `path`, summed
+    * over its file footers (the row groups' total uncompressed column
+    * sizes): driver-side metadata reads like [[parquetRows]], (0, 0) if
+    * absent. */
+  def parquetTotals(path: String): (Long, Long) = {
     val (f, p) = fs(path)
-    if (!f.exists(p)) return 0L
+    if (!f.exists(p)) return (0L, 0L)
     filesUnder(f, p).filter { st =>
       val name = st.getPath.getName
       !name.startsWith("_") && !name.startsWith(".")
     }.map { st =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, f.getConf))
-      try r.getRecordCount
-      finally r.close()
-    }.sum
+      try {
+        var bytes = 0L
+        r.getFooter.getBlocks.forEach(b => bytes += b.getTotalByteSize)
+        (r.getRecordCount, bytes)
+      } finally r.close()
+    }.foldLeft((0L, 0L)) { case ((n, b), (n1, b1)) => (n + n1, b + b1) }
   }
 
   /** Every file under `p`, recursively, by `listStatus`: unlike
@@ -244,6 +253,23 @@ object Fs {
     val md = java.security.MessageDigest.getInstance("MD5")
     entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** [[fingerprint]] of `path` as a version stamp of an artifact that
+    * writers replace under a reader: every write names new part files,
+    * so any append, rewrite or delete mapping changes it, and a listing
+    * that races a directory swap (a file vanishing mid-walk) is retried. */
+  def settledFingerprint(path: String): String = {
+    @annotation.tailrec
+    def go(attempt: Int): String =
+      (try Some(fingerprint(path))
+       catch { case _: java.io.FileNotFoundException if attempt < 5 => None }) match {
+        case Some(fp) => fp
+        case None =>
+          Thread.sleep(10L * attempt)
+          go(attempt + 1)
+      }
+    go(1)
   }
 
   /** True when `cacheDir` was stamped (by `stampCache`) with exactly

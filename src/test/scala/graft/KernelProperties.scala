@@ -70,6 +70,50 @@ object KernelProperties extends Properties("kernels") {
         Prop(expect.forall(b => b >= 0 && b < n))
     }
 
+  /** The bit-at-a-time S7 decode the byte lookup replaced: bucket bits
+    * read one by one from the MSB-first stream, centroid + weight per
+    * dim, L2-normalized with the 1e-12 floor. */
+  private def bitLoopDecode(qz: Quantizer, packed: Array[Byte], centroid: Array[Float]): Array[Float] = {
+    val out = new Array[Float](centroid.length)
+    var sumSq = 0.0f
+    var bitIdx = 0
+    for (i <- centroid.indices) {
+      var bucket = 0
+      for (b <- 0 until qz.nbits) {
+        bucket |= ((packed(bitIdx / 8) >> (7 - bitIdx % 8)) & 1) << b
+        bitIdx += 1
+      }
+      val v = centroid(i) + qz.bucketWeights(bucket)
+      out(i) = v
+      sumSq += v * v
+    }
+    val norm = math.max(math.sqrt(sumSq.toDouble).toFloat, 1e-12f)
+    out.map(_ / norm)
+  }
+
+  property("S7 decode (byte lookup and bit loop) is bit-identical to the bit-loop reference") =
+    forAll(Gen.oneOf(1, 2, 3, 4, 8), Gen.oneOf(8, 16, 24, 64, 128), Gen.long) { (nbits, dim, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val n = 1 << nbits
+      val cutoffs = Array.tabulate(n - 1)(i => -1.0f + 2.0f * (i + 1) / n)
+      // bucket 0 weighs exactly 0, so an all-zero packed token over the
+      // zero centroid decodes to the zero vector through the norm floor
+      val weights = Array.tabulate(n)(i => if (i == 0) 0.0f else rnd.nextFloat() * 2 - 1)
+      val qz = new Quantizer(nbits, cutoffs, weights)
+      val k = 3
+      val cents = Array.tabulate(k * dim)(i => if (i < dim) 0.0f else rnd.nextFloat() * 2 - 1)
+      val codec = graft.index.Codec(dim, cents, qz, new Array[Float](dim), 0.0f)
+      val tokens = (new Array[Byte](qz.packedDim(dim)), 0) +:
+        Seq.fill(6)((Array.fill(qz.packedDim(dim))(rnd.nextInt(256).toByte), rnd.nextInt(k)))
+      def bits(v: Array[Float]) = v.map(java.lang.Float.floatToRawIntBits).toSeq
+      Prop.all(tokens.map { case (packed, code) =>
+        val row = java.util.Arrays.copyOfRange(cents, code * dim, (code + 1) * dim)
+        val expect = bits(bitLoopDecode(qz, packed, row))
+        Prop(bits(codec.decode(code, packed)) == expect) &&
+          Prop(bits(qz.decompress(packed, row)) == expect)
+      }: _*)
+    }
+
   private def nanMatGen(dim: Int, rows: Gen[Int]): Gen[Array[Array[Float]]] =
     rows.flatMap(t => Gen.listOfN(t,
       Gen.listOfN(dim, Gen.frequency(15 -> floatGen, 1 -> Gen.const(Float.NaN)))

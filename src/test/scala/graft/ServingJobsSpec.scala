@@ -7,11 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.search.{HybridParams, SearchParams}
+import graft.search.{HybridParams, SearchParams, Searcher}
 
-/** Job-count guard for the serving paths: a warm keyword search and a
-  * warm hybrid search on a small index run NO Spark job (resident BM25
-  * image, resident semantic image, driver-side fusion), and a zero
+/** Job-count guard for the serving paths: a warm keyword, hybrid or
+  * filtered search on a small index runs NO Spark job (resident BM25,
+  * semantic and metadata images, driver-side fusion), and a zero
   * resident budget keeps the distributed plan reachable. */
 class ServingJobsSpec extends AnyFunSuite {
 
@@ -89,6 +89,57 @@ class ServingJobsSpec extends AnyFunSuite {
       def key(rs: Array[org.apache.spark.sql.Row]) =
         rs.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("rank"))).sortBy(_._2).toSeq
       assert(key(viaPlan) === key(resident))
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+    gi.drop()
+  }
+
+  test("warm filtered requests run 0 Spark jobs; budget 0 and over-budget metadata read parquet") {
+    IndexFixtures.requireTestdata()
+    import spark.implicits._
+    import graft.meta.Where.{SLong, SStr}
+    val path = "/tmp/graft_serving_jobs_filtered"
+    graft.util.Fs.deleteRecursively(path)
+    val docs = IndexFixtures.docs(spark).filter(col("doc_id") < 30)
+    val meta = (0L until 30L).map(i =>
+      (i, s"""{"title": "doc $i", "group": ${i % 3}}""")).toDF("order", "json")
+    val gi = GraftIndex.create(spark, path, docs, Some(meta))
+    val q = docs.filter(col("doc_id") === 4L)
+      .select(col("doc_id").as("query_id"), col("embeddings"))
+      .as[(Long, Array[Array[Float]])].collect().toSeq.toDF("query_id", "embeddings")
+    // both conditions select the query's own doc 4, so neither result is empty
+    val conds = Seq("group = ?" -> Seq(SLong(1L)), "title REGEXP ?" -> Seq(SStr("^doc [1-4]$")))
+    def key(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("rank"))).sortBy(_._2).toSeq
+    def filtered(c: String, ps: Seq[graft.meta.Where.Param], p: SearchParams) =
+      gi.searchFiltered(q, c, ps, p).collect()
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      // warm: the first call collects the metadata image
+      filtered("group = ?", Seq(SLong(1L)), SearchParams())
+      gi.hybrid(q, "doc", cond = Some(conds.head)).collect()
+      for ((c, ps) <- conds) {
+        var resident: Array[org.apache.spark.sql.Row] = null
+        assert(jobsOf { resident = filtered(c, ps, SearchParams()) } === 0,
+          s"warm filtered search ($c) launched Spark jobs")
+        assert(resident.nonEmpty)
+        assert(jobsOf(assert(gi.hybrid(q, "doc", cond = Some((c, ps))).collect().nonEmpty)) === 0,
+          s"warm filtered hybrid search ($c) launched Spark jobs")
+        var viaPlan: Array[org.apache.spark.sql.Row] = null
+        assert(jobsOf { viaPlan = filtered(c, ps, SearchParams(localIndexBudgetBytes = 0L)) } > 0,
+          "a zero budget must keep the parquet plan")
+        assert(key(viaPlan) === key(resident), c)
+      }
+      // a metadata image one byte over what the semantic and FTS images
+      // leave: the semantic image stays resident, the filter reads parquet
+      val over = Searcher.residentBytes(gi.index, Long.MaxValue) +
+        graft.fts.FtsIndex.residentBytesEstimate(s"$path/fts") +
+        GraftIndex.metadataBytesEstimate(s"$path/meta") - 1
+      assert(gi.residentMetadata(over).isEmpty)
+      var overBudget: Array[org.apache.spark.sql.Row] = null
+      assert(jobsOf { overBudget = filtered("group = ?", Seq(SLong(1L)),
+        SearchParams(localIndexBudgetBytes = over)) } > 0,
+        "over-budget metadata must take the parquet plan")
+      assert(key(overBudget) === key(filtered("group = ?", Seq(SLong(1L)), SearchParams())))
     } finally spark.sparkContext.removeSparkListener(Jobs)
     gi.drop()
   }
