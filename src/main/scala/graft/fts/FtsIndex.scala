@@ -3,7 +3,7 @@ package graft.fts
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.Fs
+import graft.util.{Fs, Plan}
 
 /** Persisted full-text index — the F3 lifecycle the round-1 engine
   * lacked (reference text_search.rs: index :463-502, delete :503-578,
@@ -157,27 +157,16 @@ object FtsIndex {
     val image = new graft.util.StampedImage(path, stamp, () => Bm25Image.collect(spark, path))
   }
 
-  /** Driver bytes per subset id held while a resident search applies a
-    * subset: ~64 B per boxed id, as [[graft.search.Searcher]]'s sharded
-    * dispatch counts them. */
-  private val SubsetBytesPerId = 64L
-
   /** The ids of `subset(doc_id)`, collected to the driver only when its
-    * count (taken once, before the collect) × [[SubsetBytesPerId]] fits
-    * `budgetBytes`; None sends the caller to its distributed plan, whose
-    * subset joins are size-planned — a broad filter must never be
-    * driver-collected. */
+    * count (taken once, before the collect, by [[Plan.countIds]]) ×
+    * [[Plan.SubsetBytesPerId]] fits `budgetBytes`; None sends the caller
+    * to its distributed plan, whose subset joins are size-planned — a
+    * broad filter must never be driver-collected. */
   private[graft] def boundedIds(subset: DataFrame, budgetBytes: Long): Option[Array[Long]] = {
     val spark = subset.sparkSession
     import spark.implicits._
     val ids = subset.select(col("doc_id").cast("long"))
-    // a subset the optimizer folds into a local relation (a filter over
-    // a driver-resident image) is counted from its rows: no job
-    val n = ids.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.length.toLong
-      case _ => ids.count()
-    }
-    if (n * SubsetBytesPerId > budgetBytes) None
+    if (Plan.countIds(ids) * Plan.SubsetBytesPerId > budgetBytes) None
     else Some(ids.as[Long].collect())
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.core.MaxSim
 import graft.index.MultiVectorIndex
+import graft.util.Plan
 
 /** Search parameters — defaults match the reference
   * (next-plaid/src/search.rs:27-69). */
@@ -33,22 +34,22 @@ final case class SearchParams(
     denseScoreBudgetBytes: Long = 1L << 30,
     /** Serving fast path: when the packed index's estimated collected
       * footprint ([[graft.index.MultiVectorIndex.packedBytesEstimate]])
-      * fits this budget, the whole S1–S8 funnel runs as ONE stage — the
-      * index is collected once per Searcher and broadcast (the build
-      * side of a broadcast hash join, same dispatch idea), and each
-      * query executes the funnel locally in its task. Result-identical
-      * to the distributed funnel (same probe/score/cut/rerank kernels
-      * and tie-breaks); what changes is that a warm batch pays one
-      * stage instead of ~7 shuffle barriers. The budget bounds the fast
-      * path's estimated DRIVER RESIDENCY — dispatch compares it against
-      * [[Searcher.LocalResidencyFactor]] (3) × the packed-image
-      * estimate, since a collected image transiently costs ~3× its
-      * packed size (the collect's intermediate rows, the driver-held
-      * image, and the broadcast block). The 768 MB default admits the
-      * same ≤256 MB images as the previous 256 MB image-size budget,
-      * with the footprint now counted honestly (~10% of the default
-      * 8 GB driver heap). Above the budget — the 100 TB regime — the
-      * distributed funnel is the only correct plan and runs unchanged.
+      * fits this budget, the index is collected once per Searcher into a
+      * driver-held image, and every batch of up to
+      * [[Searcher.LocalMaxBatch]] queries runs the S1–S8 funnel
+      * in-process on the driver with no Spark job: phase A (S1–S6)
+      * parallel over the queries, or over the tokens of a single query,
+      * then phase B (the S7 rerank) parallel over the surviving docs.
+      * Result-identical to the distributed funnel (same probe/score/cut/
+      * rerank kernels and tie-breaks); what changes is that a warm batch
+      * pays no job instead of ~7 shuffle barriers. The budget bounds the
+      * fast path's estimated DRIVER RESIDENCY — dispatch compares it
+      * against [[Searcher.LocalResidencyFactor]] (3) × the packed-image
+      * estimate, which overstates the held image plus the transient
+      * collect rows (see there). The 768 MB default admits ≤256 MB
+      * images (~10% of the default 8 GB driver heap). Above the budget —
+      * the 100 TB regime — the distributed funnel is the only correct
+      * plan and runs unchanged.
       * The same budget bounds FOUR resident images: the local packed
       * index image above, the sharded slices below (sharded dispatch is
       * gated on this budget too, since its slices are the same
@@ -139,40 +140,49 @@ final class Searcher(index: MultiVectorIndex) {
       params: SearchParams = SearchParams(),
       subset: Option[DataFrame] = None
   ): DataFrame = {
-    if (index.manifest("num_partitions").toInt > params.sparseCentroidThreshold)
-      return searchSparse(queries, params, subset)
-    val k = index.codec.numCentroids
+    val queryMap = collectQueries(queries)
+    val k = index.manifest("num_partitions").toInt
 
-    val queryMap: Map[Long, Array[Array[Float]]] = queries
-      .select("query_id", "embeddings")
-      .as[(Long, Array[Array[Float]])]
-      .collect()
-      .toMap
-    // Fast-path dispatch is also bounded in BATCH size: its phase-A/B
-    // intermediates collect queries × n_full/4 rows to the driver, a
-    // bound that holds for serving batches but not for mega-batches —
-    // those take the dense funnel's chunked flow below. The budget
-    // bounds estimated driver RESIDENCY (~3x the packed image: the
-    // transient collect rows, the driver copy, and the broadcast
-    // block), not the raw image size — see localIndexBudgetBytes.
-    if (Searcher.servesLocally(index, params, queryMap.size))
-      return searchLocal(queryMap, params, subset)
+    // Serving dispatch: the driver-held image answers every batch it
+    // admits (see localIndexBudgetBytes). Its subset ids are collected —
+    // bounded by the corpus, which fits the budget by dispatch — and the
+    // subset's count and eligible codes are read from them and the image.
+    if (Searcher.servesLocally(index, params, queryMap.size)) {
+      val img = localImage
+      val ids = subset.map(_.select("doc_id").as[Long].collect())
+      val (nProbe, eligible) = probeScope(params, k, ids.map(_.length.toLong)) { mask =>
+        ids.foreach(_.foreach(d => img.docCodes.get(d).foreach(_.foreach(mask(_) = true))))
+      }
+      return searchResident(Left(img), queryMap, params, nProbe, eligible, ids)
+    }
 
     // Subset counted ONCE (drives sharded dispatch, probe scaling, and
     // every subset join's plan — a broad filter selecting 10⁹ ids must
-    // never be force-broadcast OR driver-collected).
-    val subsetCounted: Option[(DataFrame, Long)] = subset.map { s =>
+    // never be force-broadcast OR driver-collected). The eligible codes
+    // come from the doc_codes artifact (one size-planned semi-join),
+    // never from a driver-collected corpus.
+    val counted: Option[(DataFrame, Long)] = subset.map { s =>
       val ids = s.select("doc_id")
-      (ids, ids.count())
+      (ids, Plan.countIds(ids))
     }
+    val (nProbe, eligible) = probeScope(params, k, counted.map(_._2)) { mask =>
+      counted.foreach { case (ids, n) =>
+        docCodes
+          .join(Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
+          .select(explode(col("codes")).as("code")).distinct()
+          .as[Int].collect().foreach(mask(_) = true)
+      }
+    }
+    if (k > params.sparseCentroidThreshold)
+      return searchSparse(queryMap, params, counted, nProbe, eligible)
 
     // Sharded serving fast path: the image is too big to collect to ONE
     // node (it failed the dispatch above) but the batch is serving-
     // shaped — serve from doc-sliced resident images instead of paying
     // the distributed funnel's shuffle barriers. Bounded by the S1
     // broadcast footprint (batch × tokens × K × 4B) AND — when a subset
-    // filter is present — by its driver/broadcast residency (~64 B per
-    // boxed id in the per-task HashSet): the sharded path exists
+    // filter is present — by its driver/broadcast residency (per-id
+    // bytes of the HashSet the slices receive): the sharded path exists
     // because the CORPUS doesn't fit one node, so a corpus-sized subset
     // must route to the distributed funnel, whose subset joins are
     // size-planned.
@@ -180,28 +190,11 @@ final class Searcher(index: MultiVectorIndex) {
         queryMap.size <= Searcher.LocalMaxBatch &&
         queryMap.valuesIterator.map(_.length.toLong).sum * k * 4L <=
           params.shardedScoreBudgetBytes &&
-        subsetCounted.forall(_._2 * 64L <= params.localIndexBudgetBytes))
-      return searchSharded(queryMap, params, subsetCounted)
-
-    // S4 pre-computation: adaptive probe scaling (search.rs:370-382) —
-    // with a subset filter, probe more centroids so recall holds — and
-    // the eligible-centroid restriction (search.rs:350-364): only
-    // centroids that actually contain subset docs compete for the probe
-    // budget (derived from the doc_codes artifact, one small semi-join).
-    val nProbe = subsetCounted match {
-      case Some((_, n)) =>
-        val scaled = params.nIvfProbe.toLong * math.max(
-          index.numDocuments / math.max(n, 1L), 1L)
-        math.min(scaled, k.toLong).toInt
-      case None => params.nIvfProbe
-    }
-    val eligible: Option[Array[Boolean]] = subsetCounted.map { case (ids, n) =>
-      val mask = new Array[Boolean](k)
-      docCodes
-        .join(graft.util.Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
-        .select(explode(col("codes")).as("code")).distinct()
-        .collect().foreach(r => mask(r.getInt(0)) = true)
-      mask
+        counted.forall(_._2 * Plan.SubsetBytesPerId <= params.localIndexBudgetBytes)) {
+      val slices = if (params.shardedSlices > 0) params.shardedSlices
+        else math.max(2, spark.sparkContext.defaultParallelism)
+      return searchResident(Right(shardedImage(slices)), queryMap, params,
+        nProbe, eligible, counted.map(_._1.as[Long].collect()))
     }
 
     // Memory bounding (search.rs:521-640, batch_size = 2000): the dense
@@ -231,7 +224,7 @@ final class Searcher(index: MultiVectorIndex) {
     }
 
     if (chunks.size <= 1)
-      searchDenseChunk(queryMap, params, subsetCounted, eligible, nProbe)._1
+      searchDenseChunk(queryMap, params, counted, nProbe, eligible)._1
     else {
       // Chunked run executes eagerly, one chunk at a time: each chunk's
       // result is tiny (≤ chunkQueries × topK rows) so it collects to the
@@ -242,7 +235,7 @@ final class Searcher(index: MultiVectorIndex) {
       val allRows = chunks.flatMap { cq =>
         val cmap: Map[Long, Array[Array[Float]]] =
           cq.iterator.map(q => q -> queryMap(q)).toMap
-        val (df, bcs) = searchDenseChunk(cmap, params, subsetCounted, eligible, nProbe)
+        val (df, bcs) = searchDenseChunk(cmap, params, counted, nProbe, eligible)
         schema = df.schema
         val rows = df.collect()
         bcs.foreach(_.destroy())
@@ -253,15 +246,88 @@ final class Searcher(index: MultiVectorIndex) {
     }
   }
 
+  private def collectQueries(queries: DataFrame): Map[Long, Array[Array[Float]]] =
+    queries
+      .select("query_id", "embeddings")
+      .as[(Long, Array[Array[Float]])]
+      .collect()
+      .toMap
+
+  /** S4 pre-computation, shared by every funnel: adaptive probe scaling
+    * (search.rs:370-382) — with a subset of `n` ids, probe more
+    * centroids so recall holds — and the eligible-centroid restriction
+    * (search.rs:350-364): only centroids that actually contain subset
+    * docs compete for the probe budget. `markSubsetCodes` marks the
+    * subset docs' codes from wherever the caller keeps them; it runs
+    * only when there is a subset. Returns (nProbe, eligible mask). */
+  private def probeScope(params: SearchParams, k: Int, n: Option[Long])(
+      markSubsetCodes: Array[Boolean] => Unit): (Int, Option[Array[Boolean]]) = {
+    val nProbe = n.fold(params.nIvfProbe) { n =>
+      val scaled = params.nIvfProbe.toLong * math.max(
+        index.numDocuments / math.max(n, 1L), 1L)
+      math.min(scaled, k.toLong).toInt
+    }
+    val eligible = n.map { _ =>
+      val mask = new Array[Boolean](k)
+      markSubsetCodes(mask)
+      mask
+    }
+    (nProbe, eligible)
+  }
+
+  /** S3 + S4 of the distributed funnels: gather the probed IVF lists
+    * (`probed(query_id, code)`, join-hinted by the caller), dedup the
+    * candidates, restrict them to the subset (planned by its count) and
+    * drop deferred-delete tombstones (anti-join on the candidate set —
+    * O(tombstones), not O(corpus)). */
+  private def candidates(probed: DataFrame, counted: Option[(DataFrame, Long)]): DataFrame = {
+    val gathered = index.ivf
+      .join(probed, "code")
+      .select(col("query_id"), explode(col("doc_ids")).as("doc_id"))
+      .distinct()
+    val inSubset = counted.fold(gathered) { case (ids, n) =>
+      gathered.join(Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
+    }
+    index.tombstonesOpt.fold(inSubset)(tomb => inSubset.join(tomb, Seq("doc_id"), "left_anti"))
+  }
+
+  /** S6 funnel cut of the distributed funnels: per query, the top
+    * `nDecompress` candidates by approx score, doc ascending on ties
+    * (search.rs:460-469). */
+  private def cut(approx: DataFrame, nDecompress: Int): DataFrame =
+    approx
+      .withColumn("_r", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("approx_score").desc, col("doc_id").asc)))
+      .filter(col("_r") <= nDecompress)
+      .select("query_id", "doc_id")
+
+  /** S7 input of the distributed funnels: the tokens of each surviving
+    * doc with `qids`, the queries that kept it. Survivors are bounded by
+    * queries × n_full/4 rows — a driver-known bound, so the tokens join
+    * is planned from it: broadcast for typical batches (the tokens table
+    * never shuffles), shuffle join for mega-batches where the build side
+    * would not fit. */
+  private def survivorTokens(survivors: DataFrame, bound: Long): DataFrame =
+    index.tokens.join(Plan.broadcastIfBounded(
+      survivors.groupBy("doc_id").agg(collect_list("query_id").as("qids")), bound), "doc_id")
+
+  /** S8 of the distributed funnels: final per-query top-k, score desc,
+    * doc asc. */
+  private def finalTopK(exact: DataFrame, k: Int): DataFrame =
+    exact
+      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("score").desc, col("doc_id").asc)))
+      .filter(col("rank") <= k)
+
   /** One dense-funnel pass over a query chunk whose score matrices fit
     * the memory budget. Returns the (lazy) result plus the broadcasts it
     * created, so a chunked caller can destroy them between chunks. */
   private def searchDenseChunk(
       queryMap: Map[Long, Array[Array[Float]]],
       params: SearchParams,
-      subsetCounted: Option[(DataFrame, Long)],
-      eligible: Option[Array[Boolean]],
-      nProbe: Int
+      counted: Option[(DataFrame, Long)],
+      nProbe: Int,
+      eligible: Option[Array[Boolean]]
   ): (DataFrame, Seq[org.apache.spark.broadcast.Broadcast[_]]) = {
     val codec = index.codec
     val dim = codec.dim
@@ -285,13 +351,10 @@ final class Searcher(index: MultiVectorIndex) {
     // (4.3 GFLOPs ≈ 2 s, measured round 9). Large batches run as one
     // tiny distributed stage.
     val scoreMatrices: scala.collection.Map[Long, Array[Array[Float]]] =
-      if (qids.size <= 64) {
-        val arr = qids.toArray
-        val out = new Array[Array[Array[Float]]](arr.length)
-        java.util.stream.IntStream.range(0, arr.length).parallel()
-          .forEach(i => out(i) = scoreOne(queryMap(arr(i)), codec.centroids))
-        arr.zip(out).toMap
-      } else
+      if (qids.size <= 64)
+        qids.zip(Searcher.parMap(qids.toIndexedSeq)(q =>
+          scoreOne(queryMap(q), codec.centroids))).toMap
+      else
         spark.sparkContext
           .parallelize(qids, math.min(qids.size, 32).max(1))
           .map(qid => (qid, scoreOne(queriesBc.value(qid), codecBc.value.centroids)))
@@ -308,30 +371,13 @@ final class Searcher(index: MultiVectorIndex) {
         scoreMatrices(qid), nProbe, params.centroidScoreThreshold, eligible)
         .map(c => (qid, c))
     }
-    val probed: DataFrame = probedPairs.toDF("query_id", "code")
 
-    // S3: gather IVF lists, dedup candidates.
-    val candidates0 = index.ivf
-      .join(broadcast(probed), "code")
-      .select(col("query_id"), explode(col("doc_ids")).as("doc_id"))
-      .distinct()
-
-    // S4: subset restriction (planned by the size computed above).
-    val candidates1 = subsetCounted match {
-      case Some((ids, n)) =>
-        candidates0.join(graft.util.Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
-      case None => candidates0
-    }
-    // deferred-delete tombstones are invisible to search (anti-join on
-    // the candidate set — O(tombstones), not O(corpus))
-    val candidates = index.tombstonesOpt match {
-      case Some(tomb) => candidates1.join(tomb, Seq("doc_id"), "left_anti")
-      case None       => candidates1
-    }
+    // S3 + S4: gather IVF lists, dedup, subset and tombstone restriction
+    val cands = candidates(broadcast(probedPairs.toDF("query_id", "code")), counted)
 
     // S5: approximate (codes-only) MaxSim per candidate, reusing the
     // broadcast score matrices (no per-partition recompute).
-    val approx = candidates
+    val approx = cands
       .join(docCodes, "doc_id")
       .select("doc_id", "query_id", "codes")
       .as[(Long, Long, Array[Int])]
@@ -345,13 +391,8 @@ final class Searcher(index: MultiVectorIndex) {
 
     // S6: funnel cut — top n_full_scores by approx, then n_full/4 (>= topK)
     // go to decompression (search.rs:460-469).
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx_score").desc, col("doc_id").asc)
-    val nDecompress = math.max(params.nFullScores / 4, params.topK)
-    val survivors = approx
-      .withColumn("_r", row_number().over(wApprox))
-      .filter(col("_r") <= nDecompress)
-      .select("query_id", "doc_id")
+    val nDecompress = Searcher.nDecompress(params)
+    val survivors = cut(approx, nDecompress)
 
     // S7: exact MaxSim on decompressed survivors. Grouped by DOC, not by
     // (query, doc): with a dense rerank set (n_full/4 docs per query and
@@ -360,17 +401,8 @@ final class Searcher(index: MultiVectorIndex) {
     // QPS twin's shape, measured round 9) and shuffles its packed
     // residuals that many times. Each surviving doc is decoded ONCE and
     // scored against every query in its survivor list (queries come from
-    // the broadcast, so the fan-out adds no shuffled bytes). Survivors
-    // are bounded by queries × n_full/4 rows — a driver-known bound, so
-    // the tokens join is planned from it: broadcast for typical batches
-    // (the tokens table never shuffles), shuffle join for mega-batches
-    // where the build side would not fit. Double-precision scoring so
-    // the declared oracle queries hash-match DuckDB's arithmetic.
-    val survivorsBound = qids.size.toLong * nDecompress
-    val survivorsByDoc = survivors
-      .groupBy("doc_id").agg(collect_list("query_id").as("qids"))
-    val exact = index.tokens
-      .join(graft.util.Plan.broadcastIfBounded(survivorsByDoc, survivorsBound), "doc_id")
+    // the broadcast, so the fan-out adds no shuffled bytes).
+    val exact = survivorTokens(survivors, qids.size.toLong * nDecompress)
       .groupBy("doc_id")
       .agg(first(col("qids")).as("qids"),
         collect_list(struct(col("tok"), col("code"), col("residual"))).as("toks"))
@@ -392,12 +424,7 @@ final class Searcher(index: MultiVectorIndex) {
       .toDF("query_id", "doc_id", "score")
 
     // S8: final top-k.
-    val wFinal = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val result = exact
-      .withColumn("rank", row_number().over(wFinal))
-      .filter(col("rank") <= params.topK)
-    (result, Seq(queriesBc, codecBc, scoresBc))
+    (finalTopK(exact, params.topK), Seq(queriesBc, codecBc, scoresBc))
   }
 
   /** The sparse/batched funnel for large centroid counts
@@ -417,47 +444,21 @@ final class Searcher(index: MultiVectorIndex) {
     *    elementwise-max aggregation per (query, doc).
     *  - S7: survivors' tokens decode against centroid rows fetched by
     *    join, not a broadcast codebook.
+    *
+    * S3/S4, S6 and S8 are the dense path's own steps.
     */
   private def searchSparse(
-      queries: DataFrame,
+      queryMap: Map[Long, Array[Array[Float]]],
       params: SearchParams,
-      subset: Option[DataFrame]
+      counted: Option[(DataFrame, Long)],
+      nProbe: Int,
+      eligible: Option[Array[Boolean]]
   ): DataFrame = {
-    import spark.implicits._
     val dim = index.dim
-    val k = index.manifest("num_partitions").toInt
     val (quantizer, _, _) = MultiVectorIndex.loadQuantizerMeta(index.path)
     val quantBc = spark.sparkContext.broadcast(quantizer)
-
-    val queryMap: Map[Long, Array[Array[Float]]] = queries
-      .select("query_id", "embeddings")
-      .as[(Long, Array[Array[Float]])]
-      .collect()
-      .toMap
     val queriesBc = spark.sparkContext.broadcast(queryMap)
-    val qids = queryMap.keys.toSeq.sorted
     val maxTokens = queryMap.values.map(_.length).foldLeft(1)(math.max)
-
-    // S4 pre-computation: identical to the dense path
-    val subsetCounted: Option[(DataFrame, Long)] = subset.map { s =>
-      val ids = s.select("doc_id")
-      (ids, ids.count())
-    }
-    val nProbe = subsetCounted match {
-      case Some((_, n)) =>
-        val scaled = params.nIvfProbe.toLong * math.max(
-          index.numDocuments / math.max(n, 1L), 1L)
-        math.min(scaled, k.toLong).toInt
-      case None => params.nIvfProbe
-    }
-    val eligible: Option[Array[Boolean]] = subsetCounted.map { case (ids, n) =>
-      val mask = new Array[Boolean](k)
-      docCodes
-        .join(graft.util.Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
-        .select(explode(col("codes")).as("code")).distinct()
-        .collect().foreach(r => mask(r.getInt(0)) = true)
-      mask
-    }
 
     val centDf = spark.read.parquet(s"${index.path}/codec").select("code", "vec")
 
@@ -465,22 +466,9 @@ final class Searcher(index: MultiVectorIndex) {
     val probed = Searcher.sparseProbe(
       spark, centDf, queryMap, dim, nProbe, params.centroidScoreThreshold, eligible)
 
-    // S3: gather IVF lists, dedup candidates; probed is bounded by
-    // queries × tokens × nProbe distinct codes
-    val probedBound = qids.size.toLong * maxTokens * nProbe
-    val candidates0 = index.ivf
-      .join(graft.util.Plan.broadcastIfBounded(probed, probedBound), "code")
-      .select(col("query_id"), explode(col("doc_ids")).as("doc_id"))
-      .distinct()
-    val candidates1 = subsetCounted match {
-      case Some((ids, n)) =>
-        candidates0.join(graft.util.Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
-      case None => candidates0
-    }
-    val candidates = index.tombstonesOpt match {
-      case Some(tomb) => candidates1.join(tomb, Seq("doc_id"), "left_anti")
-      case None       => candidates1
-    }
+    // S3 + S4; probed is bounded by queries × tokens × nProbe distinct codes
+    val probedBound = queryMap.size.toLong * maxTokens * nProbe
+    val cands = candidates(Plan.broadcastIfBounded(probed, probedBound), counted)
 
     // S5 sparse approximate scoring (search.rs:256-302): the candidate
     // docs' distinct-code union joins the centroid table once for
@@ -488,7 +476,7 @@ final class Searcher(index: MultiVectorIndex) {
     // elementwise NaN-safe max then a token-order sum — arithmetic
     // identical to MaxSim.approxScore over a dense matrix.
     val dimLocal = dim
-    val candCodes = candidates
+    val candCodes = cands
       .join(docCodes, "doc_id")
       .select(col("query_id"), col("doc_id"),
         explode(array_distinct(col("codes"))).as("code"))
@@ -533,13 +521,8 @@ final class Searcher(index: MultiVectorIndex) {
         col("approx_score"))
 
     // S6: funnel cut — same as dense
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx_score").desc, col("doc_id").asc)
-    val nDecompress = math.max(params.nFullScores / 4, params.topK)
-    val survivors = approx
-      .withColumn("_r", row_number().over(wApprox))
-      .filter(col("_r") <= nDecompress)
-      .select("query_id", "doc_id")
+    val nDecompress = Searcher.nDecompress(params)
+    val survivors = cut(approx, nDecompress)
 
     // S7: survivors' tokens decode against centroid rows fetched by join
     // (no broadcast codebook), then exact MaxSim — kernel choice follows
@@ -551,13 +534,9 @@ final class Searcher(index: MultiVectorIndex) {
     // restructured to remove); each surviving doc now decodes ONCE and
     // scores against every query in its survivor list.
     val rerank32 = params.rerankFloat32
-    val survivorsBound = qids.size.toLong * nDecompress
-    val survivorsByDoc = survivors
-      .groupBy("doc_id").agg(collect_list("query_id").as("doc_qids"))
-    val exact = index.tokens
-      .join(graft.util.Plan.broadcastIfBounded(survivorsByDoc, survivorsBound), "doc_id")
+    val exact = survivorTokens(survivors, queryMap.size.toLong * nDecompress)
       .join(centDf, "code")
-      .select(col("doc_id"), col("doc_qids"), col("tok"), col("residual"), col("vec"))
+      .select(col("doc_id"), col("qids"), col("tok"), col("residual"), col("vec"))
       .as[(Long, Array[Long], Int, Array[Byte], Array[Float])]
       .mapPartitions { rows =>
         val qz = quantBc.value
@@ -565,9 +544,9 @@ final class Searcher(index: MultiVectorIndex) {
           (docId, docQids, tok, qz.decompress(packed, cent))
         }
       }
-      .toDF("doc_id", "doc_qids", "tok", "dvec")
+      .toDF("doc_id", "qids", "tok", "dvec")
       .groupBy("doc_id")
-      .agg(first(col("doc_qids")).as("doc_qids"),
+      .agg(first(col("qids")).as("qids"),
         collect_list(struct(col("tok"), col("dvec"))).as("toks"))
       .as[(Long, Array[Long], Array[(Int, Array[Float])])]
       .mapPartitions { rows =>
@@ -584,26 +563,19 @@ final class Searcher(index: MultiVectorIndex) {
       .toDF("query_id", "doc_id", "score")
 
     // S8: final top-k
-    val wFinal = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    exact
-      .withColumn("rank", row_number().over(wFinal))
-      .filter(col("rank") <= params.topK)
+    finalTopK(exact, params.topK)
   }
 
   // ---------------------------------------------------------------------
-  // Serving fast path: the whole funnel as ONE stage over a broadcast
-  // index image (dispatch: SearchParams.localIndexBudgetBytes).
+  // Resident serving: one two-phase funnel over a resident index image —
+  // the driver-held image (one slice, dispatch:
+  // SearchParams.localIndexBudgetBytes) or doc-id slices cached on the
+  // executors (dispatch: SearchParams.shardedScoreBudgetBytes).
   // ---------------------------------------------------------------------
 
-  /** Collected-once image of a small index — IVF lists, per-doc code
-    * arrays (tok order, the S5 input), packed token residuals (tok
-    * order, the S7 input). Built lazily on the first fast-path search of
-    * this Searcher and broadcast; sized by
-    * [[graft.index.MultiVectorIndex.packedBytesEstimate]]. */
   /** Manifest build id snapshotted EAGERLY when this Searcher is
-    * constructed — one stamp per handle, shared by the local and
-    * sharded stale-image guards and NEVER re-captured. Stamping at
+    * constructed — one stamp per handle, checked by the stale-image
+    * guard of every resident call and NEVER re-captured. Stamping at
     * image-build time (the pre-r15 shape) had two holes: a sharded
     * image rebuild on a slice-count change re-stamped with the POST-
     * flip build id and served the stale lazy codec/DataFrame snapshots
@@ -615,8 +587,12 @@ final class Searcher(index: MultiVectorIndex) {
   private val snapshotStamp: String =
     graft.index.MultiVectorIndex.readBuildId(index.path)
 
-  private lazy val localImageBc
-      : org.apache.spark.broadcast.Broadcast[Searcher.LocalIndexImage] = {
+  /** Collected-once image of a small index — IVF lists, per-doc code
+    * arrays (tok order, the S5 input), packed token residuals (tok
+    * order, the S7 input). Held on the driver, built lazily on the first
+    * local search of this Searcher; sized by
+    * [[graft.index.MultiVectorIndex.packedBytesEstimate]]. */
+  private lazy val localImage: Searcher.LocalIndexImage = {
     val ivfM: Map[Int, Array[Long]] = index.ivf
       .select("code", "doc_ids").as[(Int, Array[Long])]
       .collect().toMap
@@ -629,203 +605,18 @@ final class Searcher(index: MultiVectorIndex) {
       .collect()
       .groupBy(_._1)
       .map { case (d, rows) => d -> rows.sortBy(_._2).map(r => (r._3, r._4)) }
-    spark.sparkContext.broadcast(Searcher.LocalIndexImage(ivfM, codesM, toksM))
+    Searcher.LocalIndexImage(ivfM, codesM, toksM)
   }
 
-  /** Codec broadcast shared across fast-path calls (the codec is
+  /** Codec broadcast shared across sharded calls (the codec is
     * immutable per index) — a repeated warm batch must not pay a fresh
     * broadcast each call. */
   private lazy val codecBcShared
       : org.apache.spark.broadcast.Broadcast[graft.index.Codec] =
     spark.sparkContext.broadcast(index.codec)
 
-  /** The dense funnel executed per query inside ONE task, against the
-    * broadcast index image. Stage-for-stage the same S1–S8 semantics,
-    * kernels, and tie-breaks as [[searchDenseChunk]] (float approx
-    * scores, double exact scores, doc_id-ascending ties), so results are
-    * bit-identical to the distributed funnel — asserted by
-    * IndexSearchSpec's equivalence test and every search oracle. The
-    * tombstone table is re-read per call (it can grow after the image
-    * was built); the image itself is immutable build output. */
-  private def searchLocal(
-      queryMap: Map[Long, Array[Array[Float]]],
-      params: SearchParams,
-      subset: Option[DataFrame]): DataFrame = {
-    val cdc = index.codec
-    val k = cdc.numCentroids
-    val qids: Array[Long] = queryMap.keys.toArray.sorted
-    val img = localImageBc
-    // Refuse to serve from a stale image: compact()/rebuild rewrite the
-    // manifest (and renumber ids), and silently answering from the
-    // pre-rewrite image would resurrect deleted docs in the OLD id
-    // space. Deferred deletes don't touch the manifest and stay
-    // correct — tombstones are re-read below on every call. Keyed on
-    // the manifest's build_id (a per-write UUID), not (mtime,length):
-    // a rebuild within filesystem timestamp granularity producing a
-    // same-length manifest must still trip the guard.
-    val nowStamp = graft.index.MultiVectorIndex.readBuildId(index.path)
-    if (snapshotStamp != nowStamp)
-      throw new IllegalStateException(
-        s"index at ${index.path} changed on disk since this Searcher collected " +
-        s"its image (manifest build id $snapshotStamp -> $nowStamp); " +
-        "open a fresh Searcher/GraftIndex handle after updates")
-
-    // S4: subset ids collected (bounded by the corpus, which fits the
-    // local budget by dispatch); probe scaling and the eligible-centroid
-    // mask use the same arithmetic as the distributed path
-    val subsetIds: Option[Array[Long]] =
-      subset.map(_.select("doc_id").as[Long].collect())
-    val nProbe = subsetIds match {
-      case Some(ids) =>
-        val scaled = params.nIvfProbe.toLong * math.max(
-          index.numDocuments / math.max(ids.length.toLong, 1L), 1L)
-        math.min(scaled, k.toLong).toInt
-      case None => params.nIvfProbe
-    }
-    val eligible: Option[Array[Boolean]] = subsetIds.map { ids =>
-      val mask = new Array[Boolean](k)
-      val codes = img.value.docCodes
-      ids.foreach(d => codes.get(d).foreach(_.foreach(c => mask(c) = true)))
-      mask
-    }
-    val subsetSet: Option[java.util.HashSet[java.lang.Long]] = subsetIds.map { ids =>
-      val s = new java.util.HashSet[java.lang.Long](ids.length * 2)
-      ids.foreach(s.add(_))
-      s
-    }
-    val tombstones: java.util.HashSet[java.lang.Long] = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      index.tombstonesOpt.foreach(
-        _.select("doc_id").as[Long].collect().foreach(s.add(_)))
-      s
-    }
-
-    val nDecompress = math.max(params.nFullScores / 4, params.topK)
-    val topK = params.topK
-    val threshold = params.centroidScoreThreshold
-    val rerank32 = params.rerankFloat32
-    val driverMode = qids.length <= Searcher.LocalDriverBatchLimit
-    // one query broadcast serves BOTH phases and is destroyed when the
-    // call's results are materialized — a warm serving loop must not
-    // accumulate per-call broadcast blocks
-    val queriesBc =
-      if (driverMode) null
-      else spark.sparkContext.broadcast(queryMap)
-    // fan-out mode ships the subset/tombstone sets once via broadcast —
-    // captured in the task closure they'd be re-serialized into EVERY
-    // task (slices × set size, a real cost for large subsets)
-    val filterBc =
-      if (driverMode) null
-      else spark.sparkContext.broadcast((subsetSet, tombstones))
-
-    try {
-      // Phase A — S1–S6 per query, NO decode: each query's post-cut
-      // survivor set. Tiny batches (the reference's single-query serving
-      // shape) run on the driver — one task costs more in scheduling than
-      // the funnel does in compute — with the S1 GEMM token-parallel;
-      // larger batches fan out as one stage.
-      val survivors: Seq[(Long, Array[Long])] =
-        if (driverMode) {
-          val im = img.value
-          qids.toIndexedSeq.map { qid =>
-            qid -> Searcher.funnelSurvivors(im, cdc, queryMap(qid), nProbe,
-              threshold, eligible, subsetSet, tombstones, nDecompress,
-              parallelTokens = true)
-          }
-        } else {
-          val codecBc = codecBcShared
-          val nProbeL = nProbe
-          val qBc = queriesBc
-          val slices = math.max(1, math.min(qids.length,
-            spark.sparkContext.defaultParallelism))
-          val fBc = filterBc
-          spark.sparkContext.parallelize(qids.toIndexedSeq, slices)
-            .map { qid =>
-              val (sub, tomb) = fBc.value
-              qid -> Searcher.funnelSurvivors(img.value, codecBc.value,
-                qBc.value(qid), nProbeL, threshold, eligible, sub,
-                tomb, nDecompress, parallelTokens = false)
-            }
-            .collect().toSeq
-        }
-
-      // Phase B — S7 doc-grouped: decode each UNIQUE surviving doc once
-      // and score it against every query that kept it (the distributed
-      // path's doc-grouped rerank; per-(query,doc) decode was up to
-      // batch-size× redundant on overlapping survivor sets). The scored
-      // pairs are driver-bounded (queries × nDecompress rows).
-      val docToQids: Array[(Long, Array[Long])] = survivors
-        .flatMap { case (q, ds) => ds.iterator.map(d => (d, q)) }
-        .groupBy(_._1).view.mapValues(_.map(_._2).toArray).toArray
-        .sortBy(_._1)
-      val scored: Seq[(Long, Long, Double)] =
-        if (driverMode) {
-          val im = img.value
-          val out = new Array[Seq[(Long, Long, Double)]](docToQids.length)
-          java.util.stream.IntStream.range(0, docToQids.length).parallel()
-            .forEach { i =>
-              val (d, qs) = docToQids(i)
-              out(i) = Searcher.scoreDocForQueries(
-                im, cdc, d, qs, queryMap, rerank32)
-            }
-          out.toIndexedSeq.flatten
-        } else {
-          val codecBc = codecBcShared
-          val qBc = queriesBc
-          val slices = math.max(1, math.min(docToQids.length,
-            spark.sparkContext.defaultParallelism * 2))
-          spark.sparkContext.parallelize(docToQids.toIndexedSeq, slices)
-            .flatMap { case (d, qs) =>
-              Searcher.scoreDocForQueries(
-                img.value, codecBc.value, d, qs, qBc.value, rerank32)
-            }
-            .collect().toIndexedSeq
-        }
-
-      // S8 — final top-k per query, assembled driver-side (≤ nDecompress
-      // rows per query): score desc, doc asc, as in the distributed window.
-      val rows: Seq[(Long, Long, Double, Int)] = scored
-        .groupBy(_._1).toIndexedSeq.flatMap { case (qid, ss) =>
-          ss.sortWith { (a, b) =>
-            val c = java.lang.Double.compare(b._3, a._3)
-            c < 0 || (c == 0 && a._2 < b._2)
-          }.take(topK).zipWithIndex.map { case ((_, d, s), i) => (qid, d, s, i + 1) }
-        }
-      rows.toDF("query_id", "doc_id", "score", "rank")
-    } finally {
-      if (queriesBc != null) queriesBc.destroy()
-      if (filterBc != null) filterBc.destroy()
-    }
-  }
-
-  // ---------------------------------------------------------------------
-  // Sharded serving fast path: the index image split into doc-id slices
-  // held RESIDENT across calls (cached RDD partitions — each executor
-  // keeps its slices in memory on a cluster), for indexes too big to
-  // collect to one node (dispatch: SearchParams.shardedScoreBudgetBytes).
-  // ---------------------------------------------------------------------
-
   @volatile private var shardedImageCache
       : (Int, org.apache.spark.rdd.RDD[Searcher.LocalIndexImage]) = _
-
-  /** Reusable broadcast of the empty (subset, tombstone) filter — the
-    * common serving shape. Re-broadcasting an identical empty pair on
-    * EVERY call costs a torrent round per slice set; caching it is safe
-    * because its content never varies. Tombstone presence is re-checked
-    * per call (a deferred delete writes tombstones WITHOUT bumping the
-    * manifest build id, so the cache must never absorb them). */
-  @volatile private var emptyFilterCache: org.apache.spark.broadcast.Broadcast[
-    (Option[java.util.HashSet[java.lang.Long]], java.util.HashSet[java.lang.Long])] = _
-
-  private def emptyFilterBc(): org.apache.spark.broadcast.Broadcast[
-      (Option[java.util.HashSet[java.lang.Long]], java.util.HashSet[java.lang.Long])] =
-    synchronized {
-      if (emptyFilterCache == null)
-        emptyFilterCache = spark.sparkContext.broadcast(
-          (Option.empty[java.util.HashSet[java.lang.Long]],
-            new java.util.HashSet[java.lang.Long]()))
-      emptyFilterCache
-    }
 
   /** Doc-sliced index image, one [[Searcher.LocalIndexImage]] per
     * partition (slice = doc_id % slices — dense build ids balance), each
@@ -875,58 +666,47 @@ final class Searcher(index: MultiVectorIndex) {
     }
   }
 
-  /** The dense funnel over the sharded resident image: TWO shuffle-free
-    * jobs per call instead of the distributed funnel's ~7 barriers.
-    * Phase A runs S3–S6 per slice from driver-computed S1 matrices and
-    * probe sets (broadcast); the GLOBAL S6 cut merges the per-slice
-    * top-n survivor sets driver-side — equal to the unsharded cut
-    * because every global survivor is inside its slice's local top-n
-    * under the same (approx desc, doc asc) order. Phase B decodes each
-    * global survivor ONCE on the slice that owns it and exact-scores it
-    * for every query that kept it. Result-identical to the local fast
-    * path and the distributed funnel (same kernels and tie-breaks) —
-    * asserted by IndexSearchSpec's sharded equivalence leg. */
-  private def searchSharded(
+  /** The dense funnel over a resident image in two phases, the shape of
+    * distributed top-k with per-partition pruning (per-slice top-n, a
+    * global merge, a rerank on the owning slice). `image` is either the
+    * driver-held image — ONE slice, both phases in-process with no
+    * Spark job — or the cached executor slices, one shuffle-free job
+    * per phase. Phase A runs S3–S6 per slice and returns each slice's
+    * top-n survivors with their approx scores; the driver finishes the
+    * GLOBAL S6 cut by merging them — equal to the unsliced cut because
+    * every global survivor is inside its slice's local top-n under the
+    * same (approx desc, doc asc) order. Phase B decodes each global
+    * survivor ONCE (on the slice owning it) and exact-scores it for
+    * every query that kept it; the driver assembles S8. Same kernels,
+    * float order and tie-breaks as the distributed funnel, so results
+    * are bit-identical — asserted by IndexSearchSpec's equivalence legs
+    * and every search oracle. The tombstone table is re-read per call
+    * (it can grow after the image was built); the image itself is
+    * immutable build output. */
+  private def searchResident(
+      image: Either[Searcher.LocalIndexImage, org.apache.spark.rdd.RDD[Searcher.LocalIndexImage]],
       queryMap: Map[Long, Array[Array[Float]]],
       params: SearchParams,
-      subsetCounted: Option[(DataFrame, Long)]): DataFrame = {
-    val cdc = index.codec
-    val k = cdc.numCentroids
-    val qids: Array[Long] = queryMap.keys.toArray.sorted
-    val slices = if (params.shardedSlices > 0) params.shardedSlices
-      else math.max(2, spark.sparkContext.defaultParallelism)
-    val img = shardedImage(slices)
-    // same stale-image guard as the local fast path (build_id, not
-    // mtime), against the handle's construction-time stamp
+      nProbe: Int,
+      eligible: Option[Array[Boolean]],
+      subsetIds: Option[Array[Long]]): DataFrame = {
+    // Refuse to serve from a stale image: compact()/rebuild rewrite the
+    // manifest (and renumber ids), and silently answering from the
+    // pre-rewrite image would resurrect deleted docs in the OLD id
+    // space. Deferred deletes don't touch the manifest and stay
+    // correct — tombstones are re-read below on every call. Keyed on
+    // the manifest's build_id (a per-write UUID), not (mtime,length):
+    // a rebuild within filesystem timestamp granularity producing a
+    // same-length manifest must still trip the guard.
     val nowStamp = graft.index.MultiVectorIndex.readBuildId(index.path)
     if (snapshotStamp != nowStamp)
       throw new IllegalStateException(
-        s"index at ${index.path} changed on disk since this Searcher sliced " +
+        s"index at ${index.path} changed on disk since this Searcher loaded " +
         s"its image (manifest build id $snapshotStamp -> $nowStamp); " +
         "open a fresh Searcher/GraftIndex handle after updates")
 
-    // S4: subset restriction + probe scaling + eligible centroids — the
-    // eligible mask comes from the doc_codes ARTIFACT (one size-planned
-    // semi-join, as the distributed path), never from a driver-collected
-    // corpus. The subset COLLECT below is bounded by dispatch (its
-    // residency was checked against localIndexBudgetBytes in search()).
-    val subsetIds: Option[Array[Long]] =
-      subsetCounted.map(_._1.as[Long].collect())
-    val nProbe = subsetCounted match {
-      case Some((_, n)) =>
-        val scaled = params.nIvfProbe.toLong * math.max(
-          index.numDocuments / math.max(n, 1L), 1L)
-        math.min(scaled, k.toLong).toInt
-      case None => params.nIvfProbe
-    }
-    val eligible: Option[Array[Boolean]] = subsetCounted.map { case (ids, n) =>
-      val mask = new Array[Boolean](k)
-      docCodes
-        .join(graft.util.Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
-        .select(explode(col("codes")).as("code")).distinct()
-        .collect().foreach(r => mask(r.getInt(0)) = true)
-      mask
-    }
+    val cdc = index.codec
+    val qids: IndexedSeq[Long] = queryMap.keys.toIndexedSeq.sorted
     val subsetSet: Option[java.util.HashSet[java.lang.Long]] = subsetIds.map { ids =>
       val s = new java.util.HashSet[java.lang.Long](ids.length * 2)
       ids.foreach(s.add(_))
@@ -938,78 +718,87 @@ final class Searcher(index: MultiVectorIndex) {
         _.select("doc_id").as[Long].collect().foreach(s.add(_)))
       s
     }
-
-    // S1 + S2 once per query on the driver, token-parallel (the
-    // reference computes this matrix once per query too); broadcast to
-    // the slices — bounded by shardedScoreBudgetBytes at dispatch
-    val scoresByQ: Map[Long, Array[Array[Float]]] = qids.iterator.map(q =>
-      q -> Searcher.centroidScores(queryMap(q), cdc.centroids, k, cdc.dim,
-        parallel = true)).toMap
-    val probedByQ: Map[Long, Seq[Int]] = qids.iterator.map(q =>
-      q -> Searcher.probeCentroids(scoresByQ(q), nProbe,
-        params.centroidScoreThreshold, eligible)).toMap
-
-    val nDecompress = math.max(params.nFullScores / 4, params.topK)
-    val topK = params.topK
+    val nDec = Searcher.nDecompress(params)
     val rerank32 = params.rerankFloat32
-    val codecBc = codecBcShared
-    val scoresBc = spark.sparkContext.broadcast(scoresByQ)
-    val probedBc = spark.sparkContext.broadcast(probedByQ)
-    val filterBc =
-      if (subsetSet.isEmpty && tombstones.isEmpty) emptyFilterBc()
-      else spark.sparkContext.broadcast((subsetSet, tombstones))
-    val queriesBc = spark.sparkContext.broadcast(queryMap)
-    try {
-      // Phase A — S3–S6 per slice; per-slice survivors carry their
-      // approx scores so the driver can finish the global cut exactly
-      val nDec = nDecompress
-      val sliceSurvivors: Array[(Long, Long, Float)] = img.flatMap { slice =>
-        val (sub, tomb) = filterBc.value
-        val probed = probedBc.value
-        scoresBc.value.iterator.flatMap { case (qid, scores) =>
-          Searcher.funnelSurvivorsScored(slice, scores, probed(qid),
-            sub, tomb, nDec)
-            .iterator.map { case (d, s) => (qid, d, s) }
-        }
-      }.collect()
-      // global S6 cut — identical ordering to the per-slice cut
-      val docToQids: Array[(Long, Array[Long])] = sliceSurvivors
-        .groupBy(_._1).iterator.flatMap { case (qid, rows) =>
-          rows.sortWith { (a, b) =>
-            val c = java.lang.Float.compare(b._3, a._3)
-            c < 0 || (c == 0 && a._2 < b._2)
-          }.take(nDecompress).iterator.map(r => (r._2, qid))
-        }.toArray
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toArray
-        .sortBy(_._1)
-      val docToQidsBc = spark.sparkContext.broadcast(docToQids)
-      // Phase B — S7 on the slice owning each survivor: decode once,
-      // score every query that kept the doc
-      val scored: Array[(Long, Long, Double)] = try {
-        img.flatMap { slice =>
-          docToQidsBc.value.iterator
-            .filter { case (d, _) => slice.toks.contains(d) }
-            .flatMap { case (d, qs) =>
-              Searcher.scoreDocForQueries(
-                slice, codecBc.value, d, qs, queriesBc.value, rerank32)
-            }
-        }.collect()
-      } finally docToQidsBc.destroy()
-      // S8 — final top-k per query, driver-side
-      val rows: Seq[(Long, Long, Double, Int)] = scored
-        .groupBy(_._1).toIndexedSeq.flatMap { case (qid, ss) =>
-          ss.sortWith { (a, b) =>
-            val c = java.lang.Double.compare(b._3, a._3)
-            c < 0 || (c == 0 && a._2 < b._2)
-          }.take(topK).zipWithIndex.map { case ((_, d, s), i) => (qid, d, s, i + 1) }
-        }
-      rows.toDF("query_id", "doc_id", "score", "rank")
-    } finally {
-      scoresBc.destroy()
-      probedBc.destroy()
-      if (!(filterBc eq emptyFilterCache)) filterBc.destroy()
-      queriesBc.destroy()
+    // S1 + S2 for one query: its centroid-score matrix and probe set
+    def probe(qid: Long, parallelTokens: Boolean): (Array[Array[Float]], Seq[Int]) = {
+      val m = Searcher.centroidScores(queryMap(qid), cdc.centroids, cdc.numCentroids,
+        cdc.dim, parallel = parallelTokens)
+      (m, Searcher.probeCentroids(m, nProbe, params.centroidScoreThreshold, eligible))
     }
+    // every broadcast of this call, destroyed once its results are on
+    // the driver — a warm serving loop must not accumulate blocks
+    val bcs = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
+    def bc[T: scala.reflect.ClassTag](v: T): org.apache.spark.broadcast.Broadcast[T] = {
+      val b = spark.sparkContext.broadcast(v)
+      bcs += b
+      b
+    }
+    try {
+      // Phase A — S1–S6, NO decode: each (query, slice)'s survivors
+      // with their approx scores
+      val sliceSurvivors: Seq[(Long, Array[(Long, Float)])] = image match {
+        case Left(im) =>
+          // in-process, S1 per query in the loop: parallel over queries,
+          // or over the tokens of a single query
+          Searcher.parMap(qids) { qid =>
+            val (m, probed) = probe(qid, parallelTokens = qids.size == 1)
+            qid -> Searcher.funnelSurvivorsScored(im, m, probed, subsetSet, tombstones, nDec)
+          }
+        case Right(slices) =>
+          // S1 + S2 once per query on the driver, token-parallel (the
+          // reference computes this matrix once per query too), broadcast
+          // with the filter sets — bounded by shardedScoreBudgetBytes at
+          // dispatch
+          val aBc = bc((qids.map(q => q -> probe(q, parallelTokens = true)),
+            subsetSet, tombstones))
+          slices.flatMap { slice =>
+            val (probes, sub, tomb) = aBc.value
+            probes.iterator.map { case (qid, (m, probed)) =>
+              qid -> Searcher.funnelSurvivorsScored(slice, m, probed, sub, tomb, nDec)
+            }
+          }.collect().toSeq
+      }
+      // global S6 cut under the per-slice ordering — a no-op merge for
+      // one slice — then each surviving doc with the queries that kept it
+      val docToQids: IndexedSeq[(Long, Array[Long])] = sliceSurvivors
+        .groupBy(_._1).iterator.flatMap { case (qid, parts) =>
+          val kept = if (parts.size == 1) parts.head._2
+            else Searcher.approxCut(parts.flatMap(_._2).toArray, nDec)
+          kept.iterator.map { case (d, _) => (d, qid) }
+        }.toSeq
+        .groupBy(_._1).view.mapValues(_.map(_._2).toArray).toIndexedSeq
+        .sortBy(_._1)
+      // Phase B — S7 doc-grouped: decode each UNIQUE surviving doc once
+      // and score it against every query that kept it (per-(query,doc)
+      // decode was up to batch-size× redundant on overlapping survivor
+      // sets). The scored pairs are driver-bounded (queries × nDec rows).
+      val scored: Seq[(Long, Long, Double)] = image match {
+        case Left(im) =>
+          Searcher.parMap(docToQids) { case (d, qs) =>
+            Searcher.scoreDocForQueries(im, cdc, d, qs, queryMap, rerank32)
+          }.flatten
+        case Right(slices) =>
+          val codecBc = codecBcShared
+          val bBc = bc((docToQids, queryMap))
+          slices.flatMap { slice =>
+            val (docs, qm) = bBc.value
+            docs.iterator
+              .filter { case (d, _) => slice.toks.contains(d) }
+              .flatMap { case (d, qs) =>
+                Searcher.scoreDocForQueries(slice, codecBc.value, d, qs, qm, rerank32)
+              }
+          }.collect().toSeq
+      }
+      // S8 — final top-k per query, assembled driver-side (≤ nDec rows
+      // per query): score desc, doc asc, as in the distributed window.
+      scored.groupBy(_._1).toIndexedSeq.flatMap { case (qid, ss) =>
+        ss.sortWith { (a, b) =>
+          val c = java.lang.Double.compare(b._3, a._3)
+          c < 0 || (c == 0 && a._2 < b._2)
+        }.take(params.topK).zipWithIndex.map { case ((_, d, s), i) => (qid, d, s, i + 1) }
+      }.toDF("query_id", "doc_id", "score", "rank")
+    } finally bcs.foreach(_.destroy())
   }
 
   /** S1–S5 oracle twin in FIXED-ORDER f64: centroid scoring (S1),
@@ -1032,9 +821,7 @@ final class Searcher(index: MultiVectorIndex) {
     val dim = codec.dim
     val k = codec.numCentroids
     val cents = codec.centroids
-    val queryMap: Map[Long, Array[Array[Float]]] = queries
-      .select("query_id", "embeddings")
-      .as[(Long, Array[Array[Float]])].collect().toMap
+    val queryMap = collectQueries(queries)
     // S1 (f64): per token × centroid sequential double dot — products
     // of two f32 are exact in f64, so DuckDB's
     // list_sum(list_transform(... ::DOUBLE ...)) is bit-identical
@@ -1068,22 +855,14 @@ final class Searcher(index: MultiVectorIndex) {
           mx >= t
         }.map(c => (qid, c)).toSeq
       }
-    val probed = probedPairs.toDF("query_id", "code")
-    // S3: IVF gather + dedup + tombstone exclusion (same plan shape as
-    // the production funnel)
-    val candidates0 = index.ivf
-      .join(broadcast(probed), "code")
-      .select(col("query_id"), explode(col("doc_ids")).as("doc_id"))
-      .distinct()
-    val candidates = index.tombstonesOpt match {
-      case Some(tomb) => candidates0.join(tomb, Seq("doc_id"), "left_anti")
-      case None       => candidates0
-    }
+    // S3: IVF gather + dedup + tombstone exclusion (the production
+    // funnel's own step)
+    val cands = candidates(broadcast(probedPairs.toDF("query_id", "code")), None)
     // S5 (f64): per query token, max over the doc's codes of the S1
     // score — emitted per token so the caller's integer-micro sum is
     // accumulation-order-free across engines
     val matsBc = spark.sparkContext.broadcast(mats)
-    candidates.join(docCodes, "doc_id")
+    cands.join(docCodes, "doc_id")
       .select("doc_id", "query_id", "codes")
       .as[(Long, Long, Array[Int])]
       .mapPartitions { rows =>
@@ -1113,7 +892,7 @@ final class Searcher(index: MultiVectorIndex) {
     // reconstruction of 10^8 ids must fall back to a shuffle semi-join,
     // never a forced broadcast
     index.tokens
-      .join(graft.util.Plan.broadcastIfBounded(ids, ids.count()),
+      .join(Plan.broadcastIfBounded(ids, ids.count()),
         Seq("doc_id"), "left_semi")
       .select("doc_id", "tok", "code", "residual")
       .as[(Long, Int, Int, Array[Byte])]
@@ -1135,11 +914,7 @@ final class Searcher(index: MultiVectorIndex) {
     * mirrors the reference's exact n_full_scores path). */
   def bruteForce(queries: DataFrame, topK: Int): DataFrame = {
     val codecBc = spark.sparkContext.broadcast(index.codec)
-    val queryMap = queries
-      .select("query_id", "embeddings")
-      .as[(Long, Array[Array[Float]])]
-      .collect().toMap
-    val queriesBc = spark.sparkContext.broadcast(queryMap)
+    val queriesBc = spark.sparkContext.broadcast(collectQueries(queries))
     val liveTokens = index.tombstonesOpt match {
       case Some(tomb) => index.tokens.join(tomb, Seq("doc_id"), "left_anti")
       case None       => index.tokens
@@ -1159,25 +934,20 @@ final class Searcher(index: MultiVectorIndex) {
         }
       }
       .toDF("query_id", "doc_id", "score")
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id").asc)
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
+    finalTopK(exact, topK)
   }
 
 }
 
 object Searcher {
 
-  /** Collected image of a small index for the serving fast path: IVF
-    * lists, per-doc codes (tok order), packed residuals (tok order). */
+  /** Resident image of an index (or of one doc-id slice of it) for
+    * the resident funnel: IVF lists, per-doc codes (tok order), packed
+    * residuals (tok order). */
   private[search] final case class LocalIndexImage(
       ivf: Map[Int, Array[Long]],
       docCodes: Map[Long, Array[Int]],
       toks: Map[Long, Array[(Int, Array[Byte])]])
-
-  /** Fast-path batches at or under this size run on the driver (one
-    * task costs more in scheduling than the funnel does in compute);
-    * larger batches fan out as one stage of tasks. */
-  private[search] val LocalDriverBatchLimit = 4
 
   /** Fast-path ceiling on batch size: phase A/B collect
     * queries × n_full/4 intermediate rows to the driver (~100 MB at
@@ -1186,10 +956,14 @@ object Searcher {
     * one memory-budgeted chunk. */
   private[search] val LocalMaxBatch = 4096
 
-  /** Driver-residency multiplier for the fast-path dispatch: a packed
-    * image estimated at N bytes transiently costs ~3N on the driver
-    * (collected intermediate rows + the held image + its broadcast
-    * block). localIndexBudgetBytes bounds N × this factor. */
+  /** Driver-residency multiplier for the fast-path dispatch:
+    * localIndexBudgetBytes bounds a packed image estimated at N bytes
+    * by N × this factor. It was sized when the image also had a
+    * broadcast block (collected intermediate rows + the held image +
+    * the block, ~3N); the image is now held on the driver only, so its
+    * transient peak is ~2N and 3 overstates it. The factor is kept so
+    * that admission — which images serve locally, and what the FTS and
+    * metadata images are charged — does not change. */
   private[search] val LocalResidencyFactor = 3L
 
   /** Estimated driver residency of `index`'s local image (packed
@@ -1210,39 +984,30 @@ object Searcher {
       nQueries <= LocalMaxBatch && params.localIndexBudgetBytes > 0 &&
       index.packedBytesEstimate * LocalResidencyFactor <= params.localIndexBudgetBytes
 
-  /** S1–S6 for ONE query against a collected index image: probe,
-    * candidate gather, approximate scoring, funnel cut — NO decode.
-    * Returns the post-cut survivor doc ids. The single implementation
-    * behind both fast-path execution modes (driver-local tiny batches
-    * and the one-stage task fan-out), so they cannot drift. Ordering
-    * and arithmetic mirror the distributed funnel exactly: float
-    * approx scores, doc_id-ascending ties at the cut.
-    * `parallelTokens` spreads the S1 GEMM across cores (independent
-    * rows — bit-identical either way). */
-  private[search] def funnelSurvivors(
-      im: LocalIndexImage, cdc: graft.index.Codec,
-      emb: Array[Array[Float]],
-      nProbe: Int, threshold: Option[Float],
-      eligible: Option[Array[Boolean]],
-      subsetSet: Option[java.util.HashSet[java.lang.Long]],
-      tombstones: java.util.HashSet[java.lang.Long],
-      nDecompress: Int,
-      parallelTokens: Boolean): Array[Long] = {
-    // S1 + S2: this query's centroid-score matrix and probe set
-    val scores = centroidScores(emb, cdc.centroids, cdc.numCentroids,
-      cdc.dim, parallel = parallelTokens)
-    val probed = probeCentroids(scores, nProbe, threshold, eligible)
-    funnelSurvivorsScored(im, scores, probed, subsetSet, tombstones,
-      nDecompress).map(_._1)
+  /** Survivors per query sent to the S7 rerank: n_full/4, at least
+    * topK (search.rs:460-469). */
+  private[search] def nDecompress(params: SearchParams): Int =
+    math.max(params.nFullScores / 4, params.topK)
+
+  /** `f` over `xs` in parallel on the driver's cores (the common
+    * fork-join pool); results in input order. */
+  private[search] def parMap[A, B: scala.reflect.ClassTag](xs: IndexedSeq[A])(
+      f: A => B): IndexedSeq[B] = {
+    val out = new Array[B](xs.length)
+    java.util.stream.IntStream.range(0, xs.length).parallel()
+      .forEach(i => out(i) = f(xs(i)))
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
 
   /** S3–S6 against one index image (or image SLICE) from a precomputed
     * S1 matrix and probe set: gather, filter, approximate-score, cut.
-    * Returns the post-cut survivors WITH their approx scores so a
-    * sharded caller can finish the GLOBAL S6 cut by merging slice
-    * results under the same (score desc, doc asc) ordering — the cut
-    * over a union of per-slice top-n sets equals the unsharded cut
-    * because each slice's global survivors are within its local top-n. */
+    * Ordering and arithmetic mirror the distributed funnel exactly:
+    * float approx scores, doc_id-ascending ties at the cut. Returns the
+    * post-cut survivors WITH their approx scores so the resident funnel
+    * can finish the GLOBAL S6 cut by merging slice results under the
+    * same (score desc, doc asc) ordering — the cut over a union of
+    * per-slice top-n sets equals the unsharded cut because each slice's
+    * global survivors are within its local top-n. */
   private[search] def funnelSurvivorsScored(
       im: LocalIndexImage,
       scores: Array[Array[Float]],
@@ -1261,13 +1026,17 @@ object Searcher {
       .flatMap(d => im.docCodes.get(d)
         .map(codes => (d, MaxSim.approxScore(scores, codes))))
       .toArray
-    // S6: funnel cut — approx desc, doc asc (the distributed window's
-    // float ordering and tie-break)
+    // S6: funnel cut
+    approxCut(approx, nDecompress)
+  }
+
+  /** S6 funnel cut of (doc, approx) rows: approx desc, doc asc (the
+    * distributed window's float ordering and tie-break), first `n`. */
+  private[search] def approxCut(approx: Array[(Long, Float)], n: Int): Array[(Long, Float)] =
     approx.sortWith { (a, b) =>
       val c = java.lang.Float.compare(b._2, a._2)
       c < 0 || (c == 0 && a._1 < b._1)
-    }.take(nDecompress)
-  }
+    }.take(n)
 
   /** S7 for ONE surviving doc: decode once, exact-score against every
     * query that kept it. Kernel choice mirrors the distributed S7
@@ -1293,9 +1062,9 @@ object Searcher {
 
   /** S1 GEMM kernel: per-query-token scores against all K centroids
     * (row-major centroid matrix). Shared by the dense distributed path
-    * (driver / tiny stage) and the local fast path (in-task), so both
-    * produce identical float accumulation order. `parallel` spreads
-    * the independent token rows across cores (driver-mode latency);
+    * (driver / tiny stage) and the resident funnel, so both produce
+    * identical float accumulation order. `parallel` spreads the
+    * independent token rows across cores (single-query latency);
     * per-row arithmetic is identical either way. */
   private[graft] def centroidScores(
       emb: Array[Array[Float]], cents: Array[Float],

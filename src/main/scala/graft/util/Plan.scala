@@ -14,6 +14,20 @@ object Plan {
     * row (8B value + offsets/null bits). */
   val BytesPerIdRow = 16L
 
+  /** Driver bytes per subset id held while a resident search applies a
+    * subset (~64 B per boxed id in a `HashSet`): a subset is collected
+    * to the driver only when its count × this fits the resident budget. */
+  val SubsetBytesPerId = 64L
+
+  /** Row count of `ids`. A frame the optimizer folds into a local
+    * relation (a filter over a driver-resident image, or ids already
+    * collected) is counted from its rows: Spark's `count()` on it would
+    * still run jobs for a number already on the driver. */
+  def countIds(ids: DataFrame): Long = ids.queryExecution.optimizedPlan match {
+    case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.length.toLong
+    case _ => ids.count()
+  }
+
   /** Broadcast-hint `df` only when `rowsBound` — a driver-known bound on
     * its row count (an already-computed count, or a static bound like
     * queries × n_decompress) — fits the session's broadcast threshold.

@@ -240,10 +240,11 @@ class IndexSearchSpec extends AnyFunSuite {
       .select("query_id", "doc_id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     val distributed = base.copy(localIndexBudgetBytes = 0L)
+    // the 8-query batch runs on the driver, phase A parallel over queries
     assert(run(base, None) === run(distributed, None))
     assert(run(base, Some(subset)) === run(distributed, Some(subset)))
-    // tiny batches take the driver-local execution mode (same funnelOne,
-    // doc-parallel rerank) — equally bit-identical
+    // so do smaller batches (a single query's S1 runs parallel over its
+    // tokens instead) — equally bit-identical
     val tiny = docs.filter(col("doc_id") < 3)
       .select(col("doc_id").as("query_id"), col("embeddings"))
     def runTiny(p: SearchParams) = searcher.search(tiny, p)
@@ -274,6 +275,39 @@ class IndexSearchSpec extends AnyFunSuite {
     // a second call reuses the cached resident slices (no rebuild) and
     // stays identical — the serving-loop shape
     assert(run(sharded, None) === run(distributed, None))
+  }
+
+  test("driver, sharded and distributed funnels agree under deferred-delete tombstones") {
+    import spark.implicits._
+    val p = "/tmp/graft_test_index_tombstoned"
+    graft.util.Fs.deleteRecursively(p)
+    MultiVectorIndex.build(spark, docs, p, IndexConfig(numPartitionsOverride = Some(32)))
+    // tombstone query docs (each its own query's likely top hit) and
+    // docs inside and outside the subset
+    graft.index.Updater.deleteDeferred(spark, new MultiVectorIndex(spark, p),
+      Seq(0L, 3L, 5L, 9L, 12L, 30L, 51L).toDF("doc_id"))
+    val idx = new MultiVectorIndex(spark, p)
+    assert(idx.tombstonesOpt.isDefined)
+    val searcher = new Searcher(idx)
+    val subset = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
+    val base = SearchParams()
+    val sharded = base.copy(localIndexBudgetBytes = 1L, shardedSlices = 3)
+    val distributed = base.copy(localIndexBudgetBytes = 0L)
+    def run(nq: Int, p: SearchParams, sub: Option[DataFrame]) = searcher
+      .search(docs.filter(col("doc_id") < nq)
+        .select(col("doc_id").as("query_id"), col("embeddings")), p, subset = sub)
+      .select("query_id", "doc_id", "score", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    for (sub <- Seq(None, Some(subset)); nq <- Seq(1, 8)) {
+      val want = run(nq, distributed, sub)
+      val clue = s"$nq queries, subset ${sub.isDefined}"
+      assert(want.map(_._1).size === nq, clue)
+      assert(want.forall(r => !Set(0L, 3L, 5L, 9L, 12L, 30L, 51L).contains(r._2)),
+        s"tombstoned doc returned: $clue")
+      assert(run(nq, base, sub) === want, s"driver: $clue")
+      assert(run(nq, sharded, sub) === want, s"sharded: $clue")
+    }
+    graft.util.Fs.deleteRecursively(p)
   }
 
   test("fast path fails loudly when the index is rewritten under a held Searcher") {

@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.search.{HybridParams, SearchParams, Searcher}
 
-/** Job-count guard for the serving paths: a warm keyword, hybrid or
-  * filtered search on a small index runs NO Spark job (resident BM25,
-  * semantic and metadata images, driver-side fusion), and a zero
-  * resident budget keeps the distributed plan reachable. */
+/** Job-count guard for the serving paths: a warm semantic, keyword,
+  * hybrid or filtered search on a small index runs NO Spark job
+  * (resident BM25, semantic and metadata images, driver-side fusion),
+  * for a single query and for a batch, and a zero resident budget keeps
+  * the distributed plan reachable. */
 class ServingJobsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -142,5 +143,59 @@ class ServingJobsSpec extends AnyFunSuite {
       assert(key(overBudget) === key(filtered("group = ?", Seq(SLong(1L)), SearchParams())))
     } finally spark.sparkContext.removeSparkListener(Jobs)
     gi.drop()
+  }
+
+  test("warm semantic search runs 0 Spark jobs for 1 and 8 queries; budget 0 runs the distributed funnel") {
+    IndexFixtures.requireTestdata()
+    import spark.implicits._
+    val path = "/tmp/graft_serving_jobs_semantic"
+    graft.util.Fs.deleteRecursively(path)
+    val docs = IndexFixtures.docs(spark).filter(col("doc_id") < 30)
+    val idx = graft.index.MultiVectorIndex.build(spark, docs, path)
+    val searcher = new Searcher(idx)
+    // local query frames, as a request handler builds them
+    val embs = docs.select("doc_id", "embeddings")
+      .as[(Long, Array[Array[Float]])].collect().sortBy(_._1)
+    def queries(n: Int): DataFrame = embs.take(n).toSeq.toDF("query_id", "embeddings")
+    assert(Searcher.residentBytes(idx, SearchParams().localIndexBudgetBytes) > 0,
+      "fixture index must be served by the driver-held image")
+    def ranks(n: Int, p: SearchParams) = searcher.search(queries(n), p)
+      .select("query_id", "doc_id", "score", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      searcher.search(queries(1)).collect() // warm: collects the image
+      for (n <- Seq(1, 8)) {
+        var resident: Set[(Long, Long, Double, Int)] = null
+        assert(jobsOf { resident = ranks(n, SearchParams()) } === 0,
+          s"warm $n-query semantic search launched Spark jobs")
+        var viaPlan: Set[(Long, Long, Double, Int)] = null
+        assert(jobsOf { viaPlan = ranks(n, SearchParams(localIndexBudgetBytes = 0L)) } > 0,
+          "a zero budget must keep the distributed funnel")
+        assert(resident.map(_._1).size === n)
+        assert(resident === viaPlan)
+      }
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+    graft.util.Fs.deleteRecursively(path)
+  }
+
+  test("Plan.countIds counts a local-relation subset with 0 jobs and a parquet subset exactly") {
+    import spark.implicits._
+    val path = "/tmp/graft_serving_jobs_ids"
+    graft.util.Fs.deleteRecursively(path)
+    (0L until 100L).toDF("doc_id").write.parquet(path)
+    // a filter over a local relation: what a filter over the resident
+    // metadata image, or an already collected id list, optimizes to
+    val local = (0L until 100L).toDF("doc_id").filter(col("doc_id") % 3 === 0)
+    val parquet = spark.read.parquet(path).filter(col("doc_id") % 3 === 0)
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      var n = -1L
+      assert(jobsOf { n = graft.util.Plan.countIds(local) } === 0)
+      assert(n === 34L)
+      assert(graft.util.Plan.countIds(parquet) === 34L)
+      assert(graft.util.Plan.countIds(parquet.filter(col("doc_id") < 0)) === 0L)
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+    graft.util.Fs.deleteRecursively(path)
   }
 }
