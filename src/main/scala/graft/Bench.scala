@@ -130,12 +130,15 @@ object Bench {
       s""""post_iow":${d3(post.ioW)},"post_ior":${d3(post.ioR)}}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `SPARK_GRAFT_CPUS`, or `default` when unset. */
+  def cpus(default: Int): Int = sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** The session the runner mains (Bench, Verify, PlanDump, BenchOne,
+    * PipelineScaleProbe) build: `local[cpus]`, UTC, no UI, WARN logs. */
+  def session(cpus: Int, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       // 10 MB default is sized for small executors; at local[32]/128 GiB a
       // 64 MB broadcast beats shuffling a 10^8-row probe side (and AQE
@@ -144,13 +147,28 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    // JVM/session warm-up so the first measured query doesn't absorb
-    // executor/codegen startup (q1 carried ~5s of it in round 1), and a
-    // throwaway parquet write so committer/output-format init isn't
-    // attributed to whichever artifact-building query runs first.
+  /** JVM/session warm-up so the first measured query doesn't absorb
+    * executor/codegen startup (q1 carried ~5s of it in round 1), and a
+    * throwaway parquet write so committer/output-format init isn't
+    * attributed to whichever artifact-building query runs first. */
+  def warmUp(spark: SparkSession): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.range(100L).write.mode("overwrite").parquet("/tmp/graft_bench_warmup")
+  }
+
+  /** A failure's message made safe to embed in a JSON string. */
+  def errorText(e: Throwable, max: Int = 200): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(max)
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = Bench.cpus(32)
+    val spark = session(cpus, cpus)
+    warmUp(spark)
 
     // NOTE (r16, closing the r15 "codegen tax" item with a negative
     // result): a graph-family JIT/codegen warm (clusteringCoeff +
@@ -219,8 +237,7 @@ object Bench {
           s""","qps_dim":${QpsHarness.Dim},"qps_tokens_per_doc":${QpsHarness.TokensPerDoc}"""
       } catch {
         case e: Throwable =>
-          errors("qps_warm") = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+          errors("qps_warm") = errorText(e)
           ""
       }
 
@@ -233,8 +250,7 @@ object Bench {
         times(name) = (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+          errors(name) = errorText(e)
       }
     }
     // Contended-pass guard (round-13 lesson: the driver's record ran
@@ -262,9 +278,7 @@ object Bench {
           if (first > 1.5 * sec) times(name) = sec
         } catch { case e: Throwable =>
           // keep the first (successful) timing; record the flake
-          rerunDetail(name) = s"""["${Option(e.getMessage)
-            .getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(80)}"]"""
+          rerunDetail(name) = s"""["${errorText(e, 80)}"]"""
         }
       }
     }
@@ -296,8 +310,7 @@ object Bench {
           s""","quality_gate":"hard","ndcg_baseline":$HardNdcgBaseline"""
       } catch {
         case e: Throwable =>
-          errors("recall_at_10") = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+          errors("recall_at_10") = errorText(e)
           ""
       }
 

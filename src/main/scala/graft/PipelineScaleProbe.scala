@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Composed end-to-end pipeline rehearsal (r15 verdict item 2): the
@@ -50,26 +50,13 @@ object PipelineScaleProbe {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus.toInt, 64))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Bench.cpus(32)
+    val spark = Bench.session(cpus, math.max(cpus, 64))
     val calibPre = Bench.calibrate(spark)
 
-    // ScaleProbe is the single-sourced corpus recipe; generate-if-absent
+    // BenchOne is the single-sourced corpus recipe; generate-if-absent
     val base = s"/tmp/graft_scale_x$factor"
-    val nPart = cpus.toInt * 2
-    if (!graft.util.Fs.exists(s"$base/documents.parquet"))
-      ScaleProbe.replicatedDocuments(spark, sfDir, factor, nPart)
-        .write.parquet(s"$base/documents.parquet")
-    if (!graft.util.Fs.exists(s"$base/embeddings.parquet"))
-      ScaleProbe.replicatedEmbeddings(spark, sfDir, factor, nPart)
-        .write.parquet(s"$base/embeddings.parquet")
+    BenchOne.generateTables(spark, sfDir, factor, base, Set("documents", "embeddings"))
 
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val rows = scala.collection.mutable.LinkedHashMap.empty[String, Long]

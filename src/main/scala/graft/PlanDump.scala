@@ -17,19 +17,12 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus(32)
     val names =
       if (args(2) == "all")
         SparkEntry.queries.keys.toSeq.filterNot(SparkEntry.verifyOnly).sorted
       else args(2).split(",").toSeq
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus, cpus)
     Files.createDirectories(Paths.get(outDir))
     // evidence-only subplans that are not declared queries
     val subplans: Map[String, (org.apache.spark.sql.SparkSession, String) =>

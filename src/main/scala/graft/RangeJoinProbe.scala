@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions._
   * "max_state_rows":...,"batches":...,"parts":...}`.
   *
   * Usage: `SPARK_DRIVER_MEM=64g sbt "runMain graft.RangeJoinProbe 1000 60"`
-  * (requires /tmp/graft_scale_x{N}/events.parquet from ScaleProbe).
+  * (generates /tmp/graft_scale_x{N}/events.parquet from
+  * `SPARK_GRAFT_SF_DIR` with [[BenchOne.generateTables]] if absent).
   */
 object RangeJoinProbe {
 
@@ -58,8 +59,9 @@ object RangeJoinProbe {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    BenchOne.generateTables(spark, sfDir, factor, s"/tmp/graft_scale_x$factor", Set("events"))
     val path = s"/tmp/graft_scale_x$factor/events.parquet"
-    require(graft.util.Fs.exists(path), s"generate $path with ScaleProbe first")
     def side(tp: String): Array[(Long, Long, Long)] = spark.read.parquet(path)
       .filter(col("event_type") === tp)
       .select(unix_micros(col("ts")), col("user_id"), col("event_id"))

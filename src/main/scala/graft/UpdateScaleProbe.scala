@@ -41,11 +41,9 @@ object UpdateScaleProbe {
     val calibPre = Bench.calibrate(spark)
 
     val base = s"/tmp/graft_scale_x$factor"
-    if (!graft.util.Fs.exists(s"$base/embeddings.parquet"))
-      ScaleProbe.replicatedEmbeddings(spark, sfDir, factor, cpus.toInt * 2)
-        .write.parquet(s"$base/embeddings.parquet")
+    BenchOne.generateTables(spark, sfDir, factor, base, Set("embeddings"))
     import spark.implicits._
-    // same doc recipe as NpyScaleProbe: 5 normalized token-vectors/doc
+    // same doc recipe as v_index_search: 5 normalized token-vectors/doc
     val docsAll = spark.read.parquet(s"$base/embeddings.parquet")
       .select((col("vec_id") / 5).cast("long").as("doc_id"),
         col("vec_id"), col("embedding"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,18 +14,8 @@ object Verify {
     // the driver always runs the full suite)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // 10 MB default is sized for small executors; at local[32]/128 GiB a
-      // 64 MB broadcast beats shuffling a 10^8-row probe side (and AQE
-      // still falls back from stats at runtime)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Bench.cpus(4)
+    val spark = Bench.session(cpus, cpus)
     new java.io.File(outDir).mkdirs()
     // Failures must be loud AND persistent: a swallowed exception means the
     // query silently vanishes from the driver's correctness JSON (this is

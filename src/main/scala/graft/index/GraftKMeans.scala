@@ -100,7 +100,7 @@ object GraftKMeans {
         // assignment is per-row pure and the fold below re-sorts by
         // (code, doc_id, tok), so parallel order cannot leak into the
         // result; the kernel is the SIMD filter + exact-f32 refine
-        // (bit-identical to nearestEuclidean — see NearestKernel)
+        // (bit-identical to the sequential-f32 argmin — see NearestKernel)
         val kern = new NearestKernel(centroids, kNow, dim)
         val assigned = new Array[(Int, Long, Int, Array[Float])](rows.length)
         java.util.stream.IntStream.range(0, rows.length).parallel().forEach { i =>
@@ -287,22 +287,6 @@ object GraftKMeans {
       var i = 0
       while (i < dim) { s += cents(off + i) * vec(i); i += 1 }
       if (!s.isNaN && s > bestScore) { best = c; bestScore = s }
-      c += 1
-    }
-    best
-  }
-
-  private[graft] def nearestEuclidean(
-      cents: Array[Float], k: Int, dim: Int, vec: Array[Float]): Int = {
-    var best = 0
-    var bestDist = Float.PositiveInfinity
-    var c = 0
-    while (c < k) {
-      var s = 0.0f
-      val off = c * dim
-      var i = 0
-      while (i < dim) { val d = vec(i) - cents(off + i); s += d * d; i += 1 }
-      if (s < bestDist) { best = c; bestDist = s }
       c += 1
     }
     best

@@ -165,8 +165,9 @@ final class NearestKernel(cents: Array[Float], k: Int, dim: Int)
     if (best < 0) 0 else best
   }
 
-  /** Bit-identical to [[GraftKMeans.nearestEuclidean]]'s sequential-f32
-    * argmin squared distance: SIMD filter, sequential-f32 refine.
+  /** Bit-identical to the sequential-f32 argmin squared distance
+    * (`nearestEuclideanScalar`; NearestKernelSpec keeps an independent
+    * reference): SIMD filter, sequential-f32 refine.
     * Non-negative summands make the error bound relative (no
     * cancellation), so delta scales with the minimum itself. */
   def nearestEuclideanF32(vec: Array[Float]): Int = {

@@ -43,7 +43,7 @@ object Assoc {
     // SINGLE CONSUMPTION of `it` (the old shape fed it to both the
     // groupBy-count rollup and the join probe side, re-deriving the
     // distinct per consumer), not exchange sharing. Interleaved A/B at
-    // sf0.1 (OptProbe `assoc`, hash-identical): wins every rep,
+    // sf0.1 (OPTIMIZATION_r19 `assoc`, hash-identical): wins every rep,
     // ~15-30%. The window is basket-partitioned (bounded groups),
     // never corpus-wide.
     it.withColumn("_bsize", count(lit(1)).over(Window.partitionBy("basket")))

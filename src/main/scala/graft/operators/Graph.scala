@@ -34,7 +34,7 @@ object Graph {
     * zip-of-slices pair explode — the same restructure that won 2.6×
     * in `Dedup.candidatePairs` (the bands relation is exchanged once
     * and never hash-probed against itself); here the interleaved A/B
-    * (OptProbe `triedge`/`kcoreedge`, hash-identical end-to-end) wins
+    * (OPTIMIZATION_r19 `triedge`/`kcoreedge`, hash-identical end-to-end) wins
     * every rep at sf0.1. Groups are basket-sized (co-purchase orders),
     * so the per-group quadratic is bounded exactly as in the join
     * form; the lambda body is cheap per-CHUNK slicing (the measured
@@ -261,7 +261,7 @@ object Graph {
     // exchange is edge- or node-sized. Out-neighborhoods are O(√m) by
     // the degree orientation (a per-row memory bound as before, now
     // two arrays per edge row: ~16 B/entry ⇒ ~32 MB rows at m = 10^12).
-    // Interleaved A/B (OptProbe `triint`, 4 reps, hash-identical
+    // Interleaved A/B (OPTIMIZATION_r20 `triint`, 4 reps, hash-identical
     // through clusteringCoeff): wins 4/4, 5.9 → 4.2 s warm,
     // 18.4 → 10.7 s cold at sf0.1.
     val ns = directed.groupBy("u").agg(collect_list(col("v")).as("ns"))

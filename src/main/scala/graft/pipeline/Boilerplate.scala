@@ -57,7 +57,7 @@ object Boilerplate {
       // without a barrier the regex-heavy projection (rlike +
       // regexp_extract_all + posexplode) runs once per consumer.
       // localCheckpoint materializes it once (the dupspans/simhash r19
-      // pattern); interleaved A/B at sf0.1 (OptProbe `c4clean`,
+      // pattern); interleaved A/B at sf0.1 (OPTIMIZATION_r20 `c4clean`,
       // hash-identical, 5000 rows): wins all 4 reps, 1.58 -> 1.26 s
       // warm, 2.77 -> 1.69 s cold.
       .localCheckpoint()

@@ -48,9 +48,9 @@ object CurationPipeline {
     * chunks, lines joined by '\n'; docs with zero tokens yield "".
     *
     * MEASURED FENCE on the repo's no-lambda rule (`graft.SynthProbe
-    * 100`, same JVM, interleaved, content-hash-identical outputs): the
-    * in-row `transform(sequence(...))` lambda below runs 3.3-3.6 s at
-    * ×100 vs 8.7-10.2 s for the "codegen-clean" alternative
+    * 100` at 84d355f, same JVM, interleaved, content-hash-identical
+    * outputs): the in-row `transform(sequence(...))` lambda below runs
+    * 3.3-3.6 s at ×100 vs 8.7-10.2 s for the "codegen-clean" alternative
     * (posexplode → two token-keyed rollups → struct-sort reassembly).
     * The 8× lambda tax (NGrams.scala) is a PER-TOKEN regime — md5/
     * regexp/xxhash evaluated interpreted once per gram; here the

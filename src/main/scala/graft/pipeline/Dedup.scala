@@ -45,7 +45,8 @@ object Dedup {
     * the distinct means every downstream shuffle (the distinct itself,
     * the Jaccard intersection joins, the df counts) moves 8-byte longs
     * instead of ~20-byte gram strings — measured 2× on the distinct at
-    * the ×100 corpus (DedupStageProbe, 26M shingles: 7.3 s vs 14.7 s)
+    * the ×100 corpus (DedupStageProbe at 84d355f, 26M shingles: 7.3 s
+    * vs 14.7 s)
     * with zero oracle drift (DuckDB replays the same
     * `('0x'||substr(md5(gram||'#0'),1,15))::BIGINT`, so any hash
     * collision affects both engines identically). */
@@ -95,7 +96,8 @@ object Dedup {
     * result array. That keeps the aggregated row count at
     * docs×shingles instead of the docs×shingles×numPerm explode of the
     * first formulation (measured 2.4× at the ×100 corpus: 13.0 s vs
-    * 30.8 s same-JVM, DedupStageProbe G vs G2; identical values). */
+    * 30.8 s same-JVM, DedupStageProbe G vs G2 at 84d355f; identical
+    * values). */
   def minhashSignatures(sh: DataFrame, numPerm: Int): DataFrame = {
     val (as, bs) = permConsts(numPerm)
     val aggs = (0 until numPerm).map(p =>
@@ -138,7 +140,7 @@ object Dedup {
     // explode (outer row keeps the ≤cap id array, inner explode streams
     // the partners) — replaces the bucket SELF-JOIN of the first
     // formulation, measured 2.6× faster at the ×100 corpus (22.5 s vs
-    // 58.8 s, DedupStageProbe B vs C) because the bands relation is
+    // 58.8 s, DedupStageProbe B vs C at 84d355f) because the bands relation is
     // exchanged once and never hash-probed against itself. The count
     // prepass (semi-join on the same, reused exchange) still runs FIRST
     // so a degenerate hot bucket is dropped before collect_list ever
@@ -155,6 +157,12 @@ object Dedup {
 
   /** Exact Jaccard over shingle sets for given pairs:
     * `|A ∩ B| / (|A| + |B| − |A ∩ B|)`.
+    *
+    * INPUT CONTRACT: `sh` rows must be distinct on `(doc_id, sh)`, as
+    * [[shingles]] emits them. `array_intersect` de-duplicates, but the
+    * set sizes are `count(lit(1))` of rows, so a duplicated row inflates
+    * `|A|` and yields a wrong Jaccard with no error
+    * (DedupProperties pins the contract against a brute-force Jaccard).
     *
     * Shape (r20): each endpoint doc's (distinct) shingle set is
     * collected into ONE array row, both arrays attach to the candidate
@@ -215,7 +223,7 @@ object Dedup {
     * before its map-side reduce; here the same ±tf arithmetic per bit
     * is a codegen'd CASE in the aggregate update, the per-group state
     * is `bits` longs, and one row per doc (not `bits` rows) crosses the
-    * exchange. Interleaved A/B (OptProbe `simagg`/`simagg60`, 4 reps
+    * exchange. Interleaved A/B (OPTIMIZATION_r20 `simagg`/`simagg60`, 4 reps
     * each, hash-identical): wins 8/8, ~2.0 → 1.4 s warm, 9.4 → 3.9 s
     * cold at sf0.1. */
   def simhash(docs: DataFrame, idCol: String, textCol: String, bits: Int = 48): DataFrame = {
@@ -323,8 +331,9 @@ object Dedup {
     // wall-clock cliff at sf0.1), while true near-dups share dozens.
     // Pairs per rare shingle come from collect+double-explode rather
     // than a bucket self-join (the candidatePairs pattern — 1.7×
-    // measured at ×100, DedupStageProbe H2 vs H1); the collected array
-    // is bounded by maxShingleDf, so no buffer-size guard is needed.
+    // measured at ×100, DedupStageProbe H2 vs H1 at 84d355f); the
+    // collected array is bounded by maxShingleDf, so no buffer-size
+    // guard is needed.
     val pairs = rareSh.groupBy("sh")
       .agg(array_sort(collect_list("doc_id")).as("sids"))
       .select(explode(expr(
@@ -382,7 +391,13 @@ object Dedup {
     * the shingle, per-pair positional-bound aggregate,
     * exact-intersection verify (the [[jaccardVerify]] ReuseExchange
     * shape). Output is all-integer (`jaccard_bp` = floor(J·10000)), so
-    * the SQL oracle replays membership bit-for-bit. */
+    * the SQL oracle replays membership bit-for-bit.
+    *
+    * INPUT CONTRACT (internal, the same as [[jaccardVerify]]'s): the
+    * token table is [[shingles]], distinct on `(doc_id, sh)`. The sizes
+    * `sz`, `n_a`, `n_b` and the positional bound count its rows, so a
+    * token table with duplicated rows would give wrong sizes and a
+    * wrong `jaccard_bp` with no error. */
   def prefixFilterPairs(
       docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, minJaccard: Double = 0.5): DataFrame = {
@@ -396,7 +411,7 @@ object Dedup {
     // the shingle table once; same for `ordered`, whose probe/index
     // legs differ only in the filter threshold and otherwise re-derive
     // the df join + both windows twice each. Interleaved A/B at sf0.1
-    // (OptProbe prefix1/prefix2, hash-identical): ~10% per barrier.
+    // (OPTIMIZATION_r19 prefix1/prefix2, hash-identical): ~10% per barrier.
     val toks = shingles(docs, idCol, textCol, shingleSize)
       .select(col("doc_id"), col("sh").as("tok")).localCheckpoint()
     val dfTbl = toks.groupBy("tok").agg(count(lit(1)).as("tdf"))
@@ -441,7 +456,7 @@ object Dedup {
     // pair-count aggregate and the two size joins all disappear.
     // Per-row memory is one doc's token set, the bound the collect-
     // based candidate generation already carries elsewhere. Interleaved
-    // A/B (OptProbe `prefixv`, hash-identical, 256 rows): wins 3/4 reps
+    // A/B (OPTIMIZATION_r20 `prefixv`, hash-identical, 256 rows): wins 3/4 reps
     // (one wash), 3.12 -> 2.44 s warm.
     val sets = toks.groupBy("doc_id")
       .agg(collect_list("tok").as("ss"), count(lit(1)).as("n"))
@@ -467,8 +482,8 @@ object Dedup {
     * Why this exists: on corpora with exact-duplicate families the
     * TRUE all-pairs output is quadratic in family size, and in the raw
     * form every family is one giant prefix-join bucket — the ×1000
-    * ScaleProbe corpus (100-member mirror families) aborted the raw
-    * form at >74 GB of shuffle spill (SCALE.md, PrefixJoinProbe r17)
+    * replicated corpus (100-member mirror families) aborted the raw
+    * form at >74 GB of shuffle spill (SCALE.md, r17 prefix-join point)
     * while this decomposition completes. Three legs:
     *
     *  1. exact dedup by normalized text ([[normText]]): equal
@@ -719,10 +734,6 @@ object Dedup {
     * `pairs` must have two BIGINT columns `a`, `b`; rows with a == b are
     * ignored. Output: one row per doc in `docs` — (doc_id, cluster_id,
     * keep), singletons labeling themselves. */
-  /** Rounds taken by the most recent [[duplicateClusters]] call on this
-    * driver — measurement hook for probes (single-threaded use only). */
-  @volatile private[graft] var lastClusterRounds: Int = 0
-
   def duplicateClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxIters: Int = 30): DataFrame = {
     val spark = docs.sparkSession
@@ -735,7 +746,7 @@ object Dedup {
     // the PREVIOUS round's checkpointed edge set every round to feed
     // the convergence test — one redundant job per round. Same exact
     // test (count equality short-circuits the except). Interleaved A/B
-    // (OptProbe `clusters2`, hash-identical, 5000 rows): wins all 4
+    // (OPTIMIZATION_r20 `clusters2`, hash-identical, 5000 rows): wins all 4
     // reps, 3.58 -> 3.42 s warm, 6.71 -> 4.96 s cold.
     var edgeCount = edges.count()
     var converged = edgeCount == 0L
@@ -778,7 +789,6 @@ object Dedup {
       it += 1
     }
     require(converged, s"duplicateClusters did not converge in $maxIters rounds")
-    lastClusterRounds = it
     // at convergence every edge is (member, root); roots label themselves
     val labels = edges.groupBy(col("a").as("doc_id")).agg(min("b").as("lbl"))
     docs.select(col(idCol).cast("long").as("doc_id"))
@@ -816,7 +826,7 @@ object Dedup {
     // join) — without a barrier the whole shingle->signature->band
     // chain re-derives per consumer (the r19 before-plan read the
     // corpus 20x). localCheckpoint materializes each side once;
-    // interleaved A/B (OptProbe `incr`, hash-identical): wins warm
+    // interleaved A/B (OPTIMIZATION_r19 `incr`, hash-identical): wins warm
     // (~9%) and removes the cold-path recompute cliff (22s -> 6s).
     val bandsC = lshBands(minhashSignatures(shC, numPerm), rowsPerBand)
       .localCheckpoint()

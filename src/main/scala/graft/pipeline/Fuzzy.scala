@@ -60,7 +60,7 @@ object Fuzzy {
     // bucket pairs by collect+zip-explode (the candidatePairs shape,
     // r19): ONE exchange on `v` replaces both the occupancy-cap
     // aggregation join and the bucket self-join. Interleaved A/B at
-    // sf0.1 (OptProbe `fuzzy`): 1.6x warm vs the self-join, wins every
+    // sf0.1 (OPTIMIZATION_r19 `fuzzy`): 1.6x warm vs the self-join, wins every
     // rep, hash-identical (1220 rows).
     // The skew cap runs as a WINDOW count over the same v-keyed
     // exchange (r20): one derivation of `variants`, one exchange, and

@@ -150,7 +150,7 @@ object Similarity {
     // NearestKernel nearest-centroid pass over the whole corpus ran
     // twice per mining call (r16 advice — the 'no second pass' comment
     // in gatherCandidates only holds when the input is materialized,
-    // which AnnProbe did for annTopK but this entry point did not).
+    // which the ×N ANN probe did for annTopK but this entry point did not).
     // Bounded cache, not an unbounded one (r17 advice): each mining
     // call evicts the PREVIOUS call's assignment via the atomic swap
     // above, so at most one cached plan is live per JVM instead of one
@@ -457,7 +457,7 @@ object Similarity {
     // The first formulation carried qemb+embedding through the cell
     // self-join AND the dedup exchange — ~2 x dim x 4 bytes per
     // candidate pair row moved twice for a decision that only needs the
-    // ids. Interleaved A/B at sf0.1 (OptProbe `cosdedup`): 2.6x, wins
+    // ids. Interleaved A/B at sf0.1 (OPTIMIZATION_r19 `cosdedup`): 2.6x, wins
     // every rep, hash-identical. At corpus scale the broadcast bound
     // falls back to plain equi-joins — still one payload attach per
     // side instead of payload-through-dedup.
