@@ -171,8 +171,9 @@ object BenchOne {
     * same data dir, at serving params: the large-K sparse formulation
     * (`sparseCentroidThreshold = 0`) and the dense funnel — everywhere
     * else the sparse path only executes on toy oracle corpora. Neither
-    * leg reaches the resident image (the dense leg sets
-    * `localIndexBudgetBytes = 0`, threshold 0 dispatches past it): they
+    * leg reaches a resident image (threshold 0 dispatches past them;
+    * the dense leg's `localIndexBudgetBytes = 0` admits none, so its
+    * two phases run over slices read from parquet, one job each): they
     * measure the DISTRIBUTED plans' scaling, and the serving fast path
     * would absorb a ×100 index (~21 MB packed). */
   val Legs: Map[String, (SparkSession, String) => DataFrame] = {

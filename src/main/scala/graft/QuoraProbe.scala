@@ -12,11 +12,13 @@ import graft.search.{RecallHarness, SearchParams, Searcher}
   * tokens/doc — quora questions are short), indexes it once into /tmp,
   * and times 64-query batches with the serving fast path DISABLED
   * (`localIndexBudgetBytes = 0`), so the number measured is the
-  * DISTRIBUTED dense funnel — the plan that runs when the index no
-  * longer fits one node, i.e. the 100 TB-regime code path.
+  * DISTRIBUTED dense funnel — its two phases over slices read from
+  * parquet, the plan that runs when the index no longer fits one node,
+  * i.e. the 100 TB-regime code path.
   *
-  * Per-stage attribution: the funnel is one DataFrame plan, so stages
-  * are split by differencing parameter variations —
+  * Per-stage attribution: the two phases' jobs carry the descriptions
+  * "search phase A" and "search phase B"; within them, stages are split
+  * by differencing parameter variations —
   * `nFullScores = topK` skips nearly all of S7 (exact rerank), so
   * (default − rerankLight) ≈ rerank cost and rerankLight ≈ S1–S6
   * (GEMM + probe + approx scoring + cut) + fixed per-batch cost.
@@ -132,13 +134,12 @@ object QuoraProbe {
       val qb = RecallHarness.queriesFrom(spark, Batch,
         tokensPerDoc = QueryTokens, dim = Dim, numClusters = 5000).cache()
       qb.count()
-      // batch-64 S1 matrices are 402 MB at K=32768 — raise the sharded
-      // broadcast budget so the batch leg measures the sharded plan too
-      val spb = sp.copy(shardedScoreBudgetBytes = 512L << 20)
-      searcher.search(qb, spb).count() // warm
+      // batch-64 S1 matrices are 402 MB at K=32768, within the default
+      // denseScoreBudgetBytes: the batch runs as one chunk
+      searcher.search(qb, sp).count() // warm
       val tb = (1 to 3).map { _ =>
         val s = System.nanoTime()
-        searcher.search(qb, spb).count()
+        searcher.search(qb, sp).count()
         (System.nanoTime() - s) / 1e9
       }
       println(f"QUORA_PROBE sharded batch=$Batch best=${tb.min}%.2f s  " +

@@ -715,16 +715,15 @@ object SparkEntry {
             x => x.getField("embedding")).as("embeddings"))
       // Correctness twin (Verify only — the graft.verify property, set
       // by graft.Verify.main): replay the SAME 64-query batch through
-      // the DISTRIBUTED funnel with both serving fast paths disabled
+      // the parquet placement (a zero budget admits no resident image)
       // and dump it; the oracle reads the dump back, so the driver's
-      // hash compare proves fast-path == distributed-funnel result
-      // identity (the S9 4-strategy contract, Searcher scaladoc) end to
-      // end instead of recording a rows-only `no_oracle`. Guarded so
+      // hash compare proves driver-image == parquet-placement result
+      // identity (Searcher scaladoc) end to end instead of recording a
+      // rows-only `no_oracle`. Guarded so
       // Bench keeps timing pure serving throughput.
       if (sys.props.get("graft.verify").contains("1"))
         GraftIndex.open(s, path)
-          .search(queries, graft.search.SearchParams(
-            localIndexBudgetBytes = 0, shardedScoreBudgetBytes = 0))
+          .search(queries, graft.search.SearchParams(localIndexBudgetBytes = 0))
           .select(col("query_id"), col("doc_id"), col("rank").cast("long"),
             round(col("score"), 3).as("score"))
           .write.mode("overwrite").parquet(s"$path/qps_funnel")

@@ -85,14 +85,22 @@ object ArrayMath {
       })
   )
 
-  /** Register the functions on an existing session (idempotent). */
-  def register(spark: SparkSession): Unit =
+  /** Register the functions an existing session lacks (check, then a
+    * synchronized re-check, as [[graft.meta.Where.ensureUdfs]] does):
+    * a repeated call replaces no registration, so Spark logs no
+    * "replaced a previously registered function" warning. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     registrations.foreach { case (name, usage, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.ArrayMath", "", name, usage, "", "", "", "", "", "", "built-in"),
-        builder)
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id)) registry.synchronized {
+        if (!registry.functionExists(id))
+          registry.registerFunction(id,
+            new ExpressionInfo("graft.functions.ArrayMath", "", name, usage, "", "", "", "", "", "", "built-in"),
+            builder)
+      }
     }
+  }
 }
 
 /** `SparkSessionExtensions` hook: enable with

@@ -1,5 +1,7 @@
 package graft.search
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -22,71 +24,50 @@ final case class SearchParams(
       * union — no dense Q×K driver matrices, no driver codebook load.
       * The reference batches at the same order of K. */
     sparseCentroidThreshold: Int = 100000,
-    /** Memory budget for the dense path's broadcast score matrices
-      * (Q × tokens × K × 4 bytes). A batch whose matrices exceed this is
-      * split into query chunks that each fit, the funnel runs per chunk
-      * (results are per-query, so chunking is result-identical), and each
-      * chunk's broadcasts are destroyed before the next chunk starts — the
-      * Spark twin of the reference's query batching (search.rs:521-640,
-      * batch_size = 2000). The switch to the sparse path stays keyed on K:
-      * with chunking the batch size Q no longer multiplies into the
+    /** Memory budget for the S1 score matrices the executor placements
+      * broadcast (Q × tokens × K × 4 bytes). The batch is packed, in
+      * query-id order, into chunks of at most [[Searcher.LocalMaxBatch]]
+      * queries whose matrices fit; the two-phase funnel runs per chunk
+      * (results are per query, so chunking is result-identical), and
+      * each chunk's broadcasts are destroyed before the next chunk
+      * starts — the Spark twin of the reference's query batching
+      * (search.rs:521-640, batch_size = 2000). A single query is never
+      * split. The switch to the sparse path stays keyed on K: with
+      * chunking the batch size Q no longer multiplies into the
       * broadcast footprint. */
     denseScoreBudgetBytes: Long = 1L << 30,
-    /** Serving fast path: when the packed index's estimated collected
-      * footprint ([[graft.index.MultiVectorIndex.packedBytesEstimate]])
-      * fits this budget, the index is collected once per Searcher into a
-      * driver-held image, and every batch of up to
-      * [[Searcher.LocalMaxBatch]] queries runs the S1–S8 funnel
-      * in-process on the driver with no Spark job: phase A (S1–S6)
-      * parallel over the queries, or over the tokens of a single query,
-      * then phase B (the S7 rerank) parallel over the surviving docs.
-      * Result-identical to the distributed funnel (same probe/score/cut/
-      * rerank kernels and tie-breaks); what changes is that a warm batch
-      * pays no job instead of ~7 shuffle barriers. The budget bounds the
-      * fast path's estimated DRIVER RESIDENCY — dispatch compares it
-      * against [[Searcher.LocalResidencyFactor]] (3) × the packed-image
-      * estimate, which overstates the held image plus the transient
-      * collect rows (see there). The 768 MB default admits ≤256 MB
-      * images (~10% of the default 8 GB driver heap). Above the budget —
-      * the 100 TB regime — the distributed funnel is the only correct
-      * plan and runs unchanged.
-      * The same budget bounds FOUR resident images: the local packed
-      * index image above, the sharded slices below (sharded dispatch is
-      * gated on this budget too, since its slices are the same
-      * collected-image idea spread across executors), the FTS
-      * artifact's BM25 image ([[graft.fts.FtsIndex]]), which also gates
-      * driver-side keyword/hybrid fusion in [[HybridSearch]], and a
-      * [[graft.GraftIndex]]'s metadata image, which filtered searches
-      * evaluate their condition on. The three DRIVER images share it,
-      * admitted in a fixed order: the semantic image when its residency
-      * ([[Searcher.residentBytes]]) fits; the FTS image when
+    /** Where the dense funnel finds the index, and the budget of every
+      * driver-resident image. When the packed index's estimated driver
+      * residency ([[Searcher.LocalResidencyFactor]] (3) ×
+      * [[graft.index.MultiVectorIndex.packedBytesEstimate]], which
+      * overstates the held image plus the transient collect rows) fits
+      * it, the index is collected once per Searcher into a driver-held
+      * image, and every batch of up to [[Searcher.LocalMaxBatch]]
+      * queries runs both funnel phases in-process with no Spark job.
+      * The 768 MB default admits ≤256 MB images (~10% of the default
+      * 8 GB driver heap). Otherwise the funnel runs on executor slices:
+      * with a budget above 0, doc-id slices cached across calls (see
+      * shardedSlices), provided a subset's ids fit the budget too (the
+      * slices receive them as a set); with 0, or a larger subset,
+      * slices read from parquet per call, which hold nothing between
+      * calls and collect no id list — the plan for an index no node
+      * can hold. All placements return the same rows.
+      * The same budget bounds the three DRIVER images, admitted in a
+      * fixed order: the semantic image when its residency
+      * ([[Searcher.residentBytes]]) fits; the FTS artifact's BM25 image
+      * ([[graft.fts.FtsIndex]], which also gates driver-side
+      * keyword/hybrid fusion in [[HybridSearch]]) when
       * [[graft.fts.FtsIndex.residentBytesEstimate]] plus the semantic
-      * charge fits; the metadata image when
-      * [[graft.GraftIndex.metadataBytesEstimate]] plus both charges fits
-      * (each image is charged whenever it is admitted), so their
-      * combined estimate never exceeds the budget. 0 disables all four;
-      * to disable only the sharded path set shardedScoreBudgetBytes
-      * to 0. */
+      * charge fits; a [[graft.GraftIndex]]'s metadata image, which
+      * filtered searches evaluate their condition on, when
+      * [[graft.GraftIndex.metadataBytesEstimate]] plus both charges
+      * fits. Each image is charged whenever it is admitted, so their
+      * combined estimate never exceeds the budget. 0 admits no resident
+      * image at all. */
     localIndexBudgetBytes: Long = 768L << 20,
-    /** Sharded serving fast path: when the packed image EXCEEDS the
-      * local budget (too big to collect to one node) but the batch is
-      * serving-shaped, the image is split into doc-id slices held
-      * RESIDENT across calls (cached RDD partitions — on a cluster each
-      * executor keeps its slices in memory), and the funnel runs as TWO
-      * shuffle-free jobs over the slices: phase A (S3–S6 per slice, the
-      * global cut merged driver-side — sound because a global survivor
-      * is always within its slice's local top-n) and phase B (S7 doc-
-      * grouped on the slice owning each survivor). The S1 GEMM runs
-      * once per query on the driver (token-parallel) and is broadcast,
-      * like the distributed funnel's one-stage S1. This budget bounds
-      * that broadcast (batch × tokens × K × 4B); bigger batches take
-      * the distributed funnel, whose chunking bounds the same matrices.
-      * Result-identical to both other paths (same kernels, same global
-      * cut and tie-breaks). 0 disables sharded dispatch. */
-    shardedScoreBudgetBytes: Long = 64L << 20,
-    /** Slice count for the sharded fast path; 0 = the session's default
-      * parallelism. The slice layout is cached per Searcher (first call
-      * wins; a changed value rebuilds the resident image). */
+    /** Slice count of the cached executor slices; 0 = the session's
+      * default parallelism. The slice layout is cached per Searcher
+      * (first call wins; a changed value rebuilds the resident image). */
     shardedSlices: Int = 0,
     /** S7 exact-rerank precision. Default (true): f32 with a SIMD /
       * unrolled dot ([[graft.core.MaxSim.scoreFast]]) — the reference's
@@ -98,31 +79,37 @@ final case class SearchParams(
       * the contract path, while a default-constructed SearchParams
       * serves at the reference's own arithmetic. Ranking equivalence
       * between the two kernels is unit-tested. Honored identically by
-      * the fast path and both distributed funnels (dense and sparse),
+      * every placement of the dense funnel and by the sparse funnel,
       * which stay result-identical at either setting. */
     rerankFloat32: Boolean = true
 )
 
 /** Batch late-interaction search: the reference's per-query funnel
-  * (search.rs:327-516) re-expressed as one DataFrame pipeline over ALL
-  * queries at once, so per-stage fixed costs amortize (SURVEY §3.1: the
-  * only real shuffles are the IVF join, the per-(query,doc) grouping, and
-  * the final per-query top-k window).
-  *
-  * Queries are collected and broadcast (a query batch is small — tens to
-  * thousands of rows); the index side stays fully distributed. The
-  * query-token × centroid score matrices (the S1 GEMM) are computed ONCE
-  * in a tiny stage over the query batch and broadcast, then reused by S2
+  * (search.rs:327-516) over ALL queries of a batch at once, in two
+  * phases — the shape of distributed top-k with per-partition pruning
+  * (REPOSE, ICDE 2021). Phase A runs S1–S6 per index slice and keeps
+  * each slice's top-n survivors per query; merging them gives the
+  * global S6 cut. Phase B (S7) decodes each surviving doc once, on the
+  * slice holding it, and exact-scores it for every query that kept it;
+  * the driver assembles S8. The S1 query-token × centroid score
+  * matrices are computed once per query on the driver and reused by S2
   * probing and S5 approximate scoring — the reference computes this
-  * matrix once per query too (search.rs:345); recomputing it per
-  * partition would be P× redundant GEMM work.
+  * matrix once per query too (search.rs:345).
+  *
+  * The slices come from one of three placements, chosen by
+  * [[SearchParams.localIndexBudgetBytes]]: the driver-held image (one
+  * slice, no Spark job), doc-id slices cached on the executors, or
+  * slices read per call from the `doc_codes` and `tokens` parquet (one
+  * job per phase, no corpus-sized shuffle). Above
+  * [[SearchParams.sparseCentroidThreshold]] centroids the sparse funnel
+  * runs instead, as one DataFrame pipeline.
   *
   * Open-handle semantics: a Searcher (like its MultiVectorIndex, whose
   * manifest/codec are lazily cached) snapshots the index when first
-  * used — the fast path's collected image included. After an update
-  * lifecycle (append/delete/rebuild), open a fresh handle, as the
-  * reference reopens its index; only the deferred-delete tombstone
-  * table is re-read per search call on every path.
+  * used — the cached images included. After an update lifecycle
+  * (append/delete/rebuild), open a fresh handle, as the reference
+  * reopens its index; only the deferred-delete tombstone table is
+  * re-read per search call on every path.
   */
 final class Searcher(index: MultiVectorIndex) {
   private val spark: SparkSession = index.spark
@@ -148,15 +135,17 @@ final class Searcher(index: MultiVectorIndex) {
     // bounded by the corpus, which fits the budget by dispatch — and the
     // subset's count and eligible codes are read from them and the image.
     if (Searcher.servesLocally(index, params, queryMap.size)) {
+      requireFresh()
       val img = localImage
       val ids = subset.map(_.select("doc_id").as[Long].collect())
       val (nProbe, eligible) = probeScope(params, k, ids.map(_.length.toLong)) { mask =>
         ids.foreach(_.foreach(d => img.docCodes.get(d).foreach(_.foreach(mask(_) = true))))
       }
-      return searchResident(Left(img), queryMap, params, nProbe, eligible, ids)
+      return searchResident(Left(img), queryMap, params, nProbe, eligible, filterSets(ids))
+        .toDF("query_id", "doc_id", "score", "rank")
     }
 
-    // Subset counted ONCE (drives sharded dispatch, probe scaling, and
+    // Subset counted ONCE (drives the placement, probe scaling, and
     // every subset join's plan — a broad filter selecting 10⁹ ids must
     // never be force-broadcast OR driver-collected). The eligible codes
     // come from the doc_codes artifact (one size-planned semi-join),
@@ -176,74 +165,45 @@ final class Searcher(index: MultiVectorIndex) {
     if (k > params.sparseCentroidThreshold)
       return searchSparse(queryMap, params, counted, nProbe, eligible)
 
-    // Sharded serving fast path: the image is too big to collect to ONE
-    // node (it failed the dispatch above) but the batch is serving-
-    // shaped — serve from doc-sliced resident images instead of paying
-    // the distributed funnel's shuffle barriers. Bounded by the S1
-    // broadcast footprint (batch × tokens × K × 4B) AND — when a subset
-    // filter is present — by its driver/broadcast residency (per-id
-    // bytes of the HashSet the slices receive): the sharded path exists
-    // because the CORPUS doesn't fit one node, so a corpus-sized subset
-    // must route to the distributed funnel, whose subset joins are
-    // size-planned.
-    if (params.localIndexBudgetBytes > 0 && params.shardedScoreBudgetBytes > 0 &&
-        queryMap.size <= Searcher.LocalMaxBatch &&
-        queryMap.valuesIterator.map(_.length.toLong).sum * k * 4L <=
-          params.shardedScoreBudgetBytes &&
-        counted.forall(_._2 * Plan.SubsetBytesPerId <= params.localIndexBudgetBytes)) {
-      val slices = if (params.shardedSlices > 0) params.shardedSlices
-        else math.max(2, spark.sparkContext.defaultParallelism)
-      return searchResident(Right(shardedImage(slices)), queryMap, params,
-        nProbe, eligible, counted.map(_._1.as[Long].collect()))
-    }
+    // Executor placement. The cached slices serve when the budget admits
+    // resident images at all and a subset's ids fit it (the slices
+    // receive them as a set): they exist because the CORPUS does not fit
+    // one node, so a corpus-sized subset reads parquet slices instead,
+    // whose subset join is size-planned.
+    val (slices, filters) =
+      if (params.localIndexBudgetBytes > 0 &&
+          counted.forall(_._2 * Plan.SubsetBytesPerId <= params.localIndexBudgetBytes)) {
+        requireFresh()
+        val n = if (params.shardedSlices > 0) params.shardedSlices
+          else math.max(2, spark.sparkContext.defaultParallelism)
+        lazy val img = shardedImage(n)
+        (new Searcher.Slices(img, _ => img), filterSets(counted.map(_._1.as[Long].collect())))
+      } else (parquetSlices(counted), (None, new java.util.HashSet[java.lang.Long]()))
+    chunks(queryMap, k, params.denseScoreBudgetBytes)
+      .flatMap(c => searchResident(Right(slices), c, params, nProbe, eligible, filters))
+      .toDF("query_id", "doc_id", "score", "rank")
+  }
 
-    // Memory bounding (search.rs:521-640, batch_size = 2000): the dense
-    // funnel's footprint is the broadcast score matrices —
-    // Q × tokens × K × 4 bytes — so the batch is greedily packed (in
-    // sorted-qid order, deterministic) into chunks that each fit
-    // `denseScoreBudgetBytes`. A single query is never split: its matrix
-    // is at most maxTokens × K floats, ~13 MB at the K=100k dense
-    // ceiling. Every per-query stage (probe, cut, top-k window) makes a
-    // chunked run result-identical to the unchunked one.
-    val budget = math.max(params.denseScoreBudgetBytes, 1L)
-    val qids = queryMap.keys.toSeq.sorted
-    def bytesOf(qid: Long): Long = queryMap(qid).length.toLong * k * 4L
-    val chunks: Seq[Seq[Long]] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
-      val cur = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var curBytes = 0L
-      qids.foreach { q =>
-        val b = bytesOf(q)
-        if (cur.nonEmpty && curBytes + b > budget) {
-          out += cur.toSeq; cur.clear(); curBytes = 0L
-        }
-        cur += q; curBytes += b
+  /** Query chunks of the executor placements (search.rs:521-640,
+    * batch_size = 2000): packed greedily in query-id order, each at most
+    * [[Searcher.LocalMaxBatch]] queries whose S1 matrices
+    * (tokens × K × 4 bytes) fit `budget`. A single query is never split:
+    * its matrix is at most maxTokens × K floats, ~13 MB at the K = 100k
+    * dense ceiling. */
+  private def chunks(queryMap: Map[Long, Array[Array[Float]]], k: Int,
+      budget: Long): Seq[Map[Long, Array[Array[Float]]]] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Array[Array[Float]]]]
+    var cur = Map.empty[Long, Array[Array[Float]]]
+    var curBytes = 0L
+    queryMap.keys.toSeq.sorted.foreach { q =>
+      val b = queryMap(q).length.toLong * k * 4L
+      if (cur.nonEmpty && (curBytes + b > budget || cur.size == Searcher.LocalMaxBatch)) {
+        out += cur; cur = Map.empty; curBytes = 0L
       }
-      if (cur.nonEmpty) out += cur.toSeq
-      out.toSeq
+      cur += q -> queryMap(q); curBytes += b
     }
-
-    if (chunks.size <= 1)
-      searchDenseChunk(queryMap, params, counted, nProbe, eligible)._1
-    else {
-      // Chunked run executes eagerly, one chunk at a time: each chunk's
-      // result is tiny (≤ chunkQueries × topK rows) so it collects to the
-      // driver, and the chunk's broadcasts are destroyed before the next
-      // chunk's are built — peak footprint is ONE chunk's matrices, not
-      // the whole batch's.
-      var schema: org.apache.spark.sql.types.StructType = null
-      val allRows = chunks.flatMap { cq =>
-        val cmap: Map[Long, Array[Array[Float]]] =
-          cq.iterator.map(q => q -> queryMap(q)).toMap
-        val (df, bcs) = searchDenseChunk(cmap, params, counted, nProbe, eligible)
-        schema = df.schema
-        val rows = df.collect()
-        bcs.foreach(_.destroy())
-        rows
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(allRows.toList.asJava, schema)
-    }
+    if (cur.nonEmpty) out += cur
+    out.toSeq
   }
 
   private def collectQueries(queries: DataFrame): Map[Long, Array[Array[Float]]] =
@@ -275,9 +235,9 @@ final class Searcher(index: MultiVectorIndex) {
     (nProbe, eligible)
   }
 
-  /** S3 + S4 of the distributed funnels: gather the probed IVF lists
-    * (`probed(query_id, code)`, join-hinted by the caller), dedup the
-    * candidates, restrict them to the subset (planned by its count) and
+  /** S3 + S4 of the sparse funnel and the f64 oracle twin: gather the
+    * probed IVF lists (`probed(query_id, code)`, join-hinted by the
+    * caller), dedup the candidates, restrict them to the subset (planned by its count) and
     * drop deferred-delete tombstones (anti-join on the candidate set —
     * O(tombstones), not O(corpus)). */
   private def candidates(probed: DataFrame, counted: Option[(DataFrame, Long)]): DataFrame = {
@@ -291,7 +251,7 @@ final class Searcher(index: MultiVectorIndex) {
     index.tombstonesOpt.fold(inSubset)(tomb => inSubset.join(tomb, Seq("doc_id"), "left_anti"))
   }
 
-  /** S6 funnel cut of the distributed funnels: per query, the top
+  /** S6 funnel cut of the sparse funnel: per query, the top
     * `nDecompress` candidates by approx score, doc ascending on ties
     * (search.rs:460-469). */
   private def cut(approx: DataFrame, nDecompress: Int): DataFrame =
@@ -301,7 +261,7 @@ final class Searcher(index: MultiVectorIndex) {
       .filter(col("_r") <= nDecompress)
       .select("query_id", "doc_id")
 
-  /** S7 input of the distributed funnels: the tokens of each surviving
+  /** S7 input of the sparse funnel: the tokens of each surviving
     * doc with `qids`, the queries that kept it. Survivors are bounded by
     * queries × n_full/4 rows — a driver-known bound, so the tokens join
     * is planned from it: broadcast for typical batches (the tokens table
@@ -311,121 +271,13 @@ final class Searcher(index: MultiVectorIndex) {
     index.tokens.join(Plan.broadcastIfBounded(
       survivors.groupBy("doc_id").agg(collect_list("query_id").as("qids")), bound), "doc_id")
 
-  /** S8 of the distributed funnels: final per-query top-k, score desc,
-    * doc asc. */
+  /** S8 of the sparse funnel and brute force: final per-query top-k,
+    * score desc, doc asc. */
   private def finalTopK(exact: DataFrame, k: Int): DataFrame =
     exact
       .withColumn("rank", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("score").desc, col("doc_id").asc)))
       .filter(col("rank") <= k)
-
-  /** One dense-funnel pass over a query chunk whose score matrices fit
-    * the memory budget. Returns the (lazy) result plus the broadcasts it
-    * created, so a chunked caller can destroy them between chunks. */
-  private def searchDenseChunk(
-      queryMap: Map[Long, Array[Array[Float]]],
-      params: SearchParams,
-      counted: Option[(DataFrame, Long)],
-      nProbe: Int,
-      eligible: Option[Array[Boolean]]
-  ): (DataFrame, Seq[org.apache.spark.broadcast.Broadcast[_]]) = {
-    val codec = index.codec
-    val dim = codec.dim
-    val k = codec.numCentroids
-    val rerank32 = params.rerankFloat32
-    val queriesBc = spark.sparkContext.broadcast(queryMap)
-    val codecBc = spark.sparkContext.broadcast(codec)
-
-    // S1: per-query centroid-score matrices, computed once in a tiny
-    // distributed stage and collected (Q × n_tokens × K floats; for K
-    // beyond ~100k switch to the reference's sparse candidate-codes-only
-    // variant, search.rs:256-302).
-    val dimLocal = dim
-    val kLocal = k
-    val qids = queryMap.keys.toSeq.sorted
-    def scoreOne(emb: Array[Array[Float]], cents: Array[Float]): Array[Array[Float]] =
-      Searcher.centroidScores(emb, cents, kLocal, dimLocal)
-    // Small batches score on the driver (a Spark job would be pure
-    // overhead) but in PARALLEL across driver cores — single-threaded
-    // this was the dominant cost of a warm 64-query batch at K=4096
-    // (4.3 GFLOPs ≈ 2 s, measured round 9). Large batches run as one
-    // tiny distributed stage.
-    val scoreMatrices: scala.collection.Map[Long, Array[Array[Float]]] =
-      if (qids.size <= 64)
-        qids.zip(Searcher.parMap(qids.toIndexedSeq)(q =>
-          scoreOne(queryMap(q), codec.centroids))).toMap
-      else
-        spark.sparkContext
-          .parallelize(qids, math.min(qids.size, 32).max(1))
-          .map(qid => (qid, scoreOne(queriesBc.value(qid), codecBc.value.centroids)))
-          .collectAsMap()
-    val scoresBc = spark.sparkContext.broadcast(
-      scoreMatrices.toMap: Map[Long, Array[Array[Float]]])
-
-    // S2: per token top-nProbe centroids (bounded-heap partial selection);
-    // threshold filter keeps a centroid if its max score across ALL query
-    // tokens meets it (search.rs:417-425 — not just the tokens that
-    // selected it). Driver-side: the matrices are already here.
-    val probedPairs: Seq[(Long, Int)] = qids.flatMap { qid =>
-      Searcher.probeCentroids(
-        scoreMatrices(qid), nProbe, params.centroidScoreThreshold, eligible)
-        .map(c => (qid, c))
-    }
-
-    // S3 + S4: gather IVF lists, dedup, subset and tombstone restriction
-    val cands = candidates(broadcast(probedPairs.toDF("query_id", "code")), counted)
-
-    // S5: approximate (codes-only) MaxSim per candidate, reusing the
-    // broadcast score matrices (no per-partition recompute).
-    val approx = cands
-      .join(docCodes, "doc_id")
-      .select("doc_id", "query_id", "codes")
-      .as[(Long, Long, Array[Int])]
-      .mapPartitions { rows =>
-        val scores = scoresBc.value
-        rows.map { case (docId, qid, codes) =>
-          (qid, docId, MaxSim.approxScore(scores(qid), codes))
-        }
-      }
-      .toDF("query_id", "doc_id", "approx_score")
-
-    // S6: funnel cut — top n_full_scores by approx, then n_full/4 (>= topK)
-    // go to decompression (search.rs:460-469).
-    val nDecompress = Searcher.nDecompress(params)
-    val survivors = cut(approx, nDecompress)
-
-    // S7: exact MaxSim on decompressed survivors. Grouped by DOC, not by
-    // (query, doc): with a dense rerank set (n_full/4 docs per query and
-    // overlapping survivor lists) a per-pair grouping decodes the same
-    // doc once per query that reranks it (12.6× redundant decode at the
-    // QPS twin's shape, measured round 9) and shuffles its packed
-    // residuals that many times. Each surviving doc is decoded ONCE and
-    // scored against every query in its survivor list (queries come from
-    // the broadcast, so the fan-out adds no shuffled bytes).
-    val exact = survivorTokens(survivors, qids.size.toLong * nDecompress)
-      .groupBy("doc_id")
-      .agg(first(col("qids")).as("qids"),
-        collect_list(struct(col("tok"), col("code"), col("residual"))).as("toks"))
-      .as[(Long, Array[Long], Array[(Int, Int, Array[Byte])])]
-      .mapPartitions { rows =>
-        val codecV = codecBc.value
-        val queriesV = queriesBc.value
-        rows.flatMap { case (docId, docQids, toks) =>
-          val docEmb = toks.sortBy(_._1).map { case (_, code, packed) =>
-            codecV.decode(code, packed)
-          }
-          docQids.iterator.map { qid =>
-            val s = if (rerank32) MaxSim.scoreFast(queriesV(qid), docEmb).toDouble
-                    else MaxSim.scoreDouble(queriesV(qid), docEmb)
-            (qid, docId, s)
-          }
-        }
-      }
-      .toDF("query_id", "doc_id", "score")
-
-    // S8: final top-k.
-    (finalTopK(exact, params.topK), Seq(queriesBc, codecBc, scoresBc))
-  }
 
   /** The sparse/batched funnel for large centroid counts
     * (search.rs:518-600): result-identical to the dense path — probe
@@ -445,7 +297,8 @@ final class Searcher(index: MultiVectorIndex) {
     *  - S7: survivors' tokens decode against centroid rows fetched by
     *    join, not a broadcast codebook.
     *
-    * S3/S4, S6 and S8 are the dense path's own steps.
+    * S3/S4, S6 and S8 are the DataFrame steps above: the same
+    * semantics and tie-breaks as the dense funnel's per-slice kernels.
     */
   private def searchSparse(
       queryMap: Map[Long, Array[Array[Float]]],
@@ -520,14 +373,14 @@ final class Searcher(index: MultiVectorIndex) {
       .select(col("key._1").as("query_id"), col("key._2").as("doc_id"),
         col("approx_score"))
 
-    // S6: funnel cut — same as dense
+    // S6: funnel cut — the dense funnel's order and tie-break
     val nDecompress = Searcher.nDecompress(params)
     val survivors = cut(approx, nDecompress)
 
     // S7: survivors' tokens decode against centroid rows fetched by join
     // (no broadcast codebook), then exact MaxSim — kernel choice follows
-    // params.rerankFloat32 like the dense/fast paths, so all three
-    // funnels stay result-identical at any given setting. Grouped by
+    // params.rerankFloat32 like the dense funnel, so both funnels stay
+    // result-identical at any given setting. Grouped by
     // DOC like the dense path: a per-(query, doc) grouping decoded the
     // same doc once per query that reranked it and shuffled the decoded
     // floats that many times (the 12.6× redundancy the dense S7 was
@@ -567,25 +420,58 @@ final class Searcher(index: MultiVectorIndex) {
   }
 
   // ---------------------------------------------------------------------
-  // Resident serving: one two-phase funnel over a resident index image —
-  // the driver-held image (one slice, dispatch:
-  // SearchParams.localIndexBudgetBytes) or doc-id slices cached on the
-  // executors (dispatch: SearchParams.shardedScoreBudgetBytes).
+  // The two-phase funnel and its index placements: the driver-held
+  // image, doc-id slices cached on the executors, or slices read from
+  // parquet per call (dispatch: SearchParams.localIndexBudgetBytes).
   // ---------------------------------------------------------------------
 
   /** Manifest build id snapshotted EAGERLY when this Searcher is
     * constructed — one stamp per handle, checked by the stale-image
-    * guard of every resident call and NEVER re-captured. Stamping at
-    * image-build time (the pre-r15 shape) had two holes: a sharded
-    * image rebuild on a slice-count change re-stamped with the POST-
-    * flip build id and served the stale lazy codec/DataFrame snapshots
-    * without tripping the guard, and an index flip between handle
-    * construction and the first image build was absorbed the same way.
-    * With an eager stamp, any flip after construction trips the guard
-    * (worst case a false positive when nothing stale was read yet —
-    * the caller reopens, which is the documented contract anyway). */
+    * guard of every cached-placement call and NEVER re-captured.
+    * Stamping at image-build time (the pre-r15 shape) had two holes: a
+    * sharded image rebuild on a slice-count change re-stamped with the
+    * POST-flip build id and served the stale lazy codec/DataFrame
+    * snapshots without tripping the guard, and an index flip between
+    * handle construction and the first image build was absorbed the
+    * same way. With an eager stamp, any flip after construction trips
+    * the guard (worst case a false positive when nothing stale was read
+    * yet — the caller reopens, which is the documented contract
+    * anyway). */
   private val snapshotStamp: String =
     graft.index.MultiVectorIndex.readBuildId(index.path)
+
+  /** Refuse to serve from a stale cached image: compact()/rebuild
+    * rewrite the manifest (and renumber ids), and silently answering
+    * from the pre-rewrite image would resurrect deleted docs in the OLD
+    * id space. Deferred deletes don't touch the manifest and stay
+    * correct — tombstones are re-read on every call. Keyed on the
+    * manifest's build_id (a per-write UUID), not (mtime,length): a
+    * rebuild within filesystem timestamp granularity producing a
+    * same-length manifest must still trip the guard. The parquet
+    * placement caches nothing and needs no guard. */
+  private def requireFresh(): Unit = {
+    val nowStamp = graft.index.MultiVectorIndex.readBuildId(index.path)
+    if (snapshotStamp != nowStamp)
+      throw new IllegalStateException(
+        s"index at ${index.path} changed on disk since this Searcher loaded " +
+        s"its image (manifest build id $snapshotStamp -> $nowStamp); " +
+        "open a fresh Searcher/GraftIndex handle after updates")
+  }
+
+  /** The S4 filter sets of the cached placements: the subset ids, and
+    * the deferred-delete tombstones, re-read per call (they can grow
+    * after an image was built). */
+  private def filterSets(subsetIds: Option[Array[Long]])
+      : (Option[java.util.HashSet[java.lang.Long]], java.util.HashSet[java.lang.Long]) = {
+    val subsetSet = subsetIds.map { ids =>
+      val s = new java.util.HashSet[java.lang.Long](ids.length * 2)
+      ids.foreach(s.add(_))
+      s
+    }
+    val tombstones = new java.util.HashSet[java.lang.Long]()
+    index.tombstonesOpt.foreach(_.select("doc_id").as[Long].collect().foreach(tombstones.add(_)))
+    (subsetSet, tombstones)
+  }
 
   /** Collected-once image of a small index — IVF lists, per-doc code
     * arrays (tok order, the S5 input), packed token residuals (tok
@@ -608,23 +494,20 @@ final class Searcher(index: MultiVectorIndex) {
     Searcher.LocalIndexImage(ivfM, codesM, toksM)
   }
 
-  /** Codec broadcast shared across sharded calls (the codec is
-    * immutable per index) — a repeated warm batch must not pay a fresh
-    * broadcast each call. */
-  private lazy val codecBcShared
-      : org.apache.spark.broadcast.Broadcast[graft.index.Codec] =
+  /** Codec broadcast shared across executor-placement calls (the codec
+    * is immutable per index) — a repeated warm batch must not pay a
+    * fresh broadcast each call. */
+  private lazy val codecBcShared: Broadcast[graft.index.Codec] =
     spark.sparkContext.broadcast(index.codec)
 
-  @volatile private var shardedImageCache
-      : (Int, org.apache.spark.rdd.RDD[Searcher.LocalIndexImage]) = _
+  @volatile private var shardedImageCache: (Int, RDD[Searcher.LocalIndexImage]) = _
 
   /** Doc-sliced index image, one [[Searcher.LocalIndexImage]] per
     * partition (slice = doc_id % slices — dense build ids balance), each
     * holding only its docs' IVF postings, code arrays, and packed
     * residuals. Built with ONE co-partitioned shuffle of the three index
     * tables, then cached; the corpus never reaches the driver. */
-  private def shardedImage(slices: Int)
-      : org.apache.spark.rdd.RDD[Searcher.LocalIndexImage] = synchronized {
+  private def shardedImage(slices: Int): RDD[Searcher.LocalIndexImage] = synchronized {
     if (shardedImageCache != null && shardedImageCache._1 == slices)
       shardedImageCache._2
     else {
@@ -666,107 +549,130 @@ final class Searcher(index: MultiVectorIndex) {
     }
   }
 
-  /** The dense funnel over a resident image in two phases, the shape of
-    * distributed top-k with per-partition pruning (per-slice top-n, a
-    * global merge, a rerank on the owning slice). `image` is either the
-    * driver-held image — ONE slice, both phases in-process with no
-    * Spark job — or the cached executor slices, one shuffle-free job
-    * per phase. Phase A runs S3–S6 per slice and returns each slice's
-    * top-n survivors with their approx scores; the driver finishes the
-    * GLOBAL S6 cut by merging them — equal to the unsliced cut because
-    * every global survivor is inside its slice's local top-n under the
-    * same (approx desc, doc asc) order. Phase B decodes each global
-    * survivor ONCE (on the slice owning it) and exact-scores it for
-    * every query that kept it; the driver assembles S8. Same kernels,
-    * float order and tie-breaks as the distributed funnel, so results
-    * are bit-identical — asserted by IndexSearchSpec's equivalence legs
-    * and every search oracle. The tombstone table is re-read per call
-    * (it can grow after the image was built); the image itself is
-    * immutable build output. */
+  /** Slices read from parquet for ONE call, cached nowhere: an index no
+    * node can hold, nor its ids. Phase A's slices are the `doc_codes`
+    * input partitions — restricted first to the subset (a semi-join
+    * planned by its count) and past the tombstones (an anti-join), so
+    * neither is collected — each inverted into a slice-local IVF, which
+    * equals the build's IVF gather over those docs (IVF postings are the
+    * distinct (code, doc) pairs of the tokens: fsck's `ivf_pairs`).
+    * Phase B's slices hold only the global survivors' tokens, filtered
+    * by the broadcast survivor set before they leave the scan and
+    * grouped by doc: the one shuffle moves survivor tokens only. */
+  private def parquetSlices(counted: Option[(DataFrame, Long)]): Searcher.Slices = {
+    val inSubset = counted.fold(docCodes) { case (ids, n) =>
+      docCodes.join(Plan.broadcastIfBounded(ids, n), Seq("doc_id"), "left_semi")
+    }
+    val live = index.tombstonesOpt.fold(inSubset)(inSubset.join(_, Seq("doc_id"), "left_anti"))
+    new Searcher.Slices(
+      live.select("doc_id", "codes").as[(Long, Array[Int])].rdd.mapPartitions { rows =>
+        val ivf = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.ArrayBuilder[Long]]
+        val codes = Map.newBuilder[Long, Array[Int]]
+        rows.foreach { case (d, cs) =>
+          codes += d -> cs
+          cs.distinct.foreach(c => ivf.getOrElseUpdate(c, Array.newBuilder[Long]) += d)
+        }
+        Iterator.single(Searcher.LocalIndexImage(
+          ivf.iterator.map { case (c, ds) => c -> ds.result() }.toMap, codes.result(), Map.empty))
+      },
+      survivorsBc => {
+        val survives = udf((d: Long) => survivorsBc.value.contains(d))
+        index.tokens.filter(survives(col("doc_id")))
+          .select("doc_id", "tok", "code", "residual")
+          .as[(Long, Int, Int, Array[Byte])].rdd
+          .map { case (d, t, c, r) => (d, (t, c, r)) }
+          .groupByKey()
+          .mapPartitions { docs =>
+            Iterator.single(Searcher.LocalIndexImage(Map.empty, Map.empty, docs.map {
+              case (d, rows) => d -> rows.toArray.sortBy(_._1).map(r => (r._2, r._3))
+            }.toMap))
+          }
+      })
+  }
+
+  /** `f` under the Spark job description `name`, the caller's own
+    * restored afterwards: names a funnel phase's jobs for a traced run,
+    * and runs no job itself. */
+  private def phase[A](name: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try f finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
+  /** The dense funnel in two phases over one placement's slices, the
+    * shape of distributed top-k with per-partition pruning (per-slice
+    * top-n, a global merge, a rerank on the owning slice). `image` is
+    * either the driver-held image — ONE slice, both phases in-process
+    * with no Spark job — or executor slices, one job per phase. Phase A
+    * runs S3–S6 per slice and keeps each slice's top-n survivors with
+    * their approx scores; merging them is the GLOBAL S6 cut, equal to
+    * the unsliced cut because every global survivor is inside its
+    * slice's local top-n under the same (approx desc, doc asc) order.
+    * Phase B decodes each global survivor ONCE (on the slice holding it)
+    * and exact-scores it for every query that kept it; the driver
+    * assembles S8. One kernel set, float order and tie-break for every
+    * placement, so their results are bit-identical — asserted by
+    * IndexSearchSpec's equivalence legs and every search oracle.
+    * `filters` are the S4 sets phase A applies per candidate (the
+    * parquet placement applies its filters while reading instead).
+    * Returns (query_id, doc_id, score, rank) rows. */
   private def searchResident(
-      image: Either[Searcher.LocalIndexImage, org.apache.spark.rdd.RDD[Searcher.LocalIndexImage]],
+      image: Either[Searcher.LocalIndexImage, Searcher.Slices],
       queryMap: Map[Long, Array[Array[Float]]],
       params: SearchParams,
       nProbe: Int,
       eligible: Option[Array[Boolean]],
-      subsetIds: Option[Array[Long]]): DataFrame = {
-    // Refuse to serve from a stale image: compact()/rebuild rewrite the
-    // manifest (and renumber ids), and silently answering from the
-    // pre-rewrite image would resurrect deleted docs in the OLD id
-    // space. Deferred deletes don't touch the manifest and stay
-    // correct — tombstones are re-read below on every call. Keyed on
-    // the manifest's build_id (a per-write UUID), not (mtime,length):
-    // a rebuild within filesystem timestamp granularity producing a
-    // same-length manifest must still trip the guard.
-    val nowStamp = graft.index.MultiVectorIndex.readBuildId(index.path)
-    if (snapshotStamp != nowStamp)
-      throw new IllegalStateException(
-        s"index at ${index.path} changed on disk since this Searcher loaded " +
-        s"its image (manifest build id $snapshotStamp -> $nowStamp); " +
-        "open a fresh Searcher/GraftIndex handle after updates")
-
+      filters: (Option[java.util.HashSet[java.lang.Long]], java.util.HashSet[java.lang.Long])
+  ): Seq[(Long, Long, Double, Int)] = {
     val cdc = index.codec
     val qids: IndexedSeq[Long] = queryMap.keys.toIndexedSeq.sorted
-    val subsetSet: Option[java.util.HashSet[java.lang.Long]] = subsetIds.map { ids =>
-      val s = new java.util.HashSet[java.lang.Long](ids.length * 2)
-      ids.foreach(s.add(_))
-      s
-    }
-    val tombstones: java.util.HashSet[java.lang.Long] = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      index.tombstonesOpt.foreach(
-        _.select("doc_id").as[Long].collect().foreach(s.add(_)))
-      s
-    }
+    val (subsetSet, tombstones) = filters
     val nDec = Searcher.nDecompress(params)
     val rerank32 = params.rerankFloat32
-    // S1 + S2 for one query: its centroid-score matrix and probe set
-    def probe(qid: Long, parallelTokens: Boolean): (Array[Array[Float]], Seq[Int]) = {
+    // S1 + S2 for one query: its centroid-score matrix and probe set,
+    // parallel over the tokens of a single query
+    def probe(qid: Long): (Array[Array[Float]], Seq[Int]) = {
       val m = Searcher.centroidScores(queryMap(qid), cdc.centroids, cdc.numCentroids,
-        cdc.dim, parallel = parallelTokens)
+        cdc.dim, parallel = qids.size == 1)
       (m, Searcher.probeCentroids(m, nProbe, params.centroidScoreThreshold, eligible))
     }
     // every broadcast of this call, destroyed once its results are on
     // the driver — a warm serving loop must not accumulate blocks
-    val bcs = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
-    def bc[T: scala.reflect.ClassTag](v: T): org.apache.spark.broadcast.Broadcast[T] = {
+    val bcs = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
+    def bc[T: scala.reflect.ClassTag](v: T): Broadcast[T] = {
       val b = spark.sparkContext.broadcast(v)
       bcs += b
       b
     }
     try {
-      // Phase A — S1–S6, NO decode: each (query, slice)'s survivors
-      // with their approx scores
-      val sliceSurvivors: Seq[(Long, Array[(Long, Float)])] = image match {
+      // Phase A — S1–S6, NO decode: per query, the global cut's
+      // survivors with their approx scores
+      val survivors: Iterable[(Long, Array[(Long, Float)])] = image match {
         case Left(im) =>
-          // in-process, S1 per query in the loop: parallel over queries,
-          // or over the tokens of a single query
+          // in-process, S1 per query in the loop, parallel over queries
           Searcher.parMap(qids) { qid =>
-            val (m, probed) = probe(qid, parallelTokens = qids.size == 1)
+            val (m, probed) = probe(qid)
             qid -> Searcher.funnelSurvivorsScored(im, m, probed, subsetSet, tombstones, nDec)
           }
         case Right(slices) =>
-          // S1 + S2 once per query on the driver, token-parallel (the
-          // reference computes this matrix once per query too), broadcast
-          // with the filter sets — bounded by shardedScoreBudgetBytes at
-          // dispatch
-          val aBc = bc((qids.map(q => q -> probe(q, parallelTokens = true)),
-            subsetSet, tombstones))
-          slices.flatMap { slice =>
-            val (probes, sub, tomb) = aBc.value
-            probes.iterator.map { case (qid, (m, probed)) =>
-              qid -> Searcher.funnelSurvivorsScored(slice, m, probed, sub, tomb, nDec)
-            }
-          }.collect().toSeq
+          // S1 + S2 once per query on the driver (bounded by
+          // denseScoreBudgetBytes through the caller's chunks), broadcast
+          // with the filter sets; the per-slice cuts merge up a tree
+          val aBc = bc((Searcher.parMap(qids)(q => q -> probe(q)), filters))
+          phase("search phase A") {
+            slices.phaseA.map { slice =>
+              val (probes, (sub, tomb)) = aBc.value
+              probes.iterator.map { case (qid, (m, probed)) =>
+                qid -> Searcher.funnelSurvivorsScored(slice, m, probed, sub, tomb, nDec)
+              }.toMap
+            }.treeAggregate(Map.empty[Long, Array[(Long, Float)]])(
+              Searcher.mergeCuts(nDec), Searcher.mergeCuts(nDec))
+          }
       }
-      // global S6 cut under the per-slice ordering — a no-op merge for
-      // one slice — then each surviving doc with the queries that kept it
-      val docToQids: IndexedSeq[(Long, Array[Long])] = sliceSurvivors
-        .groupBy(_._1).iterator.flatMap { case (qid, parts) =>
-          val kept = if (parts.size == 1) parts.head._2
-            else Searcher.approxCut(parts.flatMap(_._2).toArray, nDec)
-          kept.iterator.map { case (d, _) => (d, qid) }
-        }.toSeq
+      // each surviving doc with the queries that kept it
+      val docToQids: IndexedSeq[(Long, Array[Long])] = survivors.iterator
+        .flatMap { case (qid, kept) => kept.iterator.map { case (d, _) => (d, qid) } }.toSeq
         .groupBy(_._1).view.mapValues(_.map(_._2).toArray).toIndexedSeq
         .sortBy(_._1)
       // Phase B — S7 doc-grouped: decode each UNIQUE surviving doc once
@@ -780,24 +686,28 @@ final class Searcher(index: MultiVectorIndex) {
           }.flatten
         case Right(slices) =>
           val codecBc = codecBcShared
-          val bBc = bc((docToQids, queryMap))
-          slices.flatMap { slice =>
-            val (docs, qm) = bBc.value
-            docs.iterator
-              .filter { case (d, _) => slice.toks.contains(d) }
-              .flatMap { case (d, qs) =>
-                Searcher.scoreDocForQueries(slice, codecBc.value, d, qs, qm, rerank32)
-              }
-          }.collect().toSeq
+          val docsBc = bc(docToQids.toMap)
+          val queriesBc = bc(queryMap)
+          phase("search phase B") {
+            slices.phaseB(docsBc).flatMap { slice =>
+              val docs = docsBc.value
+              // the survivors this slice holds, walking the smaller key set
+              val held =
+                if (slice.toks.size < docs.size) slice.toks.keysIterator.filter(docs.contains)
+                else docs.keysIterator.filter(slice.toks.contains)
+              held.flatMap(d => Searcher.scoreDocForQueries(
+                slice, codecBc.value, d, docs(d), queriesBc.value, rerank32))
+            }.collect().toSeq
+          }
       }
       // S8 — final top-k per query, assembled driver-side (≤ nDec rows
-      // per query): score desc, doc asc, as in the distributed window.
+      // per query): score desc, doc asc.
       scored.groupBy(_._1).toIndexedSeq.flatMap { case (qid, ss) =>
         ss.sortWith { (a, b) =>
           val c = java.lang.Double.compare(b._3, a._3)
           c < 0 || (c == 0 && a._2 < b._2)
         }.take(params.topK).zipWithIndex.map { case ((_, d, s), i) => (qid, d, s, i + 1) }
-      }.toDF("query_id", "doc_id", "score", "rank")
+      }
     } finally bcs.foreach(_.destroy())
   }
 
@@ -941,19 +851,30 @@ final class Searcher(index: MultiVectorIndex) {
 
 object Searcher {
 
-  /** Resident image of an index (or of one doc-id slice of it) for
-    * the resident funnel: IVF lists, per-doc codes (tok order), packed
-    * residuals (tok order). */
+  /** Image of an index, or of one slice of it, for the two-phase
+    * funnel: IVF lists, per-doc codes (tok order), packed residuals
+    * (tok order). A phase reads only its own part: phase A the IVF and
+    * codes, phase B the residuals. */
   private[search] final case class LocalIndexImage(
       ivf: Map[Int, Array[Long]],
       docCodes: Map[Long, Array[Int]],
       toks: Map[Long, Array[(Int, Array[Byte])]])
 
-  /** Fast-path ceiling on batch size: phase A/B collect
+  /** Executor slices of an index for one search call: phase A's, read
+    * on first use (inside the phase's job description), and phase B's
+    * for the broadcast global survivors (doc -> the queries that kept
+    * it). */
+  private[search] final class Slices(
+      readA: => RDD[LocalIndexImage],
+      val phaseB: Broadcast[Map[Long, Array[Long]]] => RDD[LocalIndexImage]) {
+    lazy val phaseA: RDD[LocalIndexImage] = readA
+  }
+
+  /** Ceiling on the queries of one funnel call: phase A/B collect
     * queries × n_full/4 intermediate rows to the driver (~100 MB at
-    * this bound with default params). Mega-batches above it use the
-    * dense funnel's chunked flow, which never materializes more than
-    * one memory-budgeted chunk. */
+    * this bound with default params). The driver image serves batches
+    * up to it; the executor placements run larger batches in chunks of
+    * at most this many queries. */
   private[search] val LocalMaxBatch = 4096
 
   /** Driver-residency multiplier for the fast-path dispatch:
@@ -1001,13 +922,12 @@ object Searcher {
 
   /** S3–S6 against one index image (or image SLICE) from a precomputed
     * S1 matrix and probe set: gather, filter, approximate-score, cut.
-    * Ordering and arithmetic mirror the distributed funnel exactly:
-    * float approx scores, doc_id-ascending ties at the cut. Returns the
-    * post-cut survivors WITH their approx scores so the resident funnel
-    * can finish the GLOBAL S6 cut by merging slice results under the
-    * same (score desc, doc asc) ordering — the cut over a union of
-    * per-slice top-n sets equals the unsharded cut because each slice's
-    * global survivors are within its local top-n. */
+    * Float approx scores, doc_id-ascending ties at the cut. Returns the
+    * post-cut survivors WITH their approx scores so the funnel can
+    * finish the GLOBAL S6 cut by merging slice results under the same
+    * (score desc, doc asc) ordering ([[mergeCuts]]) — the cut over a
+    * union of per-slice top-n sets equals the unsliced cut because each
+    * slice's global survivors are within its local top-n. */
   private[search] def funnelSurvivorsScored(
       im: LocalIndexImage,
       scores: Array[Array[Float]],
@@ -1030,19 +950,30 @@ object Searcher {
     approxCut(approx, nDecompress)
   }
 
-  /** S6 funnel cut of (doc, approx) rows: approx desc, doc asc (the
-    * distributed window's float ordering and tie-break), first `n`. */
+  /** S6 funnel cut of (doc, approx) rows: approx desc, doc asc, first
+    * `n`. */
   private[search] def approxCut(approx: Array[(Long, Float)], n: Int): Array[(Long, Float)] =
     approx.sortWith { (a, b) =>
       val c = java.lang.Float.compare(b._2, a._2)
       c < 0 || (c == 0 && a._1 < b._1)
     }.take(n)
 
+  /** Merge of two sets of per-query S6 cuts over disjoint docs. The cut
+    * orders by a total order (approx desc, doc asc), so cutting a union
+    * of cuts equals cutting the union of their inputs: the merge is
+    * associative and commutative, and any merge tree of per-slice cuts
+    * yields the global cut. */
+  private[search] def mergeCuts(n: Int)(
+      a: Map[Long, Array[(Long, Float)]],
+      b: Map[Long, Array[(Long, Float)]]): Map[Long, Array[(Long, Float)]] =
+    b.foldLeft(a) { case (acc, (q, cut)) =>
+      acc.updated(q, acc.get(q).fold(cut)(mine => approxCut(mine ++ cut, n)))
+    }
+
   /** S7 for ONE surviving doc: decode once, exact-score against every
-    * query that kept it. Kernel choice mirrors the distributed S7
-    * (double fixed-order by default for oracle bit-parity; opt-in f32
-    * serving kernel). A doc without a tokens row is dropped, as the
-    * distributed inner join drops it. */
+    * query that kept it: the f32 serving kernel, or the fixed-order f64
+    * one the oracles pin for bit-parity. A doc without a tokens row is
+    * dropped, as the sparse funnel's inner join drops it. */
   private[search] def scoreDocForQueries(
       im: LocalIndexImage, cdc: graft.index.Codec,
       d: Long, qids: Array[Long],
@@ -1061,9 +992,9 @@ object Searcher {
     }
 
   /** S1 GEMM kernel: per-query-token scores against all K centroids
-    * (row-major centroid matrix). Shared by the dense distributed path
-    * (driver / tiny stage) and the resident funnel, so both produce
-    * identical float accumulation order. `parallel` spreads the
+    * (row-major centroid matrix), the one S1 of every dense-funnel
+    * placement, so all produce identical float accumulation order.
+    * `parallel` spreads the
     * independent token rows across cores (single-query latency);
     * per-row arithmetic is identical either way. */
   private[graft] def centroidScores(

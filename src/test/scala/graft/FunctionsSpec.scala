@@ -55,6 +55,17 @@ class FunctionsSpec extends AnyFunSuite {
     assert(df.select(expr("dot_f(a, b)")).collect()(0).getDouble(0) === 23.0)
   }
 
+  test("a repeated ArrayMath.register keeps the first registration") {
+    ArrayMath.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("dot_f")
+    val first = registry.lookupFunction(id)
+    assert(first.isDefined)
+    ArrayMath.register(spark)
+    assert(registry.lookupFunction(id).exists(_ eq first.get),
+      "a second register replaced dot_f's registration")
+  }
+
   test("unicode61 builtin regexp fast path matches the JVM tokenizer") {
     import spark.implicits._
     val texts = Seq(

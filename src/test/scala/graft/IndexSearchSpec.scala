@@ -261,9 +261,12 @@ class IndexSearchSpec extends AnyFunSuite {
       .select(col("doc_id").as("query_id"), col("embeddings"))
     val subset = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
     val base = SearchParams()
-    // budget 1 byte: the packed image can't collect to one node, so a
-    // serving-shaped batch dispatches to the SHARDED resident slices
-    val sharded = base.copy(localIndexBudgetBytes = 1L, shardedSlices = 3)
+    // a budget the packed image exceeds but every id of the corpus
+    // fits: the batch dispatches to the SHARDED resident slices, subset
+    // included (a 1-byte budget would send the subset leg to parquet)
+    val cachedBudget = graft.util.Plan.SubsetBytesPerId * 100
+    assert(Searcher.residentBytes(idx, cachedBudget) === 0L)
+    val sharded = base.copy(localIndexBudgetBytes = cachedBudget, shardedSlices = 3)
     val distributed = base.copy(localIndexBudgetBytes = 0L)
     def run(p: SearchParams, sub: Option[DataFrame]) = searcher
       .search(queries, p, subset = sub)
@@ -281,31 +284,53 @@ class IndexSearchSpec extends AnyFunSuite {
     import spark.implicits._
     val p = "/tmp/graft_test_index_tombstoned"
     graft.util.Fs.deleteRecursively(p)
-    MultiVectorIndex.build(spark, docs, p, IndexConfig(numPartitionsOverride = Some(32)))
+    // 4 uncoalesced shuffle partitions: doc_codes is written as 4 files
+    val conf = Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "4")
+    val saved = conf.keys.map(key => key -> spark.conf.getOption(key)).toMap
+    try {
+      conf.foreach { case (key, v) => spark.conf.set(key, v) }
+      MultiVectorIndex.build(spark, docs, p, IndexConfig(numPartitionsOverride = Some(32)))
+      // below 500k rows the build writes one tokens file; lay the tokens
+      // out as it does at scale, range-partitioned by doc and sorted
+      graft.util.Fs.rewrite(new MultiVectorIndex(spark, p).tokens
+        .repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id", "tok"),
+        s"$p/tokens")
+    } finally saved.foreach { case (key, v) => v.fold(spark.conf.unset(key))(spark.conf.set(key, _)) }
+    val subset = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
     // tombstone query docs (each its own query's likely top hit) and
     // docs inside and outside the subset
-    graft.index.Updater.deleteDeferred(spark, new MultiVectorIndex(spark, p),
-      Seq(0L, 3L, 5L, 9L, 12L, 30L, 51L).toDF("doc_id"))
-    val idx = new MultiVectorIndex(spark, p)
-    assert(idx.tombstonesOpt.isDefined)
-    val searcher = new Searcher(idx)
-    val subset = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
+    val deleted = Set(0L, 3L, 5L, 9L, 12L, 30L, 51L)
     val base = SearchParams()
-    val sharded = base.copy(localIndexBudgetBytes = 1L, shardedSlices = 3)
-    val distributed = base.copy(localIndexBudgetBytes = 0L)
-    def run(nq: Int, p: SearchParams, sub: Option[DataFrame]) = searcher
-      .search(docs.filter(col("doc_id") < nq)
-        .select(col("doc_id").as("query_id"), col("embeddings")), p, subset = sub)
-      .select("query_id", "doc_id", "score", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    for (sub <- Seq(None, Some(subset)); nq <- Seq(1, 8)) {
-      val want = run(nq, distributed, sub)
-      val clue = s"$nq queries, subset ${sub.isDefined}"
-      assert(want.map(_._1).size === nq, clue)
-      assert(want.forall(r => !Set(0L, 3L, 5L, 9L, 12L, 30L, 51L).contains(r._2)),
-        s"tombstoned doc returned: $clue")
-      assert(run(nq, base, sub) === want, s"driver: $clue")
-      assert(run(nq, sharded, sub) === want, s"sharded: $clue")
+    // a budget the packed image exceeds but every id of the corpus fits:
+    // the cached slices take the batch, subset included
+    val cachedBudget = graft.util.Plan.SubsetBytesPerId * 100
+    val sharded = base.copy(localIndexBudgetBytes = cachedBudget, shardedSlices = 3)
+    val parquet = base.copy(localIndexBudgetBytes = 0L)
+    for (tombstoned <- Seq(false, true)) {
+      if (tombstoned)
+        graft.index.Updater.deleteDeferred(spark, new MultiVectorIndex(spark, p),
+          deleted.toSeq.toDF("doc_id"))
+      val idx = new MultiVectorIndex(spark, p)
+      assert(idx.tombstonesOpt.isDefined === tombstoned)
+      assert(idx.docCodes.rdd.getNumPartitions >= 3, "doc_codes must span several slices")
+      assert(idx.tokens.rdd.getNumPartitions >= 3, "tokens must span several slices")
+      assert(Searcher.residentBytes(idx, cachedBudget) === 0L)
+      val searcher = new Searcher(idx)
+      def run(nq: Int, p: SearchParams, sub: Option[DataFrame]) = searcher
+        .search(docs.filter(col("doc_id") < nq)
+          .select(col("doc_id").as("query_id"), col("embeddings")), p, subset = sub)
+        .select("query_id", "doc_id", "score", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSet
+      for (sub <- Seq(None, Some(subset)); nq <- Seq(1, 8)) {
+        val want = run(nq, parquet, sub)
+        val clue = s"$nq queries, subset ${sub.isDefined}, tombstones $tombstoned"
+        assert(want.map(_._1).size === nq, clue)
+        if (tombstoned)
+          assert(want.forall(r => !deleted.contains(r._2)), s"tombstoned doc returned: $clue")
+        assert(run(nq, base, sub) === want, s"driver: $clue")
+        assert(run(nq, sharded, sub) === want, s"sharded: $clue")
+      }
     }
     graft.util.Fs.deleteRecursively(p)
   }

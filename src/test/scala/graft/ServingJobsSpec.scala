@@ -13,7 +13,8 @@ import graft.search.{HybridParams, SearchParams, Searcher}
   * hybrid or filtered search on a small index runs NO Spark job
   * (resident BM25, semantic and metadata images, driver-side fusion),
   * for a single query and for a batch, and a zero resident budget keeps
-  * the distributed plan reachable. */
+  * the distributed plan reachable — for semantic search, one job per
+  * funnel phase. */
 class ServingJobsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -23,16 +24,20 @@ class ServingJobsSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  /** Counts job starts; a job run under the `graft.fence` local
-    * property is a fence: listener events arrive in order, so once the
-    * fence's start is seen every earlier job start has been counted. */
+  /** Counts job starts and records their job descriptions; a job run
+    * under the `graft.fence` local property is a fence: listener events
+    * arrive in order, so once the fence's start is seen every earlier
+    * job start has been counted. */
   private object Jobs extends SparkListener {
     val started = new AtomicInteger(0)
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var fence = ""
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).flatMap(p => Option(p.getProperty("graft.fence"))) match {
         case Some(f) => fence = f
-        case None => started.incrementAndGet()
+        case None =>
+          started.incrementAndGet()
+          descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
       }
   }
 
@@ -52,6 +57,7 @@ class ServingJobsSpec extends AnyFunSuite {
   private def jobsOf(f: => Unit): Int = {
     drain()
     Jobs.started.set(0)
+    Jobs.descriptions.clear()
     f
     drain()
     Jobs.started.get()
@@ -170,8 +176,23 @@ class ServingJobsSpec extends AnyFunSuite {
         assert(jobsOf { resident = ranks(n, SearchParams()) } === 0,
           s"warm $n-query semantic search launched Spark jobs")
         var viaPlan: Set[(Long, Long, Double, Int)] = null
-        assert(jobsOf { viaPlan = ranks(n, SearchParams(localIndexBudgetBytes = 0L)) } > 0,
-          "a zero budget must keep the distributed funnel")
+        val sc = spark.sparkContext
+        sc.setJobDescription("caller")
+        val jobs =
+          try jobsOf { viaPlan = ranks(n, SearchParams(localIndexBudgetBytes = 0L)) }
+          finally {
+            assert(sc.getLocalProperty("spark.job.description") === "caller",
+              "the search did not restore the caller's job description")
+            sc.setJobDescription(null)
+          }
+        assert(jobs > 0, "a zero budget must keep the distributed funnel")
+        // one job per funnel phase over the parquet slices (an index
+        // with tombstones would add their read; this one has none), each
+        // named by its phase
+        assert(idx.tombstonesOpt.isEmpty)
+        assert(jobs <= 2, s"$n-query parquet-placement search ran $jobs jobs, not one per phase")
+        import scala.jdk.CollectionConverters._
+        assert(Jobs.descriptions.asScala.toSet === Set("search phase A", "search phase B"))
         assert(resident.map(_._1).size === n)
         assert(resident === viaPlan)
       }

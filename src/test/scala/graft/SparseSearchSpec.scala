@@ -72,9 +72,10 @@ class SparseSearchSpec extends AnyFunSuite {
     val queries = docs.filter(col("doc_id") < 12)
       .select(col("doc_id").as("query_id"), col("embeddings"))
     val base = SearchParams(topK = 5)
-    // budget of 1 byte → every query becomes its own chunk (12 chunks),
-    // exercising per-chunk execution, broadcast teardown, and the
-    // collected-rows reassembly
+    // budget of 1 byte → every query of an executor placement becomes
+    // its own chunk (12 chunks), exercising per-chunk execution,
+    // broadcast teardown, and the reassembly; the driver image runs the
+    // batch whole
     val unchunked = results(searcher.search(queries, base))
     val chunked = results(searcher.search(
       queries, base.copy(denseScoreBudgetBytes = 1L)))
@@ -88,6 +89,18 @@ class SparseSearchSpec extends AnyFunSuite {
       queries, base.copy(centroidScoreThreshold = None, denseScoreBudgetBytes = 1L),
       subset))
     assert(c2 === u2)
+    // the executor placements chunk: the cached slices (a budget the
+    // packed image exceeds but every corpus id fits, so the subset
+    // stays on them) and the parquet slices (budget 0)
+    val idx = new MultiVectorIndex(spark, indexPath)
+    val cachedBudget = graft.util.Plan.SubsetBytesPerId * idx.numDocuments
+    assert(Searcher.residentBytes(idx, cachedBudget) === 0L)
+    for ((placement, budget) <- Seq("sharded" -> cachedBudget, "parquet" -> 0L)) {
+      val p = base.copy(denseScoreBudgetBytes = 1L, localIndexBudgetBytes = budget)
+      assert(results(searcher.search(queries, p)) === unchunked, placement)
+      assert(results(searcher.search(queries, p.copy(centroidScoreThreshold = None), subset)) === u2,
+        s"$placement with subset")
+    }
   }
 
   test("sparse S5 partial-aggregates map-side before the exchange") {
