@@ -7,6 +7,7 @@ import graft.fts.FtsIndex
 import graft.index.{IndexConfig, MultiVectorIndex, UpdateConfig, Updater}
 import graft.meta.{JsonMeta, MetadataOps, Where}
 import graft.search.{HybridParams, HybridSearch, SearchParams, Searcher}
+import graft.util.ResidentSet
 
 /** The driver-API facade — batch equivalents of every
   * next-plaid-api route (SURVEY §2.8, next-plaid-api/src/main.rs:322-505),
@@ -31,100 +32,65 @@ import graft.search.{HybridParams, HybridSearch, SearchParams, Searcher}
   * through any handle is seen by the next request: the semantic image
   * (held by the cached [[Searcher]], manifest build id), the BM25 image
   * ([[ftsIndex]], the FTS artifact's files) and the metadata image that
-  * filtered searches evaluate their condition on ([[filterSource]], the
-  * metadata table's files). The three share
-  * `SearchParams.localIndexBudgetBytes` in that admission order; writes
-  * and the metadata routes read the stored tables.
+  * filtered searches evaluate their condition on (the metadata table's
+  * files). One [[graft.util.ResidentSet]] admits them in that order
+  * against `SearchParams.localIndexBudgetBytes`, one pass per request;
+  * writes and the metadata routes read the stored tables.
   */
 final class GraftIndex private (val spark: SparkSession, val path: String) {
 
   def index: MultiVectorIndex = new MultiVectorIndex(spark, path)
+  private def metaPath = s"$path/meta"
+
+  /** The semantic image's charge: [[Searcher.residentBytes]] of the
+    * manifest build the stamp names. The image itself stays in the
+    * cached [[Searcher]], behind its build-id guard. */
+  private val semanticImage = ResidentSet.Entry[AnyRef]("semantic", path,
+    () => MultiVectorIndex.readBuildId(path),
+    () => Searcher.residentBytes(index, Long.MaxValue), () => null)
+
+  /** Keyed on the FTS files, not the manifest build id: inside an update
+    * the FTS append or delete mapping lands AFTER the manifest bump, so a
+    * manifest-keyed image could be built between the two writes and
+    * then serve stale postings. */
+  private val ftsImage = FtsIndex.imageEntry(spark, s"$path/fts")
+
+  /** The metadata table as a local relation with the parquet schema. Any
+    * append, rewrite or update moves the stamp, so a held handle never
+    * filters against pre-write rows. */
+  private val metaImage = ResidentSet.Entry[DataFrame]("metadata", metaPath,
+    () => graft.util.Fs.settledFingerprint(metaPath),
+    () => GraftIndex.metadataBytesEstimate(metaPath),
+    () => {
+      val stored = spark.read.parquet(metaPath)
+      spark.createDataFrame(java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+    })
+
+  private val images = new ResidentSet(semanticImage, ftsImage, metaImage)
+
   /** The FTS handle: one per GraftIndex, following the artifact's own
     * files ([[graft.util.Fs.settledFingerprint]]), so a serving loop
-    * keeps its resident BM25 image until a write touches the artifact. Keyed on the FTS
-    * files, not the manifest build id: inside an update the FTS append
-    * or delete mapping lands AFTER the manifest bump, so a
-    * manifest-keyed image could be built between the two writes and
-    * then serve stale postings. Its image shares
-    * `localIndexBudgetBytes` with the semantic image
-    * ([[Searcher.residentBytes]]). */
-  lazy val ftsIndex: FtsIndex =
-    new FtsIndex(spark, s"$path/fts", budget => Searcher.residentBytes(index, budget))
-  private def metaPath = s"$path/meta"
+    * keeps its resident BM25 image until a write touches the artifact. */
+  lazy val ftsIndex: FtsIndex = new FtsIndex(spark, s"$path/fts", ftsImage, images)
 
   /** The stored metadata table. Every write path and the metadata routes
     * read it; filtered searches read [[filterSource]]. */
   def metadata: DataFrame = spark.read.parquet(metaPath)
 
-  /** The metadata version last observed: its estimate and, once a
-    * filtered search admits it, its resident image, keyed on one
-    * [[graft.util.Fs.settledFingerprint]] of the table's files. Any
-    * append, rewrite or update moves the stamp, so a held handle never
-    * filters against pre-write rows. */
-  @volatile private var metaObserved: GraftIndex.MetaVersion = _
-
-  private def metaVersion: GraftIndex.MetaVersion = {
-    val s = graft.util.Fs.settledFingerprint(metaPath)
-    val v = metaObserved
-    if (v != null && v.stamp == s) v
-    else {
-      val fresh = new GraftIndex.MetaVersion(spark, metaPath, s)
-      metaObserved = fresh
-      fresh
-    }
-  }
-
   /** The frame a filtered search evaluates its condition on: the
-    * resident metadata image when `budgetBytes` admits it
-    * ([[residentMetadata]]), else the stored table. Over the image the
-    * unchanged [[MetadataOps.whereCondition]] predicate is folded by
-    * Catalyst's `ConvertToLocalRelation` into a local relation, so the
-    * subset runs no Spark job. */
-  private def filterSource(budgetBytes: Long): DataFrame =
-    residentMetadata(budgetBytes).getOrElse(metadata)
+    * resident metadata image when the request's pass admits it, else the
+    * stored table. Over the image the unchanged
+    * [[MetadataOps.whereCondition]] predicate is folded by Catalyst's
+    * `ConvertToLocalRelation` into a local relation, so the subset runs
+    * no Spark job. */
+  private def filterSource(pass: ResidentSet.Pass): DataFrame =
+    pass.image(metaImage).getOrElse(metadata)
 
   /** The resident metadata image of the table's current files: a local
     * relation with the parquet schema, collected once per stamp. None
-    * when `budgetBytes` is 0, the table is absent, or the image does not
-    * fit: images are admitted in a fixed order — semantic, FTS, metadata
-    * — and this one only when its estimate
-    * ([[GraftIndex.metadataBytesEstimate]]) plus the semantic image's
-    * charge ([[Searcher.residentBytes]]) plus the FTS image's (its
-    * estimate whenever that image is admitted) fits, so the three
-    * driver images' combined estimate never exceeds the budget. A build
-    * racing a write is retried on the newer version, paced like
-    * [[fsck]]. */
-  private[graft] def residentMetadata(budgetBytes: Long): Option[DataFrame] = {
-    @annotation.tailrec
-    def go(v: GraftIndex.MetaVersion, attempt: Int): Option[DataFrame] = {
-      // None: the build raced a write
-      val outcome: Option[Option[DataFrame]] =
-        try {
-          val sem = Searcher.residentBytes(index, budgetBytes)
-          val fts = ftsIndex.residentBytes(budgetBytes)
-          if (v.admit(sem, fts, budgetBytes)) v.image.get.map(Some(_))
-          else Some(None)
-        } catch {
-          case _: java.io.IOException
-              if graft.util.Fs.settledFingerprint(metaPath) != v.stamp => None
-        }
-      outcome match {
-        case Some(img) => img
-        case None if attempt < GraftIndex.ImageBuildAttempts =>
-          Thread.sleep(40L * attempt)
-          go(metaVersion, attempt + 1)
-        case None =>
-          throw new IllegalStateException(
-            s"metadata at $metaPath changed on disk during each of " +
-            s"${GraftIndex.ImageBuildAttempts} image builds")
-      }
-    }
-    if (budgetBytes <= 0) None
-    else {
-      val v = metaVersion
-      if (v.stamp == "absent") None else go(v, 1)
-    }
-  }
+    * when the table is absent or `budgetBytes` does not admit it. */
+  private[graft] def residentMetadata(budgetBytes: Long): Option[DataFrame] =
+    images.pass(budgetBytes).image(metaImage)
 
   // ---- info (GET /indices/{name}) ----
   def info: Map[String, String] = index.manifest
@@ -240,90 +206,69 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
   // ---- search (POST /indices/{name}/search, /search/filtered) ----
 
   /** Searcher reused across calls while the on-disk index is unchanged
-    * (manifest stamp), so a serving loop keeps the fast path's
+    * (manifest build id), so a serving loop keeps the fast path's
     * collected image and broadcasts warm instead of re-collecting the
     * index every call. Any update — through this facade or outside
     * it — rewrites the manifest and gets a fresh handle; deferred
-    * deletes don't touch the manifest and are re-read per search
-    * inside Searcher. */
+    * deletes don't touch the manifest, and the Searcher re-stamps their
+    * tombstones per call. */
   @volatile private var cachedSearcher: (Searcher, String) = _
-  private def searcher: Searcher = {
-    val stamp = MultiVectorIndex.readBuildId(path)
+  private def searcher(buildId: String): Searcher = {
     val cur = cachedSearcher
-    if (cur != null && cur._2 == stamp) cur._1
+    if (cur != null && cur._2 == buildId) cur._1
     else {
       val s = new Searcher(new MultiVectorIndex(spark, path))
-      cachedSearcher = (s, stamp)
+      cachedSearcher = (s, buildId)
       s
     }
   }
 
-  /** A search that races a concurrent update can observe the index
-    * flip between handle construction and the fast path's stale-image
-    * guard; the facade does what a serving loop would — drop the cached
-    * handle and retry on a fresh one (bounded: another racing update
-    * just retries again, and a search between updates always wins);
-    * the FTS handle re-derives its frames from the moved stamp on the
-    * retry. */
-  private def retryingStale[A](attempts: Int = 3)(f: Searcher => A): A = {
-    val s = searcher
-    try f(s)
-    catch {
-      case e: IllegalStateException
-          if attempts > 1 && e.getMessage != null &&
-            e.getMessage.contains("changed on disk") =>
+  /** One serving request: one admission pass over the images against
+    * `budgetBytes`, whose semantic stamp also keys the Searcher. A
+    * search that races a concurrent update can observe the index flip
+    * between handle construction and the fast path's stale-image guard;
+    * the facade does what a serving loop would — drop the cached handle
+    * and retry the request on a fresh one and a fresh pass (bounded:
+    * another racing update just retries again, and a search between
+    * updates always wins). */
+  private def serving[A](budgetBytes: Long, attempts: Int = 3)(
+      f: (Searcher, ResidentSet.Pass) => A): A = {
+    val pass = images.pass(budgetBytes)
+    try {
+      val s = searcher(pass.version(semanticImage).stamp)
+      pass.admits(semanticImage) // the semantic decision, recorded
+      f(s, pass)
+    } catch {
+      case e: Exception if attempts > 1 && GraftIndex.racedUpdate(e) =>
         cachedSearcher = null
-        retryingStale(attempts - 1)(f)
-      // A torn or mid-replace manifest read is the SAME race in a
-      // different window: manifest.json replaced between handle
-      // construction and first use. replaceBytes makes the local-FS
-      // window atomic, but non-local rename still has an absent-file
-      // instant (FileNotFound), and an old handle can hold a manifest
-      // map parsed before keys were added (key not found) or a torn
-      // body (Jackson). All are retried on a fresh handle.
-      case e @ (_: java.util.NoSuchElementException |
-          _: java.io.FileNotFoundException |
-          _: com.fasterxml.jackson.core.JacksonException)
-          if attempts > 1 =>
-        cachedSearcher = null
-        retryingStale(attempts - 1)(f)
-      // An update's table rewrite (Fs.rewrite dir swap) racing an
-      // in-flight scan surfaces as a WRAPPED task failure
-      // (SparkException FAILED_READ_FILE / FileNotFoundException in
-      // the cause chain), which the bare FileNotFoundException case
-      // above never sees — caught live by ConcurrencyStressSpec's
-      // interleave (r18). Same remedy: fresh handle, fresh listings.
-      case e: org.apache.spark.SparkException
-          if attempts > 1 && GraftIndex.isStaleRead(e) =>
-        cachedSearcher = null
-        retryingStale(attempts - 1)(f)
+        serving(budgetBytes, attempts - 1)(f)
     }
   }
 
   def search(queries: DataFrame, params: SearchParams = SearchParams()): DataFrame =
-    retryingStale()(_.search(queries, params))
+    serving(params.localIndexBudgetBytes)((s, _) => s.search(queries, params))
 
   def searchFiltered(
       queries: DataFrame,
       cond: String, condParams: Seq[Where.Param],
-      params: SearchParams = SearchParams()): DataFrame = {
-    val subset = MetadataOps.whereCondition(
-        filterSource(params.localIndexBudgetBytes), "_subset_", cond, condParams)
-      .withColumnRenamed("_subset_", "doc_id")
-    retryingStale()(_.search(queries, params, Some(subset)))
-  }
+      params: SearchParams = SearchParams()): DataFrame =
+    serving(params.localIndexBudgetBytes) { (s, pass) =>
+      val subset = MetadataOps.whereCondition(filterSource(pass), "_subset_", cond, condParams)
+        .withColumnRenamed("_subset_", "doc_id")
+      s.search(queries, params, Some(subset))
+    }
 
   def hybrid(
       queries: DataFrame, textQuery: String,
       params: HybridParams = HybridParams(),
-      cond: Option[(String, Seq[Where.Param])] = None): DataFrame = {
-    val filter = cond.map { case (c, ps) =>
-      (filterSource(params.searchParams.localIndexBudgetBytes)
-        .withColumnRenamed("_subset_", "doc_id"), c, ps)
+      cond: Option[(String, Seq[Where.Param])] = None): DataFrame =
+    serving(params.searchParams.localIndexBudgetBytes) { (s, pass) =>
+      val filter = cond.map { case (c, ps) =>
+        (filterSource(pass).withColumnRenamed("_subset_", "doc_id"), c, ps)
+      }
+      HybridSearch.search(spark, index, ftsIndex, queries, textQuery, params, filter,
+        searcherOpt = Some(s), pass = Some(pass))
     }
-    retryingStale()(s => HybridSearch.search(spark, index, ftsIndex, queries,
-      textQuery, params, filter, searcherOpt = Some(s)))
-  }
 
   // ---- *_with_encoding routes (text in, results out — E4 wired into
   // the facade; main.rs /search_with_encoding, /update_with_encoding,
@@ -446,25 +391,29 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
             tombstones.toDouble >= autoCompactRatio * index.numDocuments)
           compact()
       }
-    } else delDf.filterNot(_.isEmpty).foreach { del =>
-      // materialize the set once: the metadata table it may derive from
-      // is rewritten below
-      graft.util.Fs.rewrite(del.select("doc_id"), s"$path/pending_delete")
-      val delStable = spark.read.parquet(s"$path/pending_delete")
-      Updater.deleteFrom(spark, index, delStable)
-      if (graft.util.Fs.exists(metaPath)) {
-        graft.util.Fs.rewrite(
-          Updater.syncMetadataDelete(spark, index, metadata, "_subset_"), metaPath)
-      }
-      if (graft.util.Fs.exists(s"$path/fts/fts.json")) {
-        // the FTS follows the INDEX's old->new mapping — renumbering the
-        // FTS id set independently diverges when some docs lack metadata
-        FtsIndex.applyDeleteMapping(ftsIndex,
-          spark.read.parquet(s"$path/last_delete_map"))
-      }
-      graft.util.Fs.deleteRecursively(s"$path/pending_delete")
-    }
+    } else delDf.filterNot(_.isEmpty).foreach(deletePhysically)
     this
+  }
+
+  /** Physical delete of `del(doc_id)` with dense renumbering. The set is
+    * materialized once first: the metadata table it may derive from is
+    * rewritten by [[followDelete]]. */
+  private def deletePhysically(del: DataFrame): Unit = {
+    graft.util.Fs.rewrite(del.select("doc_id"), s"$path/pending_delete")
+    Updater.deleteFrom(spark, index, spark.read.parquet(s"$path/pending_delete"))
+    followDelete()
+    graft.util.Fs.deleteRecursively(s"$path/pending_delete")
+  }
+
+  /** Metadata and FTS follow the INDEX's last old->new mapping —
+    * renumbering the FTS id set independently diverges when some docs
+    * lack metadata. */
+  private def followDelete(): Unit = {
+    if (graft.util.Fs.exists(metaPath))
+      graft.util.Fs.rewrite(
+        Updater.syncMetadataDelete(spark, index, metadata, "_subset_"), metaPath)
+    if (graft.util.Fs.exists(s"$path/fts/fts.json"))
+      FtsIndex.applyDeleteMapping(ftsIndex, spark.read.parquet(s"$path/last_delete_map"))
   }
 
   /** Apply pending deferred deletes as one physical renumbering delete;
@@ -473,14 +422,7 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
   def compact(): GraftIndex = graft.util.Journal.bracket(path) {
     if (index.tombstonesOpt.isDefined) {
       Updater.compact(spark, index)
-      if (graft.util.Fs.exists(metaPath)) {
-        graft.util.Fs.rewrite(
-          Updater.syncMetadataDelete(spark, index, metadata, "_subset_"), metaPath)
-      }
-      if (graft.util.Fs.exists(s"$path/fts/fts.json")) {
-        FtsIndex.applyDeleteMapping(ftsIndex,
-          spark.read.parquet(s"$path/last_delete_map"))
-      }
+      followDelete()
     }
     this
   }
@@ -519,31 +461,17 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
     // prefix, which is only meaningful on a compacted id space
     compact()
     val n = count
-    if (n > maxDocuments) {
-      // U6 FIFO eviction: the oldest ids are the dense prefix — the
-      // evict set is a range expression, never a driver-side list
-      graft.util.Fs.rewrite(
-        spark.range(n - maxDocuments).select(col("id").as("doc_id")),
-        s"$path/pending_delete")
-      val delStable = spark.read.parquet(s"$path/pending_delete")
-      Updater.deleteFrom(spark, index, delStable)
-      if (graft.util.Fs.exists(metaPath)) {
-        graft.util.Fs.rewrite(
-          Updater.syncMetadataDelete(spark, index, metadata, "_subset_"), metaPath)
-      }
-      if (graft.util.Fs.exists(s"$path/fts/fts.json")) {
-        FtsIndex.applyDeleteMapping(ftsIndex,
-          spark.read.parquet(s"$path/last_delete_map"))
-      }
-      graft.util.Fs.deleteRecursively(s"$path/pending_delete")
-    }
+    // U6 FIFO eviction: the oldest ids are the dense prefix — the evict
+    // set is a range expression, never a driver-side list
+    if (n > maxDocuments)
+      deletePhysically(spark.range(n - maxDocuments).select(col("id").as("doc_id")))
     this
   }
 
   // ---- rerank (POST /rerank) ----
 
   def rerank(query: Array[Array[Float]], docs: DataFrame, topK: Int): DataFrame =
-    searcher.rerank(query, docs, topK)
+    Searcher.rerank(spark, query, docs, topK)
 
   /** POST /indices/{name}/metadata/check (handlers/metadata.rs:38-110):
     * partition the given doc ids into (existing, missing) by metadata
@@ -669,12 +597,6 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
 
 object GraftIndex {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftIndex])
-
-  /** Metadata image builds tried before a build racing a write storm
-    * gives up. */
-  private val ImageBuildAttempts = 5
-
   /** Estimated peak driver bytes of the resident metadata image, per row
     * and per uncompressed stored byte. Measured with Spark's
     * `SizeEstimator` on the images of two 6-column tables: 470 rows
@@ -698,41 +620,26 @@ object GraftIndex {
     rows * MetaBytesPerRow + bytes * MetaBytesPerStoredByte
   }
 
-  /** One observed version of a metadata table: its estimate, its image
-    * once admitted, and the last admission decision logged for it. */
-  private final class MetaVersion(spark: SparkSession, path: String, val stamp: String) {
-    lazy val estimate: Long = metadataBytesEstimate(path)
-
-    private var logged: (Boolean, Long, Long, Long) = _
-
-    /** Collected on first use ([[graft.util.StampedImage]]): a local
-      * relation with the parquet schema. */
-    val image = new graft.util.StampedImage(path, stamp, () => {
-      val stored = spark.read.parquet(path)
-      spark.createDataFrame(java.util.Arrays.asList(stored.collect(): _*), stored.schema)
-    })
-
-    /** Whether this image fits `budgetBytes` next to the semantic and FTS
-      * charges. The decision is logged once per version, and again only
-      * when its inputs change; a refused image is released. */
-    def admit(sem: Long, fts: Long, budgetBytes: Long): Boolean = {
-      val admitted = estimate + sem + fts <= budgetBytes
-      val decision = (admitted, sem, fts, budgetBytes)
-      synchronized {
-        if (logged != decision) {
-          logged = decision
-          log.info(s"metadata image ${if (admitted) "admitted" else "refused"}: $path " +
-            s"estimate=$estimate semantic=$sem fts=$fts budget=$budgetBytes")
-        }
-      }
-      if (!admitted) image.release()
-      admitted
-    }
-  }
-
   /** Tombstone fraction of the physical corpus at which a deferred
     * delete triggers automatic compaction. */
   val AutoCompactRatio: Double = 0.25
+
+  /** True when a serving request failed by racing an update: the
+    * stale-image guard or an image build tripped ("changed on disk"); a
+    * manifest replaced between handle construction and first use (a
+    * non-local rename's absent-file instant, FileNotFound; a map parsed
+    * before keys were added; a torn body, Jackson); or an `Fs.rewrite`
+    * dir swap under an in-flight scan, which arrives WRAPPED
+    * (SparkException FAILED_READ_FILE, caught live by
+    * ConcurrencyStressSpec's interleave, r18). */
+  private def racedUpdate(e: Exception): Boolean = e match {
+    case e: IllegalStateException =>
+      e.getMessage != null && e.getMessage.contains("changed on disk")
+    case _: java.util.NoSuchElementException | _: java.io.FileNotFoundException |
+        _: com.fasterxml.jackson.core.JacksonException => true
+    case e: org.apache.spark.SparkException => isStaleRead(e)
+    case _ => false
+  }
 
   /** True when `t`'s message/cause chain carries the stale-file-listing
     * shape (an update's `Fs.rewrite` dir swap racing an in-flight scan:
@@ -759,11 +666,7 @@ object GraftIndex {
     val gi = new GraftIndex(spark, path)
     metaJson.foreach { rows =>
       graft.util.Fs.rewrite(JsonMeta.create(spark, rows), s"$path/meta")
-      val m = gi.metadata
-      val texts = m.select(col("_subset_").as("doc_id"),
-        FtsIndex.metadataToTextUdf(to_json(struct(
-          m.columns.filterNot(_ == "_subset_").toIndexedSeq.map(col): _*))).as("text"))
-      FtsIndex.build(spark, texts, "doc_id", "text", s"$path/fts")
+      FtsIndex.build(spark, gi.textsOf(gi.metadata), "doc_id", "text", s"$path/fts")
     }
     gi
   }

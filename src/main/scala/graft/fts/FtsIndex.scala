@@ -1,9 +1,9 @@
 package graft.fts
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.{Fs, Plan}
+import graft.util.{Fs, Plan, ResidentSet}
 
 /** Persisted full-text index — the F3 lifecycle the round-1 engine
   * lacked (reference text_search.rs: index :463-502, delete :503-578,
@@ -30,131 +30,82 @@ import graft.util.{Fs, Plan}
   *
   * Serving: the first search of a version collects a driver-resident
   * BM25 image ([[FtsIndex.Bm25Image]]: per-term primitive postings, the
-  * doclens, `n_docs`, `avgdl`) when its estimated JVM footprint
-  * ([[FtsIndex.residentBytesEstimate]]) plus `coResidentBytes` — the
-  * driver bytes another resident image charges against the same budget
-  * ([[graft.GraftIndex]] charges its semantic image) — fits the
-  * search's `localIndexBudgetBytes` (the [[graft.search.SearchParams]]
-  * budget, 768 MB by default), and answers every later search of that
-  * version from it with no Spark job — the reference answers from
-  * in-process SQLite FTS5 the same way. The image applies a subset and
-  * excluded ids as driver bit sets and keeps [[Fts.bm25]]'s arithmetic,
-  * AND/OR semantics, tokenizer dispatch and (score desc, doc_id asc)
-  * ties. It sums a doc's per-term scores in term order — the
-  * distributed plan's order when the doc's postings sit in one
+  * doclens, `n_docs`, `avgdl`) when the handle's
+  * [[graft.util.ResidentSet]] admits it against the search's
+  * `localIndexBudgetBytes` (768 MB by default): a standalone handle's set
+  * holds this image alone, a [[graft.GraftIndex]]'s holds it in the
+  * index's admission order. Every later search of that version is
+  * answered from the image with no Spark job — the reference answers
+  * from in-process SQLite FTS5 the same way. The image applies a subset
+  * and excluded ids as driver bit sets and keeps [[Fts.bm25]]'s
+  * arithmetic, AND/OR semantics, tokenizer dispatch and (score desc,
+  * doc_id asc) ties. It sums a doc's per-term scores in term order —
+  * the distributed plan's order when the doc's postings sit in one
   * term-sorted file; across files Spark sums in partition order, so a
   * multi-term score can differ in its last bits. The distributed plan
-  * ([[Fts.search]]) runs when the budget is 0, the estimate does not
-  * fit it, or a subset has more ids than [[FtsIndex.boundedIds]] admits
-  * — the 100 TB path, unchanged.
+  * ([[Fts.search]]) runs when the set refuses the image or a subset has
+  * more ids than [[FtsIndex.boundedIds]] admits — the 100 TB path,
+  * unchanged.
   */
-final class FtsIndex(
+final class FtsIndex private[graft] (
     val spark: SparkSession, val path: String,
-    coResidentBytes: Long => Long = _ => 0L) {
+    image: ResidentSet.Entry[FtsIndex.Bm25Image, FtsIndex.Version], images: ResidentSet) {
 
-  /** The artifact version last observed (frames, tokenizer, estimate and
-    * image of ONE stamp). */
-  @volatile private var observed: FtsIndex.Version = _
+  private def this(spark: SparkSession, path: String,
+      image: ResidentSet.Entry[FtsIndex.Bm25Image, FtsIndex.Version]) =
+    this(spark, path, image, new ResidentSet(image))
 
-  /** The version of the artifact's current files: reused while the
-    * stamp holds, re-derived after any write. */
-  private def current: FtsIndex.Version = {
-    val s = Fs.settledFingerprint(path)
-    val v = observed
-    if (v != null && v.stamp == s) v
-    else {
-      val fresh = new FtsIndex.Version(spark, path, s)
-      observed = fresh
-      fresh
-    }
-  }
+  /** A standalone handle: its image is the only entry of its set. */
+  def this(spark: SparkSession, path: String) = this(spark, path, FtsIndex.imageEntry(spark, path))
 
-  def postings: DataFrame = current.postings
-  def doclens: DataFrame = current.doclens
-  def tokenizerName: String = current.tokenizer
+  def postings: DataFrame = image.current().postings
+  def doclens: DataFrame = image.current().doclens
+  def tokenizerName: String = image.current().tokenizer
 
   /** F4/F5 search over the persisted postings + doclens: from the
-    * resident image when it fits `localBudgetBytes` (0 = never), else
-    * the distributed plan. Returns `(doc_id, score, rank)`. */
+    * resident image when the set admits it against `localBudgetBytes`
+    * (0 = never), else the distributed plan. Returns
+    * `(doc_id, score, rank)`. */
   def search(
       query: String, topK: Int, subset: Option[DataFrame] = None,
       localBudgetBytes: Long = graft.search.SearchParams().localIndexBudgetBytes): DataFrame = {
-    val v = current
+    val pass = images.pass(localBudgetBytes)
     val local = for {
-      img <- resident(v, localBudgetBytes)
+      img <- residentImage(pass)
       ids <- subset.fold(Option(Option.empty[Array[Long]]))(
         FtsIndex.boundedIds(_, localBudgetBytes).map(Some(_)))
     } yield img.frame(spark, img.topK(query, topK, ids, Array.emptyLongArray))
-    local.getOrElse(Fts.search(spark, v.postings, query, topK, v.tokenizer, subset,
-      doclensOpt = Some(v.doclens)))
-  }
-
-  /** The driver bytes this handle's image charges against `budgetBytes`:
-    * its estimate when the image is admitted (the estimate plus
-    * `coResidentBytes` fits), else 0 — what a sibling image admitted
-    * after it (the metadata image of [[graft.GraftIndex]]) counts. Reads
-    * footers, never the postings, and builds no image. */
-  private[graft] def residentBytes(budgetBytes: Long): Long =
-    if (budgetBytes <= 0) 0L
-    else {
-      val est = current.estimate
-      if (est + coResidentBytes(budgetBytes) <= budgetBytes) est else 0L
+    local.getOrElse {
+      val v = pass.version(image)
+      Fts.search(spark, v.postings, query, topK, v.tokenizer, subset, doclensOpt = Some(v.doclens))
     }
+  }
 
   /** The resident image of the artifact's current files, or None when
-    * `budgetBytes` is 0 or the estimate plus `coResidentBytes` does not
-    * fit it. */
+    * the set refuses it against `budgetBytes`. */
   private[graft] def residentImage(budgetBytes: Long): Option[FtsIndex.Bm25Image] =
-    if (budgetBytes <= 0) None else resident(current, budgetBytes)
+    residentImage(images.pass(budgetBytes))
 
-  /** An image is built only from a version whose files did not change
-    * during the collect; a build that races a write is retried on the
-    * newer version, paced like [[graft.GraftIndex.fsck]]. An image the
-    * budget no longer admits is released. */
-  @annotation.tailrec
-  private def resident(v: FtsIndex.Version, budgetBytes: Long,
-      attempt: Int = 1): Option[FtsIndex.Bm25Image] = {
-    if (budgetBytes <= 0) return None
-    // None: the build raced a write
-    val outcome: Option[Option[FtsIndex.Bm25Image]] =
-      try {
-        if (v.estimate + coResidentBytes(budgetBytes) <= budgetBytes) v.image.get.map(Some(_))
-        else {
-          v.image.release()
-          Some(None)
-        }
-      } catch {
-        case _: java.io.IOException if Fs.settledFingerprint(path) != v.stamp => None
-      }
-    outcome match {
-      case Some(img) => img
-      case None if attempt < FtsIndex.BuildAttempts =>
-        Thread.sleep(40L * attempt)
-        resident(current, budgetBytes, attempt + 1)
-      case None =>
-        throw new IllegalStateException(
-          s"FTS artifact at $path changed on disk during each of " +
-          s"${FtsIndex.BuildAttempts} image builds")
-    }
-  }
+  /** The resident image under a request's pass over this handle's set. */
+  private[graft] def residentImage(pass: ResidentSet.Pass): Option[FtsIndex.Bm25Image] =
+    pass.image(image)
 }
 
 object FtsIndex {
 
-  /** Image builds tried before a build racing a write storm gives up. */
-  private[fts] val BuildAttempts = 5
+  /** The BM25 image entry of the artifact at `path`, stamped by
+    * [[Fs.settledFingerprint]] of its own files. */
+  private[graft] def imageEntry(spark: SparkSession, path: String): ResidentSet.Entry[Bm25Image, Version] =
+    new ResidentSet.Entry("fts", path, () => Fs.settledFingerprint(path), new Version(spark, path, _))
 
-  /** One observed version of the artifact at `path`: its frames,
-    * tokenizer, footprint estimate and — once a search admits it — its
-    * resident image, all keyed on one [[Fs.settledFingerprint]]. */
-  private final class Version(spark: SparkSession, path: String, val stamp: String) {
+  /** One version of the artifact at `path`: its frames and tokenizer
+    * besides the ledger's estimate and image, all of one stamp. */
+  private[graft] final class Version(spark: SparkSession, path: String, stamp: String)
+      extends ResidentSet.Version[Bm25Image](stamp, residentBytesEstimate(path),
+        () => Bm25Image.collect(spark, path)) {
     lazy val postings: DataFrame = spark.read.parquet(s"$path/postings")
     lazy val doclens: DataFrame = spark.read.parquet(s"$path/doclens")
     lazy val tokenizer: String = readTokenizer(path)
-    lazy val estimate: Long = residentBytesEstimate(path)
-
-    /** Collected on first use ([[graft.util.StampedImage]]). */
-    val image = new graft.util.StampedImage(path, stamp, () => Bm25Image.collect(spark, path))
   }
 
   /** The ids of `subset(doc_id)`, collected to the driver only when its
@@ -346,7 +297,7 @@ object FtsIndex {
     * shuffle beyond the build aggregation), so a term-filtered scan
     * (every BM25 query) prunes parquet row groups via min/max term
     * stats instead of reading the whole table. */
-  private def writePostings(spark: SparkSession, postings: DataFrame, path: String): Unit =
+  private def writePostings(postings: DataFrame, path: String): Unit =
     Fs.rewrite(postings.sortWithinPartitions("term", "doc_id"), s"$path/postings")
 
   def build(
@@ -354,7 +305,7 @@ object FtsIndex {
       docs: DataFrame, idCol: String, textCol: String,
       path: String,
       tokenizerName: String = "unicode61"): FtsIndex = {
-    writePostings(spark, Fts.buildPostings(docs, idCol, textCol, tokenizerName), path)
+    writePostings(Fts.buildPostings(docs, idCol, textCol, tokenizerName), path)
     // doclens from the source text (one narrow scan), not a second
     // aggregation over the exploded postings
     Fs.rewrite(Fts.docLengthsOf(docs, idCol, textCol, tokenizerName), s"$path/doclens")
@@ -408,13 +359,7 @@ object FtsIndex {
           .select(col("doc_id"), col("new_id"))
       else survivors.select(col("doc_id"), col("doc_id").as("new_id"))
     Fs.rewrite(mapping, s"${idx.path}/delete_map")
-    val mapDf = spark.read.parquet(s"${idx.path}/delete_map")
-    writePostings(spark, idx.postings.join(mapDf, "doc_id")
-      .select(col("term"), col("new_id").as("doc_id"), col("tf")),
-      idx.path)
-    Fs.rewrite(idx.doclens.join(mapDf, "doc_id")
-      .select(col("new_id").as("doc_id"), col("dl")), s"${idx.path}/doclens")
-    new FtsIndex(spark, idx.path)
+    applyDeleteMapping(idx, spark.read.parquet(s"${idx.path}/delete_map"))
   }
 
   /** Append postings for NEW doc ids (no collision with existing ids —
@@ -439,14 +384,13 @@ object FtsIndex {
     * (the FTS id set is then a strict subset of the index ids).
     * `mapping(doc_id, new_id)`. */
   def applyDeleteMapping(idx: FtsIndex, mapping: DataFrame): FtsIndex = {
-    val spark = idx.spark
     val mapDf = mapping.select(col("doc_id"), col("new_id"))
-    writePostings(spark, idx.postings.join(mapDf, "doc_id")
+    writePostings(idx.postings.join(mapDf, "doc_id")
       .select(col("term"), col("new_id").as("doc_id"), col("tf")),
       idx.path)
     Fs.rewrite(idx.doclens.join(mapDf, "doc_id")
       .select(col("new_id").as("doc_id"), col("dl")), s"${idx.path}/doclens")
-    new FtsIndex(spark, idx.path)
+    new FtsIndex(idx.spark, idx.path)
   }
 
   /** F3 update_rows: replace the postings of the given docs with their
@@ -457,7 +401,7 @@ object FtsIndex {
     val changed = docs.select(col(idCol).as("doc_id")).distinct()
     val fresh = Fts.buildPostings(docs, idCol, textCol, idx.tokenizerName)
     val kept = idx.postings.join(broadcast(changed), Seq("doc_id"), "left_anti")
-    writePostings(spark, kept.unionByName(fresh), idx.path)
+    writePostings(kept.unionByName(fresh), idx.path)
     // doclens patched the same way: untouched rows kept, changed docs
     // recomputed from their text — O(changed), not a full postings re-agg
     Fs.rewrite(idx.doclens.join(broadcast(changed), Seq("doc_id"), "left_anti")

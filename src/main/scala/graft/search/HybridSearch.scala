@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.fts.{FtsIndex, Hybrid}
 import graft.index.MultiVectorIndex
 import graft.meta.{MetadataOps, Where}
+import graft.util.{Plan, ResidentSet}
 
 /** F9: the full hybrid-search driver API — the reference's
   * `POST /indices/{name}/search` orchestration
@@ -16,14 +17,15 @@ import graft.meta.{MetadataOps, Where}
   * legs prune), hybrid over-fetch fetch_k = 3·top_k.
   *
   * Keyword and hybrid requests of at most [[Searcher.LocalMaxBatch]]
-  * queries whose FTS artifact has a resident image within
-  * `searchParams.localIndexBudgetBytes` are answered on the driver, as
+  * queries whose FTS artifact's resident image is admitted
+  * ([[graft.util.ResidentSet]], against
+  * `searchParams.localIndexBudgetBytes`) are answered on the driver, as
   * the reference fuses in memory: both legs are collected (each at most
   * queries × fetch_k rows), fused by [[Hybrid.rrfLocal]] /
   * [[Hybrid.relativeScoreLocal]] and cut per query — with a resident
-  * semantic image too, no Spark job runs. Larger batches, a budget of 0,
-  * artifacts above it, and filters or tombstone sets too large to
-  * collect ([[graft.fts.FtsIndex.boundedIds]]) keep the distributed plan.
+  * semantic image too, no Spark job runs. Larger batches, a refused
+  * image, and filters ([[graft.fts.FtsIndex.boundedIds]]) or tombstone
+  * sets whose ids do not fit the budget keep the distributed plan.
   */
 final case class HybridParams(
     mode: String = "hybrid",
@@ -51,7 +53,11 @@ object HybridSearch {
       /** Caller-cached Searcher (GraftIndex reuses one across calls so
         * the serving fast path's image stays warm); a fresh one is
         * built when absent. */
-      searcherOpt: Option[Searcher] = None
+      searcherOpt: Option[Searcher] = None,
+      /** The request's admission pass over `fts`'s resident set
+        * (GraftIndex hands the one its request made); a fresh pass when
+        * absent. */
+      pass: Option[ResidentSet.Pass] = None
   ): DataFrame = {
     require(params.alpha >= 0.0 && params.alpha <= 1.0, s"alpha out of range: ${params.alpha}")
     require(Set("semantic", "keyword", "hybrid")(params.mode), s"bad mode: ${params.mode}")
@@ -64,16 +70,19 @@ object HybridSearch {
     val fetchK = if (params.mode == "hybrid") Hybrid.fetchK(params.topK) else params.topK
     val budget = params.searchParams.localIndexBudgetBytes
 
-    def semList(sub: Option[DataFrame]): DataFrame = searcherOpt.getOrElse(new Searcher(index))
+    lazy val searcher = searcherOpt.getOrElse(new Searcher(index))
+    def semList(sub: Option[DataFrame]): DataFrame = searcher
       .search(queries, params.searchParams.copy(topK = fetchK), sub)
       .select("query_id", "doc_id", "score", "rank")
 
     // serving-shaped keyword/hybrid batch over a resident FTS image: the
     // query ids are collected only once the image serves, and a filter
-    // only when its count fits the budget (tombstones likewise)
+    // only when its count fits the budget; the tombstone ids the
+    // Searcher holds serve when their count fits it too
     val local: Option[Local] =
       for {
-        img <- if (params.mode == "semantic") None else fts.residentImage(budget)
+        img <- if (params.mode == "semantic") None
+          else pass.fold(fts.residentImage(budget))(fts.residentImage)
         qids <- {
           import spark.implicits._
           val ids = queries.select(col("query_id").cast("long"))
@@ -82,13 +91,13 @@ object HybridSearch {
         }
         subsetIds <- subset.fold(Option(Option.empty[Array[Long]]))(
           FtsIndex.boundedIds(_, budget).map(Some(_)))
-        tombIds <- index.tombstonesOpt.fold(Option(Array.emptyLongArray))(
-          FtsIndex.boundedIds(_, budget))
+        tombIds <- Some(searcher.tombstoneIds)
+          .filter(_.length * Plan.SubsetBytesPerId <= budget)
       } yield Local(img, qids, subsetIds, tombIds)
 
     local match {
       case Some(l) =>
-        searchLocal(spark, index, l, textQuery, params, fetchK, subset, semList)
+        searchLocal(spark, searcher, l, textQuery, params, fetchK, subset, semList)
       case None if params.mode == "semantic" => semList(subset)
       case None =>
         // the FTS leg must not resurface tombstoned docs (the vector leg
@@ -134,7 +143,7 @@ object HybridSearch {
     * queries × fetch_k rows), fusion and per-query top-k on the driver.
     * The result is a local relation. */
   private def searchLocal(
-      spark: SparkSession, index: MultiVectorIndex, l: Local, textQuery: String,
+      spark: SparkSession, searcher: Searcher, l: Local, textQuery: String,
       params: HybridParams, fetchK: Int, subset: Option[DataFrame],
       semList: Option[DataFrame] => DataFrame): DataFrame = {
     import spark.implicits._
@@ -149,7 +158,7 @@ object HybridSearch {
         // filter is evaluated once, not once per leg); any other plan
         // gets the filter itself, whose subset joins are size-planned
         val semSubset =
-          if (Searcher.servesLocally(index, params.searchParams, l.qids.length))
+          if (searcher.servesLocally(params.searchParams, l.qids.length))
             l.subsetIds.map(_.toSeq.toDF("doc_id"))
           else subset
         val sem = semList(semSubset)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.core.MaxSim
 import graft.index.MultiVectorIndex
-import graft.util.Plan
+import graft.util.{Fs, Plan, ResidentSet}
 
 /** Search parameters — defaults match the reference
   * (next-plaid/src/search.rs:27-69). */
@@ -52,17 +52,11 @@ final case class SearchParams(
       * slices read from parquet per call, which hold nothing between
       * calls and collect no id list — the plan for an index no node
       * can hold. All placements return the same rows.
-      * The same budget bounds the three DRIVER images, admitted in a
-      * fixed order: the semantic image when its residency
-      * ([[Searcher.residentBytes]]) fits; the FTS artifact's BM25 image
-      * ([[graft.fts.FtsIndex]], which also gates driver-side
-      * keyword/hybrid fusion in [[HybridSearch]]) when
-      * [[graft.fts.FtsIndex.residentBytesEstimate]] plus the semantic
-      * charge fits; a [[graft.GraftIndex]]'s metadata image, which
-      * filtered searches evaluate their condition on, when
-      * [[graft.GraftIndex.metadataBytesEstimate]] plus both charges
-      * fits. Each image is charged whenever it is admitted, so their
-      * combined estimate never exceeds the budget. 0 admits no resident
+      * The same budget bounds the DRIVER images — semantic
+      * ([[Searcher.residentBytes]]), BM25 ([[graft.fts.FtsIndex]]) and
+      * metadata ([[graft.GraftIndex]]) — which one
+      * [[graft.util.ResidentSet]] per index admits in that order, so
+      * their combined estimate never exceeds it. 0 admits no resident
       * image at all. */
     localIndexBudgetBytes: Long = 768L << 20,
     /** Slice count of the cached executor slices; 0 = the session's
@@ -108,8 +102,9 @@ final case class SearchParams(
   * manifest/codec are lazily cached) snapshots the index when first
   * used — the cached images included. After an update lifecycle
   * (append/delete/rebuild), open a fresh handle, as the reference
-  * reopens its index; only the deferred-delete tombstone table is
-  * re-read per search call on every path.
+  * reopens its index; only the deferred-delete tombstones are followed
+  * per call, their ids held per stamp of `tombstones/` ([[tombstoneIds]])
+  * or anti-joined by the parquet placement.
   */
 final class Searcher(index: MultiVectorIndex) {
   private val spark: SparkSession = index.spark
@@ -134,7 +129,7 @@ final class Searcher(index: MultiVectorIndex) {
     // admits (see localIndexBudgetBytes). Its subset ids are collected —
     // bounded by the corpus, which fits the budget by dispatch — and the
     // subset's count and eligible codes are read from them and the image.
-    if (Searcher.servesLocally(index, params, queryMap.size)) {
+    if (servesLocally(params, queryMap.size)) {
       requireFresh()
       val img = localImage
       val ids = subset.map(_.select("doc_id").as[Long].collect())
@@ -444,7 +439,7 @@ final class Searcher(index: MultiVectorIndex) {
     * rewrite the manifest (and renumber ids), and silently answering
     * from the pre-rewrite image would resurrect deleted docs in the OLD
     * id space. Deferred deletes don't touch the manifest and stay
-    * correct — tombstones are re-read on every call. Keyed on the
+    * correct — tombstones are re-stamped on every call. Keyed on the
     * manifest's build_id (a per-write UUID), not (mtime,length): a
     * rebuild within filesystem timestamp granularity producing a
     * same-length manifest must still trip the guard. The parquet
@@ -458,20 +453,37 @@ final class Searcher(index: MultiVectorIndex) {
         "open a fresh Searcher/GraftIndex handle after updates")
   }
 
-  /** The S4 filter sets of the cached placements: the subset ids, and
-    * the deferred-delete tombstones, re-read per call (they can grow
-    * after an image was built). */
+  private val tombstones = {
+    val dir = s"${index.path}/tombstones"
+    ResidentSet.Entry[Array[Long]]("tombstones", dir, () => Fs.settledFingerprint(dir), () => 0L,
+      () => index.tombstonesOpt.fold(Array.emptyLongArray)(_.as[Long].collect()))
+  }
+
+  /** The distinct deferred-delete tombstone ids, collected once per
+    * stamp of `tombstones/` (they can grow after an image was built) and
+    * charged to no budget. */
+  private[search] def tombstoneIds: Array[Long] =
+    tombstones.resolve(_ => true, tombstones.current()).get
+
+  /** The S4 filter sets of the cached placements: the subset ids and the
+    * tombstone ids. */
   private def filterSets(subsetIds: Option[Array[Long]])
       : (Option[java.util.HashSet[java.lang.Long]], java.util.HashSet[java.lang.Long]) = {
-    val subsetSet = subsetIds.map { ids =>
+    def set(ids: Array[Long]) = {
       val s = new java.util.HashSet[java.lang.Long](ids.length * 2)
       ids.foreach(s.add(_))
       s
     }
-    val tombstones = new java.util.HashSet[java.lang.Long]()
-    index.tombstonesOpt.foreach(_.select("doc_id").as[Long].collect().foreach(tombstones.add(_)))
-    (subsetSet, tombstones)
+    (subsetIds.map(set), set(tombstoneIds))
   }
+
+  /** True when [[search]] answers an `nQueries` batch from the driver
+    * image — the dispatch itself, shared with callers that decide what
+    * to hand the search. */
+  private[search] def servesLocally(params: SearchParams, nQueries: Int): Boolean =
+    index.manifest("num_partitions").toInt <= params.sparseCentroidThreshold &&
+      nQueries <= Searcher.LocalMaxBatch &&
+      Searcher.residentBytes(index, params.localIndexBudgetBytes) > 0
 
   /** Collected-once image of a small index — IVF lists, per-doc code
     * arrays (tok order, the S5 input), packed token residuals (tok
@@ -879,31 +891,27 @@ object Searcher {
 
   /** Driver-residency multiplier for the fast-path dispatch:
     * localIndexBudgetBytes bounds a packed image estimated at N bytes
-    * by N × this factor. It was sized when the image also had a
-    * broadcast block (collected intermediate rows + the held image +
-    * the block, ~3N); the image is now held on the driver only, so its
-    * transient peak is ~2N and 3 overstates it. The factor is kept so
-    * that admission — which images serve locally, and what the FTS and
-    * metadata images are charged — does not change. */
+    * (`packedBytesEstimate`) by N × this factor. It was sized when the
+    * image also had a broadcast block (~3N). Measured with Spark's
+    * `SizeEstimator` on the driver image as `localImage` collects it:
+    * the serve-shaped index (400 docs × 32 tokens × dim 128, 128
+    * centroids, nbits 4; N = 1.80 MB) held 0.88N and peaked at 2.20N
+    * (the encoded and decoded token rows of the collect next to the
+    * IVF and codes maps); the sf0.01 index (100 docs, 500 tokens; N =
+    * 68 kB) held 1.15N and peaked at 2.09N. 3 overstates that peak by
+    * ~40%. The factor is kept so that admission — which images serve
+    * locally, and what the FTS and metadata images are charged — does
+    * not change. */
   private[search] val LocalResidencyFactor = 3L
 
   /** Estimated driver residency of `index`'s local image (packed
     * estimate × [[LocalResidencyFactor]]) when `budgetBytes` admits it,
-    * else 0 — what the sibling resident images of [[graft.GraftIndex]]
-    * (FTS and metadata) charge against the same budget. */
+    * else 0: the semantic image's charge in a
+    * [[graft.util.ResidentSet]]. */
   def residentBytes(index: MultiVectorIndex, budgetBytes: Long): Long = {
     val r = index.packedBytesEstimate * LocalResidencyFactor
     if (budgetBytes > 0 && r <= budgetBytes) r else 0L
   }
-
-  /** True when [[Searcher.search]] answers an `nQueries` batch from the
-    * resident local image — the dispatch itself, shared with callers
-    * that decide what to hand the search. */
-  private[search] def servesLocally(
-      index: MultiVectorIndex, params: SearchParams, nQueries: Int): Boolean =
-    index.manifest("num_partitions").toInt <= params.sparseCentroidThreshold &&
-      nQueries <= LocalMaxBatch && params.localIndexBudgetBytes > 0 &&
-      index.packedBytesEstimate * LocalResidencyFactor <= params.localIndexBudgetBytes
 
   /** Survivors per query sent to the S7 rerank: n_full/4, at least
     * topK (search.rs:460-469). */

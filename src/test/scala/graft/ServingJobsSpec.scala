@@ -12,9 +12,9 @@ import graft.search.{HybridParams, SearchParams, Searcher}
 /** Job-count guard for the serving paths: a warm semantic, keyword,
   * hybrid or filtered search on a small index runs NO Spark job
   * (resident BM25, semantic and metadata images, driver-side fusion),
-  * for a single query and for a batch, and a zero resident budget keeps
-  * the distributed plan reachable — for semantic search, one job per
-  * funnel phase. */
+  * for a single query and for a batch, also after a deferred delete, and
+  * a zero resident budget keeps the distributed plan reachable — for
+  * semantic search, one job per funnel phase. */
 class ServingJobsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -218,5 +218,50 @@ class ServingJobsSpec extends AnyFunSuite {
       assert(graft.util.Plan.countIds(parquet.filter(col("doc_id") < 0)) === 0L)
     } finally spark.sparkContext.removeSparkListener(Jobs)
     graft.util.Fs.deleteRecursively(path)
+  }
+
+  test("after a deferred delete, warm semantic, keyword and hybrid requests run 0 Spark jobs and hide the tombstoned docs") {
+    IndexFixtures.requireTestdata()
+    import spark.implicits._
+    val path = "/tmp/graft_serving_jobs_tombstones"
+    graft.util.Fs.deleteRecursively(path)
+    val docs = IndexFixtures.docs(spark).filter(col("doc_id") < 30)
+    val meta = (0L until 30L).map(i =>
+      (i, s"""{"title": "doc $i", "group": ${i % 3}}""")).toDF("order", "json")
+    val gi = GraftIndex.create(spark, path, docs, Some(meta))
+    // query i is doc i's own embeddings, so doc i ranks first for it
+    // until it is deleted
+    val embs = docs.select("doc_id", "embeddings")
+      .as[(Long, Array[Array[Float]])].collect().sortBy(_._1)
+    def queries(n: Int): DataFrame = embs.take(n).toSeq.toDF("query_id", "embeddings")
+    // no centroid is pruned, so a query keeps candidates besides its own doc
+    val sp = SearchParams(centroidScoreThreshold = None)
+    val requests: Seq[(String, () => DataFrame)] = Seq(
+      "1-query semantic" -> (() => gi.search(queries(1), sp)),
+      "8-query semantic" -> (() => gi.search(queries(8), sp)),
+      "keyword" -> (() => gi.hybrid(queries(1), "doc",
+        HybridParams(mode = "keyword", topK = 30, searchParams = sp))),
+      "hybrid" -> (() => gi.hybrid(queries(1), "doc", HybridParams(topK = 30, searchParams = sp))))
+    def hits(df: DataFrame): Set[Long] = df.select("doc_id").as[Long].collect().toSet
+    // doc 0 is the first query's top hit and doc 5 the sixth's
+    for ((name, request) <- requests)
+      assert(Set(0L, 5L).intersect(hits(request())).contains(0L), s"$name before the deletes")
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      for (deleted <- Seq(Set(0L), Set(0L, 5L))) {
+        gi.deleteDocuments(ids = Some(Seq(deleted.max)), deferred = true)
+        assert(gi.index.tombstonesOpt.isDefined && gi.count === 30L - deleted.size)
+        for ((name, request) <- requests) {
+          val first = hits(request())
+          assert(first.nonEmpty && (first & deleted).isEmpty,
+            s"$name: the request right after the delete of ${deleted.max} returned $first")
+          var warm = Set.empty[Long]
+          assert(jobsOf { warm = hits(request()) } === 0,
+            s"warm $name search with tombstones ${deleted.mkString(",")} launched Spark jobs")
+          assert(warm === first, name)
+        }
+      }
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+    gi.drop()
   }
 }
