@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.fts.FtsIndex
-import graft.index.{IndexConfig, MultiVectorIndex, UpdateConfig, Updater}
+import graft.index.{IndexConfig, MultiVectorIndex, Renumbering, UpdateConfig, Updater}
 import graft.meta.{JsonMeta, MetadataOps, Where}
 import graft.search.{HybridParams, HybridSearch, SearchParams, Searcher}
 import graft.util.ResidentSet
@@ -62,7 +62,7 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
     () => graft.util.Fs.settledFingerprint(metaPath),
     () => GraftIndex.metadataBytesEstimate(metaPath),
     () => {
-      val stored = spark.read.parquet(metaPath)
+      val stored = graft.util.Fs.readParquet(spark, metaPath)
       spark.createDataFrame(java.util.Arrays.asList(stored.collect(): _*), stored.schema)
     })
 
@@ -75,7 +75,7 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
 
   /** The stored metadata table. Every write path and the metadata routes
     * read it; filtered searches read [[filterSource]]. */
-  def metadata: DataFrame = spark.read.parquet(metaPath)
+  def metadata: DataFrame = graft.util.Fs.readParquet(spark, metaPath)
 
   /** The frame a filtered search evaluates its condition on: the
     * resident metadata image when the request's pass admits it, else the
@@ -353,9 +353,9 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
   // ---- delete (DELETE /indices/{name}/documents) ----
 
   /** Delete by ids or by condition; vector tables, metadata, and FTS all
-    * renumber through the same dense mapping (U5 + U7). The deletion set
-    * stays a DataFrame end-to-end — a broad condition at scale never
-    * collects to the driver.
+    * renumber through the same [[Renumbering]] (U5 + U7): the deleted
+    * ids are collected to the driver and each table is renumbered by a
+    * binary search over them.
     *
     * `deferred = true` tombstones the docs instead: search (vector,
     * hybrid, and the FTS leg) excludes them immediately, but no table is
@@ -391,39 +391,39 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
             tombstones.toDouble >= autoCompactRatio * index.numDocuments)
           compact()
       }
-    } else delDf.filterNot(_.isEmpty).foreach(deletePhysically)
+    } else delDf.foreach(deletePhysically)
     this
   }
 
-  /** Physical delete of `del(doc_id)` with dense renumbering. The set is
-    * materialized once first: the metadata table it may derive from is
-    * rewritten by [[followDelete]]. */
+  /** Physical delete of `del(doc_id)` with dense renumbering; a set that
+    * deletes nothing changes nothing. [[Updater.deleteFrom]] collects
+    * the ids before any rewrite, so `del` may derive from the metadata
+    * table [[followDelete]] rewrites. */
   private def deletePhysically(del: DataFrame): Unit = {
-    graft.util.Fs.rewrite(del.select("doc_id"), s"$path/pending_delete")
-    Updater.deleteFrom(spark, index, spark.read.parquet(s"$path/pending_delete"))
-    followDelete()
-    graft.util.Fs.deleteRecursively(s"$path/pending_delete")
+    val idx = index
+    val n0 = idx.numDocuments
+    if (Updater.deleteFrom(spark, idx, del).numDocuments != n0) followDelete()
   }
 
-  /** Metadata and FTS follow the INDEX's last old->new mapping —
-    * renumbering the FTS id set independently diverges when some docs
-    * lack metadata. */
+  /** Metadata and FTS follow the INDEX's last renumbering — renumbering
+    * the FTS id set independently diverges when some docs lack
+    * metadata. */
   private def followDelete(): Unit = {
+    val renum = Renumbering.last(spark, path)
     if (graft.util.Fs.exists(metaPath))
-      graft.util.Fs.rewrite(
-        Updater.syncMetadataDelete(spark, index, metadata, "_subset_"), metaPath)
+      graft.util.Fs.rewrite(renum(metadata, "_subset_"), metaPath)
     if (graft.util.Fs.exists(s"$path/fts/fts.json"))
-      FtsIndex.applyDeleteMapping(ftsIndex, spark.read.parquet(s"$path/last_delete_map"))
+      FtsIndex.applyDeleteMapping(ftsIndex, renum)
   }
 
   /** Apply pending deferred deletes as one physical renumbering delete;
     * metadata and FTS follow the same mapping. No-op without
     * tombstones. */
   def compact(): GraftIndex = graft.util.Journal.bracket(path) {
-    if (index.tombstonesOpt.isDefined) {
-      Updater.compact(spark, index)
+    val idx = index
+    val n0 = idx.numDocuments
+    if (idx.tombstonesOpt.isDefined && Updater.compact(spark, idx).numDocuments != n0)
       followDelete()
-    }
     this
   }
 

@@ -13,7 +13,7 @@ import graft.operators.Rankers
   * same values — the driver hash-compares after sorting columns by name).
   */
 object SparkEntry {
-  import Where.{SStr, SLong, SDouble}
+  import Where.{SStr, SDouble}
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
@@ -2475,13 +2475,14 @@ object SparkEntry {
           col("chunk_id"), col("doc_offset"), col("token_start"))
     }),
 
-    // U7: metadata sync on delete — the index delete's old→new dense
-    // renumber map (Updater.delete writes <path>/last_delete_map)
-    // applied to an aligned metadata table (index.rs:1826-1843, the
-    // `_subset_` ≡ doc_id invariant). The oracle recomputes the map
-    // from first principles (survivor rank over the pre-delete ids)
-    // and re-derives the same metadata rows — the Spark side reads the
-    // REAL map the delete wrote, so a renumber drift fails the hash.
+    // U7: metadata sync on delete — the index delete's dense
+    // renumbering (Updater.delete records it in the index directory,
+    // Renumbering.last) applied to an aligned metadata table
+    // (index.rs:1826-1843, the `_subset_` ≡ doc_id invariant). The
+    // oracle recomputes the map from first principles (survivor rank
+    // over the pre-delete ids) and re-derives the same metadata rows —
+    // the Spark side reads the REAL renumbering the delete recorded, so
+    // a renumber drift fails the hash.
     "u7_meta_sync" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")

@@ -114,7 +114,6 @@ object Fts {
       subset: Option[DataFrame] = None,
       doclensOpt: Option[DataFrame] = None
   ): DataFrame = {
-    import spark.implicits._
     // persisted doclens (FtsIndex) avoids re-aggregating the postings per
     // query AND carries parquet size stats, so Catalyst can auto-broadcast
     val doclens0 = doclensOpt.getOrElse(docLengths(postings))

@@ -3,6 +3,7 @@ package graft.fts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.Renumbering
 import graft.util.{Fs, Plan, ResidentSet}
 
 /** Persisted full-text index — the F3 lifecycle the round-1 engine
@@ -103,8 +104,8 @@ object FtsIndex {
   private[graft] final class Version(spark: SparkSession, path: String, stamp: String)
       extends ResidentSet.Version[Bm25Image](stamp, residentBytesEstimate(path),
         () => Bm25Image.collect(spark, path)) {
-    lazy val postings: DataFrame = spark.read.parquet(s"$path/postings")
-    lazy val doclens: DataFrame = spark.read.parquet(s"$path/doclens")
+    lazy val postings: DataFrame = Fs.readParquet(spark, s"$path/postings")
+    lazy val doclens: DataFrame = Fs.readParquet(spark, s"$path/doclens")
     lazy val tokenizer: String = readTokenizer(path)
   }
 
@@ -239,8 +240,8 @@ object FtsIndex {
     def collect(spark: SparkSession, path: String): Bm25Image = {
       import spark.implicits._
       val tokenizer = readTokenizer(path)
-      val post = spark.read.parquet(s"$path/postings")
-      val docBlocks = spark.read.parquet(s"$path/doclens")
+      val post = Fs.readParquet(spark, s"$path/postings")
+      val docBlocks = Fs.readParquet(spark, s"$path/doclens")
         .select(col("doc_id").cast("long"), col("dl").cast("long")).as[(Long, Long)]
         .mapPartitions { it =>
           val ids = Array.newBuilder[Long]
@@ -346,20 +347,21 @@ object FtsIndex {
     deleteFrom(idx, deleteIds.toDF("doc_id"), renumber)
   }
 
-  /** DataFrame-native delete (deletion set never passes through the
-    * driver; mapping joins planned by size from the parquet stats). */
+  /** [[delete]] of `del(doc_id)`: the deleted ids are collected to the
+    * driver; with `renumber` each survivor becomes its rank among the
+    * FTS's surviving ids (the ids need not be dense), else it keeps its
+    * id. One binary-search pass per table ([[Renumbering]]). */
   def deleteFrom(idx: FtsIndex, del: DataFrame, renumber: Boolean = true): FtsIndex = {
     val spark = idx.spark
-    val survivors = idx.doclens.select("doc_id")
-      .join(del.select("doc_id"), Seq("doc_id"), "left_anti")
-    val mapping =
-      if (renumber)
-        graft.meta.MetadataOps.denseResequenceScalable(
-          survivors, "doc_id", spark.sessionState.conf.numShufflePartitions)
-          .select(col("doc_id"), col("new_id"))
-      else survivors.select(col("doc_id"), col("doc_id").as("new_id"))
-    Fs.rewrite(mapping, s"${idx.path}/delete_map")
-    applyDeleteMapping(idx, spark.read.parquet(s"${idx.path}/delete_map"))
+    import spark.implicits._
+    val deleted = Renumbering.collectIds(del)
+    val renum =
+      if (renumber) {
+        val gone = deleted.toSet
+        Renumbering.ranks(spark, idx.doclens.select(col("doc_id").cast("long")).as[Long]
+          .collect().filterNot(gone))
+      } else Renumbering.without(spark, deleted)
+    applyDeleteMapping(idx, renum)
   }
 
   /** Append postings for NEW doc ids (no collision with existing ids —
@@ -377,19 +379,14 @@ object FtsIndex {
     new FtsIndex(idx.spark, idx.path)
   }
 
-  /** Apply an externally-computed old→new doc-id mapping (inner join:
-    * unmapped docs are dropped). This is how the FTS follows the vector
-    * index's delete re-sequencing EXACTLY — renumbering the FTS's own id
-    * set independently diverges as soon as some docs have no metadata
-    * (the FTS id set is then a strict subset of the index ids).
-    * `mapping(doc_id, new_id)`. */
-  def applyDeleteMapping(idx: FtsIndex, mapping: DataFrame): FtsIndex = {
-    val mapDf = mapping.select(col("doc_id"), col("new_id"))
-    writePostings(idx.postings.join(mapDf, "doc_id")
-      .select(col("term"), col("new_id").as("doc_id"), col("tf")),
-      idx.path)
-    Fs.rewrite(idx.doclens.join(mapDf, "doc_id")
-      .select(col("new_id").as("doc_id"), col("dl")), s"${idx.path}/doclens")
+  /** Apply an externally-computed renumbering (deleted docs are
+    * dropped). This is how the FTS follows the vector index's delete
+    * re-sequencing EXACTLY — renumbering the FTS's own id set
+    * independently diverges as soon as some docs have no metadata (the
+    * FTS id set is then a strict subset of the index ids). */
+  def applyDeleteMapping(idx: FtsIndex, renum: Renumbering): FtsIndex = {
+    writePostings(renum(idx.postings, "doc_id").select("term", "doc_id", "tf"), idx.path)
+    Fs.rewrite(renum(idx.doclens, "doc_id").select("doc_id", "dl"), s"${idx.path}/doclens")
     new FtsIndex(idx.spark, idx.path)
   }
 

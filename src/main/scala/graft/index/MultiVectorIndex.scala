@@ -1,8 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Quantizer, Quantiles}
+import graft.util.Fs
 
 /** Index build config — defaults match the reference
   * (next-plaid/src/index.rs:88-102). */
@@ -36,11 +37,11 @@ final case class IndexConfig(
   * exact-rerank gather is a range read, and IVF stays small (K rows).
   */
 final class MultiVectorIndex(val spark: SparkSession, val path: String) {
-  lazy val tokens: DataFrame = spark.read.parquet(s"$path/tokens")
-  lazy val ivf: DataFrame = spark.read.parquet(s"$path/ivf")
-  lazy val doclens: DataFrame = spark.read.parquet(s"$path/doclens")
+  lazy val tokens: DataFrame = Fs.readParquet(spark, s"$path/tokens")
+  lazy val ivf: DataFrame = Fs.readParquet(spark, s"$path/ivf")
+  lazy val doclens: DataFrame = Fs.readParquet(spark, s"$path/doclens")
   /** Build artifact `(doc_id, codes: array<int>)` — see build(). */
-  lazy val docCodes: DataFrame = spark.read.parquet(s"$path/doc_codes")
+  lazy val docCodes: DataFrame = Fs.readParquet(spark, s"$path/doc_codes")
 
   lazy val manifest: Map[String, String] = {
     val node = MultiVectorIndex.jsonMapper.readTree(
@@ -56,9 +57,11 @@ final class MultiVectorIndex(val spark: SparkSession, val path: String) {
   /** Pending deferred-delete tombstones `(doc_id)` — docs hidden from
     * search but not yet physically removed/renumbered (see
     * [[Updater.deleteDeferred]]). None when the table is absent. */
-  def tombstonesOpt: Option[DataFrame] =
-    if (graft.util.Fs.exists(s"$path/tombstones"))
-      Some(spark.read.parquet(s"$path/tombstones").select("doc_id").distinct())
+  def tombstonesOpt: Option[DataFrame] = tombstoneTable.map(_.select("doc_id").distinct())
+
+  /** The stored tombstone table as written (ids may repeat). */
+  private[index] def tombstoneTable: Option[DataFrame] =
+    if (Fs.exists(s"$path/tombstones")) Some(Fs.readParquet(spark, s"$path/tombstones"))
     else None
 
   def numDocuments: Long = manifest("num_documents").toLong
@@ -109,7 +112,8 @@ object MultiVectorIndex {
     // Keep the raw embeddings while the corpus is small enough for the
     // start-from-scratch rebuild path (index.rs:964-969, threshold 999);
     // clear any stale update-lifecycle state from a previous build.
-    Seq("buffer", "last_delete_map").foreach(t => graft.util.Fs.deleteRecursively(s"$path/$t"))
+    Fs.deleteRecursively(s"$path/buffer")
+    Renumbering.clear(path)
     if (numDocs <= UpdateConfigDefaults.StartFromScratch) {
       graft.util.Fs.rewrite(docsIn.select("doc_id", "embeddings"), s"$path/raw_docs")
     }
@@ -226,7 +230,7 @@ object MultiVectorIndex {
         .sortWithinPartitions("doc_id", "tok"),
       s"$path/tokens")
 
-    val tokensOut = spark.read.parquet(s"$path/tokens")
+    val tokensOut = Fs.readParquet(spark, s"$path/tokens")
 
     // --- B8: IVF posting lists (sort+dedup, index.rs:479-508) ------------
     graft.util.Fs.rewrite(
@@ -379,13 +383,14 @@ object MultiVectorIndex {
       node.get("cluster_threshold").floatValue())
   }
 
+  /** The codebook is K rows: one collect, sorted on the driver. */
   def loadCodec(spark: SparkSession, path: String): Codec = {
     import spark.implicits._
-    val rows = spark.read.parquet(s"$path/codec")
-      .orderBy("code").select("vec").as[Array[Float]].collect()
-    val dim = rows(0).length
+    val rows = Fs.readParquet(spark, s"$path/codec")
+      .select(col("code").cast("long"), col("vec")).as[(Long, Array[Float])].collect().sortBy(_._1)
+    val dim = rows(0)._2.length
     val flat = new Array[Float](rows.length * dim)
-    rows.zipWithIndex.foreach { case (v, i) =>
+    rows.zipWithIndex.foreach { case ((_, v), i) =>
       System.arraycopy(v, 0, flat, i * dim, dim)
     }
     val (quantizer, avgResidual, clusterThreshold) = loadQuantizerMeta(path)

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta.MetadataOps
@@ -17,7 +17,10 @@ import graft.meta.MetadataOps
   * swapped in. Appends are pure parquet-file additions — no rewrite of
   * existing data. The IVF "patch" is a merge of the old posting lists
   * with the new docs' postings (full-outer join on code) — only affected
-  * codes change, exactly like the reference's in-place patch.
+  * codes change, exactly like the reference's in-place patch. A delete
+  * renumbers every table by the reference's binary search over the
+  * deleted ids ([[Renumbering]]): one narrow pass per table, the IVF
+  * lists mapped element-wise, no join or shuffle.
   */
 object UpdateConfigDefaults {
   /** Reference thresholds (update.rs:75-108). */
@@ -93,20 +96,22 @@ object Updater {
       codecOverride: Option[Codec] = None,
       refreshThreshold: Boolean = false): MultiVectorIndex =
     graft.util.Journal.bracket(idx.path) {
-      appendImpl(spark, idx, newDocs, codecOverride, refreshThreshold)
+      appendImpl(spark, idx, newDocs, newDocs.count(), codecOverride, refreshThreshold)
     }
 
+  /** [[append]] of a batch of `nNew` docs, inside the caller's bracket
+    * (the update dispatcher counts its batch once). */
   private def appendImpl(
       spark: SparkSession,
       idx: MultiVectorIndex,
       newDocs: DataFrame,
+      nNew: Long,
       codecOverride: Option[Codec],
       refreshThreshold: Boolean): MultiVectorIndex = {
     import spark.implicits._
     val path = idx.path
     val codec = codecOverride.getOrElse(idx.codec)
     val offset = idx.numDocuments
-    val nNew = newDocs.count()
     if (nNew == 0) return idx
 
     val codecBc = spark.sparkContext.broadcast(codec)
@@ -134,7 +139,13 @@ object Updater {
       }
       .toDF("doc_id", "tok", "code", "residual", "rnorm")
       .cache()
-    val nNewTokens = newTokens.count()
+
+    // the token count is observed in the tokens append's own pass (which
+    // also fills the cache), not by a count job
+    val tokenCount = org.apache.spark.sql.Observation("append tokens")
+    graft.util.Fs.appendTable(newTokens.select("doc_id", "tok", "code", "residual")
+      .observe(tokenCount, count(lit(1)).as("n")), s"$path/tokens")
+    val nNewTokens = tokenCount.get("n").asInstanceOf[Long]
 
     // U-threshold refresh (update.rs:385-427): new 0.75-quantile of the
     // appended residual norms, blended with the old threshold weighted by
@@ -154,15 +165,15 @@ object Updater {
       }
     val finalCodec = refreshedCodec.getOrElse(codec)
 
-    graft.util.Fs.appendTable(
-      newTokens.select("doc_id", "tok", "code", "residual"), s"$path/tokens")
-    graft.util.Fs.appendTable(
-      newTokens.groupBy("doc_id").agg(count(lit(1)).as("len")), s"$path/doclens")
-    graft.util.Fs.appendTable(
-      newTokens.groupBy("doc_id")
-        .agg(transform(array_sort(collect_list(struct(col("tok"), col("code")))),
-          x => x.getField("code")).as("codes")),
-      s"$path/doc_codes")
+    // doclens and doc_codes from one per-doc aggregation (as the build)
+    val perDoc = newTokens.groupBy("doc_id")
+      .agg(count(lit(1)).as("len"),
+        transform(array_sort(collect_list(struct(col("tok"), col("code")))),
+          x => x.getField("code")).as("codes"))
+      .cache()
+    graft.util.Fs.appendTable(perDoc.select("doc_id", "len"), s"$path/doclens")
+    graft.util.Fs.appendTable(perDoc.select("doc_id", "codes"), s"$path/doc_codes")
+    perDoc.unpersist()
 
     // IVF patch: merge new postings into affected codes (update.rs IVF
     // patch semantics — untouched codes pass through unchanged).
@@ -205,62 +216,52 @@ object Updater {
 
   /** Remove docs and renumber the survivors densely 0..N-1 in old-id
     * order — the `_subset_`/FTS alignment invariant (index.rs:1826-1843).
-    * The IVF is regenerated from the renumbered token pairs: in Spark the
-    * re-agg IS the reference's binary-search renumber patch — same
-    * (code, doc) pairs, one shuffle keyed by code. Returns the new index;
-    * the old→new id mapping is written to `<path>/last_delete_map` for
-    * metadata/FTS sync (U7). */
+    * Out-of-range and repeated ids are ignored. Returns the new index;
+    * the renumbering is recorded for metadata/FTS sync (U7,
+    * [[Renumbering.last]]). */
   def delete(spark: SparkSession, idx: MultiVectorIndex, deleteIds: Seq[Long]): MultiVectorIndex = {
     import spark.implicits._
-    deleteFrom(spark, idx, deleteIds.distinct.toDF("doc_id"))
+    deleteFrom(spark, idx, deleteIds.toDF("doc_id"))
   }
 
-  /** DataFrame-native delete — the deletion set never passes through the
-    * driver, and the old→new mapping joins are planned by size (the
-    * mapping is re-read from parquet, so Catalyst broadcasts it only
-    * when it actually fits). `del(doc_id)`. */
+  /** [[delete]] of `del(doc_id)`, the reference's binary-search
+    * renumber (delete.rs:66-273): the ids are collected to the driver
+    * (ids already there cost no job) and a survivor `old` becomes
+    * `old − #(deleted ids < old)`, one narrow filter-and-map pass per
+    * table, each IVF list mapped element-wise ([[Renumbering]]). The
+    * ids are collected before any table is rewritten, so `del` may
+    * derive from a table the delete rewrites (the tombstones, the
+    * metadata). A set that deletes nothing rewrites nothing. */
   def deleteFrom(spark: SparkSession, idx: MultiVectorIndex, del: DataFrame): MultiVectorIndex =
-    graft.util.Journal.bracket(idx.path) { deleteFromImpl(spark, idx, del) }
+    graft.util.Journal.bracket(idx.path) {
+      val (renum, n) = Renumbering.record(spark, idx.path, Renumbering.collectIds(del), idx.numDocuments)
+      if (n == 0) idx else renumberImpl(spark, idx, renum, idx.numDocuments - n)
+    }
 
-  private def deleteFromImpl(
-      spark: SparkSession, idx: MultiVectorIndex, del: DataFrame): MultiVectorIndex = {
+  /** Rewrite every remapped table of `idx` through `renum`, leaving
+    * `nDocs` docs; the embedding count is observed in the tokens
+    * rewrite's own pass. */
+  private def renumberImpl(
+      spark: SparkSession, idx: MultiVectorIndex, renum: Renumbering, nDocs: Long): MultiVectorIndex = {
     val path = idx.path
-    val survivors = idx.doclens.select("doc_id")
-      .join(del.select("doc_id"), Seq("doc_id"), "left_anti")
-    val numRanges = spark.sessionState.conf.numShufflePartitions
-    val mapping = MetadataOps.denseResequenceScalable(survivors, "doc_id", numRanges)
-      .select(col("doc_id"), col("new_id"))
-    rewrite(mapping, s"$path/last_delete_map")
-    val mapDf = spark.read.parquet(s"$path/last_delete_map")
-    val nDocs = mapDf.count()
-
-    val tokens2 = idx.tokens.join(mapDf, "doc_id")
-      .select(col("new_id").as("doc_id"), col("tok"), col("code"), col("residual"))
-    rewrite(tokens2, s"$path/tokens")
-    val tokensOut = spark.read.parquet(s"$path/tokens")
-
-    rewrite(idx.doclens.join(mapDf, "doc_id")
-      .select(col("new_id").as("doc_id"), col("len")), s"$path/doclens")
-    rewrite(idx.docCodes.join(mapDf, "doc_id")
-      .select(col("new_id").as("doc_id"), col("codes")), s"$path/doc_codes")
-    rewrite(tokensOut.groupBy("code")
-      .agg(sort_array(collect_set("doc_id")).as("doc_ids")), s"$path/ivf")
+    val tokenCount = org.apache.spark.sql.Observation("delete tokens")
+    rewrite(renum(idx.tokens, "doc_id").select("doc_id", "tok", "code", "residual")
+      .observe(tokenCount, count(lit(1)).as("n")), s"$path/tokens")
+    val nEmb = tokenCount.get("n").asInstanceOf[Long]
+    rewrite(renum(idx.doclens, "doc_id").select("doc_id", "len"), s"$path/doclens")
+    rewrite(renum(idx.docCodes, "doc_id").select("doc_id", "codes"), s"$path/doc_codes")
+    rewrite(renum.ivf(idx.ivf), s"$path/ivf")
 
     // buffer + raw docs cleanup (delete.rs:286-430)
     Seq("buffer", "raw_docs").foreach { t =>
-      if (exists(s"$path/$t")) {
-        rewrite(spark.read.parquet(s"$path/$t").join(mapDf, "doc_id")
-          .select(col("new_id").as("doc_id"), col("embeddings")), s"$path/$t")
-      }
+      if (exists(s"$path/$t"))
+        rewrite(renum(graft.util.Fs.readParquet(spark, s"$path/$t"), "doc_id")
+          .select("doc_id", "embeddings"), s"$path/$t")
     }
     // pending tombstones follow the same renumbering (tombstoned ids that
-    // were just deleted drop out of the inner join)
-    if (exists(s"$path/tombstones")) {
-      rewrite(spark.read.parquet(s"$path/tombstones").join(mapDf, "doc_id")
-        .select(col("new_id").as("doc_id")), s"$path/tombstones")
-    }
+    // were just deleted drop out)
+    idx.tombstoneTable.foreach(t => rewrite(renum(t, "doc_id").select("doc_id"), s"$path/tombstones"))
 
-    val nEmb = tokensOut.count()
     val m = idx.manifest
     MultiVectorIndex.writeManifest(path, m ++ Map(
       "num_documents" -> nDocs.toString,
@@ -287,7 +288,7 @@ object Updater {
   private def recoverStagedTombstones(spark: SparkSession, path: String): Unit = {
     val staged = s"$path/pending_tomb"
     if (exists(staged)) {
-      val df = spark.read.parquet(staged).select("doc_id")
+      val df = graft.util.Fs.readParquet(spark, staged).select("doc_id")
       if (!df.isEmpty)
         graft.util.Fs.appendTable(df, s"$path/tombstones")
       deleteRecursively(staged)
@@ -311,9 +312,9 @@ object Updater {
   }
 
   /** Apply all pending tombstones as one physical delete (dense
-    * renumber included); no-op without tombstones. The old→new mapping
-    * lands in `<path>/last_delete_map` exactly like an eager delete, so
-    * metadata/FTS sync works the same way. */
+    * renumber included); no-op without tombstones. The renumbering is
+    * recorded exactly like an eager delete's, so metadata/FTS sync works
+    * the same way. */
   def compact(spark: SparkSession, idx: MultiVectorIndex): MultiVectorIndex =
     graft.util.Journal.bracket(idx.path) { compactImpl(spark, idx) }
 
@@ -323,27 +324,20 @@ object Updater {
     idx.tombstonesOpt match {
       case None => idx
       case Some(tomb) =>
-        rewrite(tomb, s"$path/pending_compact")
-        val del = spark.read.parquet(s"$path/pending_compact")
-        val out = deleteFrom(spark, idx, del)
+        // the ids are collected before the delete rewrites the tombstones
+        val out = deleteFrom(spark, idx, tomb)
         deleteRecursively(s"$path/tombstones")
-        deleteRecursively(s"$path/pending_compact")
         out
     }
   }
 
-  /** U7: apply the index delete's id re-sequencing to a metadata table —
-    * same old→new mapping (join on the id column), so `_subset_` ≡
-    * doc_id stays aligned with the index after [[delete]]. */
+  /** U7: apply the last index delete's renumbering ([[Renumbering.last]])
+    * to a metadata table keyed by `idCol`, so `_subset_` ≡ doc_id stays
+    * aligned with the index after [[delete]]. */
   def syncMetadataDelete(
       spark: SparkSession, idx: MultiVectorIndex,
-      meta: DataFrame, idCol: String): DataFrame = {
-    val mapDf = spark.read.parquet(s"${idx.path}/last_delete_map")
-      .select(col("doc_id").as(idCol), col("new_id"))
-    meta.join(mapDf, idCol)
-      .drop(idCol)
-      .withColumnRenamed("new_id", idCol)
-  }
+      meta: DataFrame, idCol: String): DataFrame =
+    Renumbering.last(spark, idx.path)(meta, idCol)
 
   // ---------- U1: 3-mode dispatcher ----------
 
@@ -410,11 +404,11 @@ object Updater {
       // mode 1: full rebuild from raw embeddings (index.rs:964-969).
       // raw_docs are already pooled — rebuild with poolFactor=1 (pooling
       // is not idempotent), then re-record the original factor.
-      val raw = spark.read.parquet(s"$path/raw_docs")
+      val raw = graft.util.Fs.readParquet(spark, s"$path/raw_docs")
       val all = raw.select("doc_id", "embeddings")
         .unionByName(newDocs.select((col("doc_id") + lit(n0)).as("doc_id"), col("embeddings")))
       rewrite(all, s"$path/raw_docs_in")
-      val allIn = spark.read.parquet(s"$path/raw_docs_in")
+      val allIn = graft.util.Fs.readParquet(spark, s"$path/raw_docs_in")
       val out = MultiVectorIndex.build(spark, allIn, path, baseCfg.copy(poolFactor = 1))
       if (baseCfg.poolFactor > 1) {
         MultiVectorIndex.writeManifest(path,
@@ -425,13 +419,13 @@ object Updater {
     } else {
       val bufPath = s"$path/buffer"
       val buffered: Option[DataFrame] =
-        if (exists(bufPath)) Some(spark.read.parquet(bufPath)) else None
+        if (exists(bufPath)) Some(graft.util.Fs.readParquet(spark, bufPath)) else None
       val bufLen = buffered.map(_.count()).getOrElse(0L)
       val nNew = newDocs.count()
 
       if (bufLen + nNew < cfg.bufferSize) {
         // mode 2: cheap append + grow the buffer (update.rs:132-263)
-        val idx2 = append(spark, idx, newDocs)
+        val idx2 = appendImpl(spark, idx, newDocs, nNew, None, refreshThreshold = false)
         val newGlobal = newDocs.select((col("doc_id") + lit(idx.numDocuments)).as("doc_id"),
           col("embeddings"))
         graft.util.Fs.appendTable(newGlobal, bufPath)
@@ -458,7 +452,7 @@ object Updater {
             case None => tomb.limit(0)
           }
           rewrite(bt, s"$path/pending_tomb")
-          spark.read.parquet(s"$path/pending_tomb").count() > 0
+          graft.util.Fs.parquetRows(s"$path/pending_tomb") > 0
         }
         val bufLocal = buffered.map { b =>
           // buffered ids were the index suffix: delete keeps earlier ids
@@ -474,7 +468,7 @@ object Updater {
         }
         rewrite(combined, s"$path/pending")
         val idxDel = if (bufferIds.nonEmpty) delete(spark, idx, bufferIds) else idx
-        val pending = spark.read.parquet(s"$path/pending")
+        val pending = graft.util.Fs.readParquet(spark, s"$path/pending")
         val tokens = pending.select(col("doc_id"),
           posexplode(col("embeddings")).as(Seq("tok", "vec")))
         val outliers = findOutliers(spark, tokens, idxDel.codec)
@@ -482,12 +476,12 @@ object Updater {
         // the expansion path refreshes cluster_threshold from the
         // re-appended batch's residual norms (index.rs:1555-1562 passes
         // update_threshold=true only here, not on cheap appends)
-        val idx3 = append(spark, idxDel, pending,
+        val idx3 = appendImpl(spark, idxDel, pending, bufLen + nNew,
           codecOverride = if (codec2.numCentroids != idxDel.codec.numCentroids) Some(codec2) else None,
           refreshThreshold = true)
         if (bufTombStaged)
           graft.util.Fs.appendTable(
-            spark.read.parquet(s"$path/pending_tomb"), s"$path/tombstones")
+            graft.util.Fs.readParquet(spark, s"$path/pending_tomb"), s"$path/tombstones")
         if (exists(s"$path/pending_tomb")) deleteRecursively(s"$path/pending_tomb")
         deleteRecursively(bufPath)
         deleteRecursively(s"$path/pending")

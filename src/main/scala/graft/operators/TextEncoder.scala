@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import java.util.concurrent.locks.ReentrantLock
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** E4: session-pool parallel text encoding

@@ -736,8 +736,6 @@ object Dedup {
     * keep), singletons labeling themselves. */
   def duplicateClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxIters: Int = 30): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     var edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
       .filter(col("a") =!= col("b"))
       .distinct()

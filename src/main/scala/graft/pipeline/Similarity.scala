@@ -523,7 +523,6 @@ object Similarity {
       tau: Double,
       maxClusterSize: Int = 10000): DataFrame = {
     graft.functions.ArrayMath.register(spark)
-    val k = centroids.length / dim
     import spark.implicits._
     val centDf = broadcast(
       centroids.grouped(dim).zipWithIndex

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.core.MaxSim
 import graft.index.MultiVectorIndex

@@ -308,7 +308,7 @@ final class Searcher(index: MultiVectorIndex) {
     val queriesBc = spark.sparkContext.broadcast(queryMap)
     val maxTokens = queryMap.values.map(_.length).foldLeft(1)(math.max)
 
-    val centDf = spark.read.parquet(s"${index.path}/codec").select("code", "vec")
+    val centDf = graft.util.Fs.readParquet(spark, s"${index.path}/codec").select("code", "vec")
 
     // S1/S2 distributed probe selection
     val probed = Searcher.sparseProbe(

@@ -277,12 +277,12 @@ object NpyImport {
       numTokens += t
     }
     // one distributed pass lays the tokens out range-partitioned/sorted
-    spark.read.parquet(s"$outPath/tokens_in")
+    graft.util.Fs.readParquet(spark, s"$outPath/tokens_in")
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
       .sortWithinPartitions("doc_id", "tok")
       .write.mode(SaveMode.Overwrite).parquet(s"$outPath/tokens")
     graft.util.Fs.deleteRecursively(s"$outPath/tokens_in")
-    val tokensOut = spark.read.parquet(s"$outPath/tokens")
+    val tokensOut = graft.util.Fs.readParquet(spark, s"$outPath/tokens")
     tokensOut.groupBy("code").agg(sort_array(collect_set("doc_id")).as("doc_ids"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outPath/ivf")
     tokensOut.groupBy("doc_id").agg(count(lit(1)).as("len"))

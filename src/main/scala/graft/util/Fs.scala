@@ -99,14 +99,7 @@ object Fs {
     * "how many part files did that write actually emit". */
   def countDataFiles(path: String): Int = {
     val (f, p) = fs(path)
-    if (!f.exists(p)) return 0
-    var n = 0
-    val it = f.listFiles(p, true)
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-    }
-    n
+    if (!f.exists(p)) 0 else dataFiles(f, p).size
   }
 
   /** Row count of the parquet table at `path` from its file footers —
@@ -121,27 +114,63 @@ object Fs {
   def parquetTotals(path: String): (Long, Long) = {
     val (f, p) = fs(path)
     if (!f.exists(p)) return (0L, 0L)
-    filesUnder(f, p).filter { st =>
-      val name = st.getPath.getName
-      !name.startsWith("_") && !name.startsWith(".")
-    }.map { st =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, f.getConf))
-      try {
-        var bytes = 0L
-        r.getFooter.getBlocks.forEach(b => bytes += b.getTotalByteSize)
-        (r.getRecordCount, bytes)
-      } finally r.close()
+    dataFiles(f, p).map { st =>
+      val footer = readFooter(f, st)
+      var (rows, bytes) = (0L, 0L)
+      footer.getBlocks.forEach { b => rows += b.getRowCount; bytes += b.getTotalByteSize }
+      (rows, bytes)
     }.foldLeft((0L, 0L)) { case ((n, b), (n1, b1)) => (n + n1, b + b1) }
+  }
+
+  private def readFooter(
+      f: FileSystem, st: org.apache.hadoop.fs.FileStatus): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, f.getConf))
+    try r.getFooter
+    finally r.close()
   }
 
   /** Every file under `p`, recursively, by `listStatus`: unlike
     * `listFiles`, whose located statuses load permissions (a forked
     * `ls` per file on the local filesystem), a bare status costs one
-    * directory read per directory. */
+    * directory read per directory. Directories whose names start with
+    * `_` or `.` are skipped — Spark's own hidden-path rule — so the
+    * uncommitted part files of an in-flight write (`_temporary/`) are
+    * never counted, stamped or opened. */
   private def filesUnder(f: FileSystem, p: HPath): Seq[org.apache.hadoop.fs.FileStatus] =
     f.listStatus(p).toSeq.flatMap(st =>
-      if (st.isDirectory) filesUnder(f, st.getPath) else Seq(st))
+      if (!st.isDirectory) Seq(st)
+      else if (hidden(st.getPath.getName)) Seq.empty
+      else filesUnder(f, st.getPath))
+
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** The committed data files of the parquet table at `p`: [[filesUnder]]
+    * without writer side-markers (`_SUCCESS`, `.crc` sidecars). */
+  private def dataFiles(f: FileSystem, p: HPath): Seq[org.apache.hadoop.fs.FileStatus] =
+    filesUnder(f, p).filterNot(st => hidden(st.getPath.getName))
+
+  /** The parquet table at `dir`, opened with the Spark row schema stored
+    * in one committed data file's footer — a driver-side metadata read —
+    * instead of the schema-inference Spark job a bare
+    * `spark.read.parquet` runs on every open. Falls back to
+    * `spark.read.parquet` when that schema is not there to read: no data
+    * file, a partitioned (nested) layout, or a file written without
+    * Spark's row metadata. A file that vanishes under a concurrent
+    * rewrite swap surfaces as `FileNotFoundException`, the stale-read
+    * shape callers already retry. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame = {
+    val (f, p) = fs(dir)
+    val entries =
+      if (f.exists(p)) f.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName)) else Seq.empty
+    val schema =
+      if (entries.exists(_.isDirectory)) None
+      else entries.headOption.flatMap(st => Option(readFooter(f, st).getFileMetaData
+        .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")))
+        .map(json => org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+    schema.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+  }
 
   /** (modification time, length) stamp of a side file — cheap change
     * detection for cached readers (a rewritten manifest.json means the

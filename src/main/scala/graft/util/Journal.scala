@@ -202,8 +202,8 @@ object Journal {
           persist(j)
         }
         // retention only preserves PRE-UPDATE state: a dir this journal
-        // itself created (existed-before=false — e.g. the compact
-        // scratch pending_compact) has nothing to retain; renaming it
+        // itself created (existed-before=false — e.g. the mode-3
+        // scratch pending) has nothing to retain; renaming it
         // to _prev would make recovery resurrect an intra-update
         // artifact (the drill's compact k=38 caught exactly that)
         if (j.rewrites(k) && !Fs.exists(dir + "_prev"))
@@ -328,7 +328,7 @@ object Journal {
         // back — _tmp stagings are pre-swap garbage here, NEVER a
         // crashed non-journaled swap to roll forward (the drill's
         // delete k=7 caught exactly that misclassification: the sweep
-        // promoted a staged last_delete_map into a phantom table)
+        // promoted a staged delete-map table into a phantom table)
         sweepStrays(root, rollForwardTmp = false)
       } else sweepStrays(root, rollForwardTmp = true)
     }

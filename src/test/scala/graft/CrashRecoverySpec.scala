@@ -64,12 +64,12 @@ class CrashRecoverySpec extends AnyFunSuite {
 
   private val Tables = Seq(
     "tokens", "doclens", "doc_codes", "ivf", "codec", "meta", "raw_docs",
-    "buffer", "tombstones", "last_delete_map", "pending_delete",
-    "pending_compact", "pending_tomb", "fts/postings", "fts/doclens")
+    "buffer", "tombstones", "pending_tomb", "fts/postings", "fts/doclens")
 
   /** Content signature of the whole index dir: per-table (rows, hash),
-    * manifest logical fields, codec.json digest, journal marker
-    * absence. Insensitive to file layout and build_id. */
+    * manifest logical fields, side-file digests (codec.json, the last
+    * delete's renumbering), journal marker absence. Insensitive to file
+    * layout and build_id. */
   private def signature(path: String): String = {
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
     Tables.foreach { t =>
@@ -84,7 +84,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       parts += (m - "build_id").toSeq.sorted.map { case (k, v) => s"$k=$v" }
         .mkString("manifest{", ",", "}")
     }
-    Seq("codec.json", "fts/fts.json", "config.json").foreach { f =>
+    Seq("codec.json", "fts/fts.json", "config.json", "last_delete_ids").foreach { f =>
       if (Fs.exists(s"$path/$f"))
         parts += s"$f:" + java.security.MessageDigest.getInstance("MD5")
           .digest(Fs.readBytes(s"$path/$f")).map("%02x".format(_)).mkString

@@ -99,4 +99,28 @@ class FsCacheSpec extends AnyFunSuite {
     Fs.stampCache(cache.toString, fp2)
     assert(Fs.cacheFresh(cache.toString, fp2))
   }
+
+  test("parquetRows, fingerprint and readParquet ignore an in-flight write's _temporary files") {
+    import spark.implicits._
+    val dir = tmpDir("graft_inflight").resolve("t").toString
+    (0L until 10L).toDF("doc_id").write.parquet(dir)
+    val fp = Fs.fingerprint(dir)
+    val schema = spark.read.parquet(dir).schema
+    // an uncommitted part file of a concurrent write, of another schema,
+    // where Spark's committer stages it
+    val other = tmpDir("graft_inflight_other").resolve("o").toString
+    (0 until 5).map(i => (i.toString, i)).toDF("x", "y").coalesce(1).write.parquet(other)
+    val part = Files.list(Paths.get(other)).toArray.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).head
+    val staging = Paths.get(dir, "_temporary", "0", "_temporary", "attempt_0")
+    Files.createDirectories(staging)
+    Files.copy(part, staging.resolve("part-00000-inflight.snappy.parquet"))
+    Files.copy(part, Paths.get(dir, "_temporary", "0", "part-00001-inflight.snappy.parquet"))
+
+    assert(Fs.parquetRows(dir) === 10L)
+    assert(Fs.fingerprint(dir) === fp)
+    val read = Fs.readParquet(spark, dir)
+    assert(read.schema === schema)
+    assert(read.count() === 10L)
+  }
 }

@@ -264,4 +264,38 @@ class ServingJobsSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(Jobs)
     gi.drop()
   }
+
+  test("an eager delete by ids runs at most 12 jobs; the first search on a freshly opened handle at most 4") {
+    IndexFixtures.requireTestdata()
+    // Spark's default broadcast threshold, session-local: the shared
+    // session's is whatever an earlier spec of the run left there
+    val spark = this.spark.newSession()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    import spark.implicits._
+    val path = "/tmp/graft_serving_jobs_writes"
+    graft.util.Fs.deleteRecursively(path)
+    val docs = IndexFixtures.docs(spark).filter(col("doc_id") < 30)
+    val meta = (0L until 30L).map(i =>
+      (i, s"""{"title": "doc $i", "group": ${i % 3}}""")).toDF("order", "json")
+    val gi = GraftIndex.create(spark, path, docs, Some(meta))
+    val q = docs.filter(col("doc_id") === 4L)
+      .select(col("doc_id").as("query_id"), col("embeddings"))
+      .as[(Long, Array[Array[Float]])].collect().toSeq.toDF("query_id", "embeddings")
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      // one narrow pass per remapped table (tokens, doclens, doc_codes,
+      // IVF, raw docs, metadata, FTS postings and doclens), no open or
+      // count job
+      val deleteJobs = jobsOf(gi.deleteDocuments(ids = Some(Seq(1L, 8L, 20L))): Unit)
+      assert(deleteJobs <= 12, s"the eager delete ran $deleteJobs jobs")
+      // the semantic image: IVF, doc codes, tokens and codebook, one
+      // collect each
+      var hits: Array[org.apache.spark.sql.Row] = null
+      val searchJobs = jobsOf { hits = GraftIndex.open(spark, path).search(q).collect() }
+      assert(searchJobs <= 4, s"the first search on a fresh handle ran $searchJobs jobs")
+      // old doc 4 is doc 3 now (one deleted id below it)
+      assert(hits.minBy(_.getAs[Int]("rank")).getAs[Long]("doc_id") === 3L)
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+    gi.drop()
+  }
 }

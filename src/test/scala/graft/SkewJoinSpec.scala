@@ -8,14 +8,20 @@ import graft.operators.SkewJoin
 
 class SkewJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    // force the shuffle path: a broadcastable dim would bypass the salt
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.adaptive.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[8]")
+      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+      .newSession()
+    // force the shuffle path: a broadcastable dim would bypass the salt.
+    // Session-local, so the specs that share the context after this one
+    // keep Spark's default join planning.
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
+  }
 
   test("salted join == plain join on a 90%-one-key corpus (incl. dupes and misses)") {
     import spark.implicits._
