@@ -120,29 +120,22 @@ final class GraftIndex private (val spark: SparkSession, val path: String) {
     val before = if (graft.util.Fs.exists(s"$path/manifest.json")) index.numDocuments else 0L
     Updater.update(spark, path, docs, cfg)
     metaJson.foreach { rows =>
+      // materialized once: its plan (JSON parse, dense-id window) would
+      // otherwise re-run for the metadata write and both FTS appends
       val created = JsonMeta.create(spark, rows)
         .withColumn("_subset_", col("_subset_") + lit(before))
+        .localCheckpoint()
       if (graft.util.Fs.exists(metaPath)) {
         val existing = metadata
-        val existingTypes = existing.schema.fields.map(f => f.name -> f.dataType).toMap
-        val createdTypes = created.schema.fields.map(f => f.name -> f.dataType).toMap
-        val sameShape = created.columns.forall(c =>
-          existingTypes.get(c).contains(createdTypes(c)))
-        if (sameShape) {
-          // O(batch) fast path: align to the existing column order (new
-          // batch may omit columns) and parquet-append — existing files
-          // untouched
-          graft.util.Fs.appendTable(
-            created.select(existing.columns.toIndexedSeq.map(c =>
-              (if (created.columns.contains(c)) col(c)
-               else lit(null).cast(existingTypes(c))).as(c)): _*),
-            metaPath)
+        val schema = JsonMeta.unionSchema(existing, created)
+        if (schema == existing.schema.fields.map(f => f.name -> f.dataType).toSeq) {
+          // O(batch) fast path: the batch conformed to the stored schema
+          // is a parquet append — existing files untouched
+          graft.util.Fs.appendTable(JsonMeta.conform(created, schema), metaPath)
         } else {
           // schema evolution (new column or widened type): full rewrite
-          val allCols = (existing.columns ++ created.columns.filterNot(existing.columns.contains)).toSeq
-          def align(df: DataFrame) = df.select(allCols.map(c =>
-            (if (df.columns.contains(c)) col(c) else lit(null)).as(c)): _*)
-          graft.util.Fs.rewrite(align(existing).unionByName(align(created)), metaPath)
+          graft.util.Fs.rewrite(JsonMeta.conform(existing, schema)
+            .unionByName(JsonMeta.conform(created, schema)), metaPath)
         }
       } else graft.util.Fs.rewrite(created, metaPath)
 

@@ -45,14 +45,21 @@ final case class Codec(
     * (the pre-round-10 kernel) flipped the argmax on near-ties. */
   def assign(vec: Array[Float]): Int = kernel.assignF64(vec)
 
-  /** B5+B6 fused: residual = vec - centroid(code), then quantize-pack. */
-  def encode(vec: Array[Float]): (Int, Array[Byte]) = {
+  /** B4+B5+B6 fused: code, then residual = vec - centroid(code),
+    * quantize-packed, with the residual's L2 norm before quantization
+    * (the threshold refresh's input, update.rs:385-427). */
+  def encode(vec: Array[Float]): (Int, Array[Byte], Float) = {
     val code = assign(vec)
     val off = code * dim
     val residual = new Array[Float](dim)
+    var s = 0.0
     var i = 0
-    while (i < dim) { residual(i) = vec(i) - centroids(off + i); i += 1 }
-    (code, quantizer.quantize(residual))
+    while (i < dim) {
+      residual(i) = vec(i) - centroids(off + i)
+      s += residual(i).toDouble * residual(i)
+      i += 1
+    }
+    (code, quantizer.quantize(residual), math.sqrt(s).toFloat)
   }
 
   /** B7 decompression: centroid + bucket weights, L2-normalized. */

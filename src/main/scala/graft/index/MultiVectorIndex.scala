@@ -26,9 +26,14 @@ final case class IndexConfig(
   * <path>/tokens/    (doc_id, tok, code, residual: binary)   sorted by doc_id
   * <path>/ivf/       (code, doc_ids: array<long>)            sorted+distinct
   * <path>/doclens/   (doc_id, len)
+  * <path>/doc_codes/ (doc_id, codes: array<int>)             codes in tok order
   * <path>/codec/     (code, vec)  — centroid codebook
   * <path>/manifest.json
   * }}}
+  *
+  * Every path that adds tokens — [[MultiVectorIndex.build]],
+  * [[Updater.append]] and [[graft.sources.NpyImport.importIndex]] —
+  * writes tokens, ivf, doclens and doc_codes through [[IndexWriter]].
   *
   * The on-disk layout replaces the reference's npy/SQLite directory
   * (index.rs:373-528): parquet is splittable/column-pruned, so the
@@ -118,10 +123,7 @@ object MultiVectorIndex {
       graft.util.Fs.rewrite(docsIn.select("doc_id", "embeddings"), s"$path/raw_docs")
     }
 
-    // Token table (narrow explode; no shuffle).
-    val tokens = docsIn
-      .select(col("doc_id"), posexplode(col("embeddings")).as(Seq("tok", "vec")))
-      .cache()
+    val tokens = IndexWriter.tokensOf(docsIn).cache()
 
     // --- B1: sample docs, estimate K, train centroids -------------------
     // Hash-threshold doc sampling (no global sort; see GraftKMeans.train).
@@ -201,83 +203,27 @@ object MultiVectorIndex {
     val clusterThreshold = Quantiles.quantile(norms, 0.75)
     val codec = Codec(dim, centroids, quantizer, avgResidual, clusterThreshold)
 
-    // --- B4/B5/B6: encode every token ------------------------------------
-    val codecBc = spark.sparkContext.broadcast(codec)
-    val encoded = tokens
-      .as[(Long, Int, Array[Float])]
-      .mapPartitions { rows =>
-        val c = codecBc.value
-        rows.map { case (docId, tok, vec) =>
-          val (code, packed) = c.encode(vec)
-          (docId, tok, code, packed)
-        }
-      }
-      .toDF("doc_id", "tok", "code", "residual")
-
-    // size the layout to the data: ~500k token rows per file keeps files
-    // in the efficient parquet range at any scale — no 32 near-empty
-    // files for a small corpus, no single giant file at 100 TB (capped
-    // by the session's shuffle parallelism)
-    val tokenParts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      (numTokens + 499999L) / 500000L)).toInt
-    // single-partition output skips repartitionByRange's extra
-    // range-boundary sampling job (tiny indexes); multi-partition keeps
-    // the range layout that makes the rerank gather a range read
-    graft.util.Fs.rewrite(
-      (if (tokenParts == 1) encoded.coalesce(1)
-       else encoded.repartitionByRange(tokenParts, col("doc_id")))
-        .sortWithinPartitions("doc_id", "tok"),
-      s"$path/tokens")
-
-    val tokensOut = Fs.readParquet(spark, s"$path/tokens")
-
-    // --- B8: IVF posting lists (sort+dedup, index.rs:479-508) ------------
-    graft.util.Fs.rewrite(
-      tokensOut
-        .groupBy("code")
-        .agg(sort_array(collect_set("doc_id")).as("doc_ids")),
-      s"$path/ivf")
-
-    // --- doclens + doc_codes: one per-doc aggregation (single shuffle)
-    // feeds both artifacts. doc_codes is persisted at build time so
-    // search sessions never re-shuffle the tokens table to derive the
-    // S5 approximate-scoring input.
-    val perDoc = tokensOut
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("len"),
-        transform(
-          array_sort(collect_list(struct(col("tok"), col("code")))),
-          x => x.getField("code")
-        ).as("codes"))
-      .cache()
-    // AQE coalesces the small shuffle partitions of these aggregations
-    // on its own — no manual coalesce (which would collapse the agg's
-    // compute parallelism too)
-    graft.util.Fs.rewrite(perDoc.select("doc_id", "len"), s"$path/doclens")
-    graft.util.Fs.rewrite(perDoc.select("doc_id", "codes"), s"$path/doc_codes")
-    perDoc.unpersist()
+    // --- B4-B8: one encode pass, cached; the writer derives every table
+    // from it, never re-reading the written tokens
+    val encoded = IndexWriter.encode(spark, codec, tokens).drop("rnorm").cache()
+    IndexWriter.write(spark, path, encoded, IndexWriter.Fresh(numTokens))
+    encoded.unpersist()
+    tokens.unpersist()
+    centBc.destroy()
 
     // --- codec + manifest -------------------------------------------------
     saveCodec(spark, path, codec)
     writeManifest(path, Map(
       "nbits" -> cfg.nbits.toString,
       "embedding_dim" -> dim.toString,
-      "num_documents" -> numDocs.toString,
-      "num_embeddings" -> numTokens.toString,
       "num_partitions" -> k.toString,
-      "avg_doclen" -> (numTokens.toDouble / numDocs).toString,
       "seed" -> cfg.seed.toString,
       // full build config, so later update-lifecycle rebuilds preserve
       // the original geometry instead of silently reverting to defaults
       "kmeans_iters" -> cfg.kmeansIters.toString,
       "max_points_per_centroid" -> cfg.maxPointsPerCentroid.toString,
       "pool_factor" -> cfg.poolFactor.toString
-    ))
-
-    tokens.unpersist()
-    centBc.destroy()
+    ) ++ IndexWriter.counts(numDocs, numTokens))
     new MultiVectorIndex(spark, path)
   }
 

@@ -44,8 +44,6 @@ object Updater {
 
   import graft.util.Fs.{deleteRecursively, exists, rewrite}
 
-  private def emptyLongArray = array().cast("array<bigint>")
-
   // ---------- U2: outlier detection ----------
 
   /** Tokens whose squared distance to the nearest centroid exceeds
@@ -108,44 +106,15 @@ object Updater {
       nNew: Long,
       codecOverride: Option[Codec],
       refreshThreshold: Boolean): MultiVectorIndex = {
-    import spark.implicits._
     val path = idx.path
     val codec = codecOverride.getOrElse(idx.codec)
     val offset = idx.numDocuments
     if (nNew == 0) return idx
 
-    val codecBc = spark.sparkContext.broadcast(codec)
-    // rnorm = pre-quantization residual L2 norm, carried only for the
-    // optional threshold refresh below (same encode pass, no extra scan)
-    val newTokens = newDocs
-      .select((col("doc_id") + lit(offset)).as("doc_id"),
-        posexplode(col("embeddings")).as(Seq("tok", "vec")))
-      .as[(Long, Int, Array[Float])]
-      .mapPartitions { rows =>
-        val c = codecBc.value
-        rows.map { case (docId, tok, vec) =>
-          val code = c.assign(vec)
-          val dim = c.dim
-          val residual = new Array[Float](dim)
-          var s = 0.0
-          var i = 0
-          while (i < dim) {
-            residual(i) = vec(i) - c.centroids(code * dim + i)
-            s += residual(i).toDouble * residual(i)
-            i += 1
-          }
-          (docId, tok, code, c.quantizer.quantize(residual), math.sqrt(s).toFloat)
-        }
-      }
-      .toDF("doc_id", "tok", "code", "residual", "rnorm")
-      .cache()
-
-    // the token count is observed in the tokens append's own pass (which
-    // also fills the cache), not by a count job
-    val tokenCount = org.apache.spark.sql.Observation("append tokens")
-    graft.util.Fs.appendTable(newTokens.select("doc_id", "tok", "code", "residual")
-      .observe(tokenCount, count(lit(1)).as("n")), s"$path/tokens")
-    val nNewTokens = tokenCount.get("n").asInstanceOf[Long]
+    // one encode pass, cached: the writer and the threshold refresh
+    // below both read it
+    val encoded = IndexWriter.encode(spark, codec, IndexWriter.tokensOf(newDocs, offset)).cache()
+    val nNewTokens = IndexWriter.write(spark, path, encoded, IndexWriter.Onto(idx.ivf))
 
     // U-threshold refresh (update.rs:385-427): new 0.75-quantile of the
     // appended residual norms, blended with the old threshold weighted by
@@ -155,7 +124,7 @@ object Updater {
     val refreshedCodec: Option[Codec] =
       if (!refreshThreshold || nNewTokens == 0) None
       else {
-        val newQ = newTokens.agg(expr("percentile(rnorm, 0.75d)"))
+        val newQ = encoded.agg(expr("percentile(rnorm, 0.75d)"))
           .collect()(0).getDouble(0)
         val oldTotal = idx.manifest("num_embeddings").toLong
         val blended =
@@ -163,28 +132,8 @@ object Updater {
             / (oldTotal + nNewTokens)).toFloat
         Some(codec.copy(clusterThreshold = blended))
       }
+    encoded.unpersist()
     val finalCodec = refreshedCodec.getOrElse(codec)
-
-    // doclens and doc_codes from one per-doc aggregation (as the build)
-    val perDoc = newTokens.groupBy("doc_id")
-      .agg(count(lit(1)).as("len"),
-        transform(array_sort(collect_list(struct(col("tok"), col("code")))),
-          x => x.getField("code")).as("codes"))
-      .cache()
-    graft.util.Fs.appendTable(perDoc.select("doc_id", "len"), s"$path/doclens")
-    graft.util.Fs.appendTable(perDoc.select("doc_id", "codes"), s"$path/doc_codes")
-    perDoc.unpersist()
-
-    // IVF patch: merge new postings into affected codes (update.rs IVF
-    // patch semantics — untouched codes pass through unchanged).
-    val newPost = newTokens.groupBy("code")
-      .agg(sort_array(collect_set("doc_id")).as("new_ids"))
-    val merged = idx.ivf.join(newPost, Seq("code"), "full_outer")
-      .select(col("code"),
-        sort_array(array_distinct(concat(
-          coalesce(col("doc_ids"), emptyLongArray),
-          coalesce(col("new_ids"), emptyLongArray)))).as("doc_ids"))
-    rewrite(merged, s"$path/ivf")
 
     if (codecOverride.isDefined || refreshedCodec.isDefined)
       MultiVectorIndex.saveCodec(spark, path, finalCodec)
@@ -202,13 +151,9 @@ object Updater {
     }
 
     val m = idx.manifest
-    MultiVectorIndex.writeManifest(path, m ++ Map(
-      "num_documents" -> (offset + nNew).toString,
-      "num_embeddings" -> (m("num_embeddings").toLong + nNewTokens).toString,
-      "num_partitions" -> codec.numCentroids.toString,
-      "avg_doclen" -> ((m("num_embeddings").toLong + nNewTokens).toDouble / (offset + nNew)).toString
-    ))
-    newTokens.unpersist()
+    MultiVectorIndex.writeManifest(path, m ++
+      IndexWriter.counts(offset + nNew, m("num_embeddings").toLong + nNewTokens) +
+      ("num_partitions" -> codec.numCentroids.toString))
     new MultiVectorIndex(spark, path)
   }
 
@@ -262,12 +207,7 @@ object Updater {
     // were just deleted drop out)
     idx.tombstoneTable.foreach(t => rewrite(renum(t, "doc_id").select("doc_id"), s"$path/tombstones"))
 
-    val m = idx.manifest
-    MultiVectorIndex.writeManifest(path, m ++ Map(
-      "num_documents" -> nDocs.toString,
-      "num_embeddings" -> nEmb.toString,
-      "avg_doclen" -> (if (nDocs == 0) "0" else (nEmb.toDouble / nDocs).toString)
-    ))
+    MultiVectorIndex.writeManifest(path, idx.manifest ++ IndexWriter.counts(nDocs, nEmb))
     new MultiVectorIndex(spark, path)
   }
 
@@ -469,9 +409,7 @@ object Updater {
         rewrite(combined, s"$path/pending")
         val idxDel = if (bufferIds.nonEmpty) delete(spark, idx, bufferIds) else idx
         val pending = graft.util.Fs.readParquet(spark, s"$path/pending")
-        val tokens = pending.select(col("doc_id"),
-          posexplode(col("embeddings")).as(Seq("tok", "vec")))
-        val outliers = findOutliers(spark, tokens, idxDel.codec)
+        val outliers = findOutliers(spark, IndexWriter.tokensOf(pending), idxDel.codec)
         val codec2 = expandCentroids(spark, outliers, idxDel.codec, effCfg)
         // the expansion path refreshes cluster_threshold from the
         // re-appended batch's residual norms (index.rs:1555-1562 passes

@@ -60,36 +60,37 @@ object JsonMeta {
       .drop("order")
   }
 
-  /** M2 append with schema evolution: new columns are auto-added (null
-    * for existing rows); existing columns missing from the new rows are
-    * null there. `_subset_` continues densely after the existing table.
-    * Widening conflicts resolve long → double → string. */
+  /** M2 append with schema evolution: `_subset_` continues densely after
+    * the existing table, under [[unionSchema]]. */
   def append(spark: SparkSession, existing: DataFrame, rows: DataFrame): DataFrame = {
     if (rows.isEmpty) return existing
-    val newTable = create(spark, rows)
     val offset = existing.count()
-    val shifted = newTable.withColumn("_subset_", col("_subset_") + lit(offset))
+    val shifted = create(spark, rows).withColumn("_subset_", col("_subset_") + lit(offset))
+    val schema = unionSchema(existing, shifted)
+    conform(existing, schema).unionByName(conform(shifted, schema))
+  }
 
+  /** The one schema `existing` and a new `batch` are stored under: new
+    * columns are auto-added after the existing ones (null for rows
+    * without them), and a column whose types differ widens long →
+    * double → string (the reference's rule). A plain `unionByName`
+    * would instead resolve string against long to BIGINT under ANSI
+    * and fail on the first non-numeric string. */
+  def unionSchema(existing: DataFrame, batch: DataFrame): Seq[(String, DataType)] = {
     def widen(a: DataType, b: DataType): DataType = (a, b) match {
       case (x, y) if x == y => x
       case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
       case _ => StringType
     }
-    val existingTypes = existing.schema.fields.map(f => f.name -> f.dataType).toMap
-    val newTypes = shifted.schema.fields.map(f => f.name -> f.dataType).toMap
-    val allCols = (existing.schema.fieldNames ++
-      shifted.schema.fieldNames.filterNot(existingTypes.contains)).toSeq
-    def aligned(df: DataFrame, types: Map[String, DataType]): DataFrame =
-      df.select(allCols.map { c =>
-        val target = (existingTypes.get(c), newTypes.get(c)) match {
-          case (Some(a), Some(b)) => widen(a, b)
-          case (Some(a), None)    => a
-          case (None, Some(b))    => b
-          case _                  => StringType
-        }
-        (if (types.contains(c)) col(c).cast(target)
-         else lit(null).cast(target)).as(c)
-      }: _*)
-    aligned(existing, existingTypes).unionByName(aligned(shifted, newTypes))
+    val newTypes = batch.schema.fields.map(f => f.name -> f.dataType).toMap
+    val old = existing.schema.fields.map(f =>
+      f.name -> newTypes.get(f.name).fold(f.dataType)(widen(f.dataType, _))).toSeq
+    old ++ batch.schema.fields.filterNot(f => old.exists(_._1 == f.name)).map(f => f.name -> f.dataType)
   }
+
+  /** `df` as `schema`'s columns in order: cast, or null where absent. */
+  def conform(df: DataFrame, schema: Seq[(String, DataType)]): DataFrame =
+    df.select(schema.map { case (c, t) =>
+      (if (df.columns.contains(c)) col(c).cast(t) else lit(null).cast(t)).as(c)
+    }: _*)
 }

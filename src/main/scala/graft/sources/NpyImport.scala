@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{Codec, MultiVectorIndex}
+import graft.index.{Codec, IndexWriter, MultiVectorIndex}
 
 /** B11: import a reference-format (fast-plaid / nextplaid) index
   * directory into the parquet layout (mmap.rs:1757-1889 conversion,
@@ -276,29 +276,15 @@ object NpyImport {
       docOffset += doclens.length
       numTokens += t
     }
-    // one distributed pass lays the tokens out range-partitioned/sorted
-    graft.util.Fs.readParquet(spark, s"$outPath/tokens_in")
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-      .sortWithinPartitions("doc_id", "tok")
-      .write.mode(SaveMode.Overwrite).parquet(s"$outPath/tokens")
+    // the staged rows are the writer's batch (read once per table)
+    IndexWriter.write(spark, outPath, graft.util.Fs.readParquet(spark, s"$outPath/tokens_in"),
+      IndexWriter.Fresh(numTokens))
     graft.util.Fs.deleteRecursively(s"$outPath/tokens_in")
-    val tokensOut = graft.util.Fs.readParquet(spark, s"$outPath/tokens")
-    tokensOut.groupBy("code").agg(sort_array(collect_set("doc_id")).as("doc_ids"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outPath/ivf")
-    tokensOut.groupBy("doc_id").agg(count(lit(1)).as("len"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outPath/doclens")
-    tokensOut.groupBy("doc_id")
-      .agg(transform(array_sort(collect_list(struct(col("tok"), col("code")))),
-        x => x.getField("code")).as("codes"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outPath/doc_codes")
     MultiVectorIndex.writeManifest(outPath, Map(
       "nbits" -> nbits.toString,
       "embedding_dim" -> dim.toString,
-      "num_documents" -> docOffset.toString,
-      "num_embeddings" -> numTokens.toString,
       "num_partitions" -> (centroids.length / dim).toString,
-      "avg_doclen" -> (if (docOffset == 0) "0" else (numTokens.toDouble / docOffset).toString),
-      "seed" -> "42"))
+      "seed" -> "42") ++ IndexWriter.counts(docOffset, numTokens))
     new MultiVectorIndex(spark, outPath)
   }
 

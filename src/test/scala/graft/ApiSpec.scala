@@ -213,6 +213,31 @@ class ApiSpec extends AnyFunSuite {
     gi.drop()
   }
 
+  test("addDocuments widens a metadata column long <-> string: every row kept, filter works") {
+    import spark.implicits._
+    def meta(years: String*) =
+      years.zipWithIndex.map { case (y, i) => (i.toLong, s"""{"year": $y}""") }.toDF("order", "json")
+    val cfg = graft.index.UpdateConfig(startFromScratch = 0, bufferSize = 1000)
+    val root = "/tmp/graft_api_widen"
+    graft.util.Fs.deleteRecursively(root)
+    // string values onto a long column, and long values onto a string one
+    val cases = Seq(
+      "onto_long" -> (Seq("2000", "2001", "2002", "2003"), Seq("\"unknown\"", "\"2001\"")),
+      "onto_string" -> (Seq("\"unknown\"", "\"2001\"", "\"n/a\"", "\"2003\""), Seq("2001", "2005")))
+    cases.foreach { case (name, (first, second)) =>
+      val gi = GraftIndex.create(spark, s"$root/$name", docs.filter(col("doc_id") < 4),
+        Some(meta(first: _*)))
+      gi.addDocuments(docs.filter(col("doc_id") >= 4 && col("doc_id") < 6)
+        .withColumn("doc_id", col("doc_id") - 4), Some(meta(second: _*)), cfg)
+      assert(gi.metadata.schema("year").dataType === org.apache.spark.sql.types.StringType, name)
+      assert(gi.metadata.select("_subset_").as[Long].collect().sorted.toSeq === (0L until 6L), name)
+      val hits = gi.metadataQuery("year = ?", Seq(Where.SStr("2001")))
+        .select("_subset_").as[Long].collect().sorted.toSeq
+      assert(hits === (if (name == "onto_long") Seq(1L, 5L) else Seq(1L, 4L)), name)
+    }
+    graft.util.Fs.deleteRecursively(root)
+  }
+
   test("deferred delete hides docs from vector, hybrid, and keyword search until compact") {
     val path = "/tmp/graft_api_tomb"
     graft.util.Fs.deleteRecursively(path)

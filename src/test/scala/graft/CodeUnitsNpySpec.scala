@@ -909,6 +909,17 @@ class CodeUnitsNpySpec extends AnyFunSuite {
 
     val imported = NpyImport.importIndex(spark, refDir, impPath)
     assert(imported.numDocuments === 20L)
+    // table for table, the import writes what the build wrote
+    Seq("tokens", "ivf", "doclens", "doc_codes").foreach { t =>
+      def hashOf(p: String) = {
+        val df = graft.util.Fs.readParquet(spark, s"$p/$t")
+        graft.Bench.forcedCountHash(df.select(df.columns.sorted.map(col).toIndexedSeq: _*))
+      }
+      assert(hashOf(impPath) === hashOf(srcPath), s"imported $t differs from the source")
+    }
+    assert(Seq("num_documents", "num_embeddings", "avg_doclen")
+      .forall(k => imported.manifest(k) == idx.manifest(k)))
+    assert(graft.index.IndexCheck.isConsistent(spark, imported), "imported index must validate clean")
     val qs = docs.filter(col("doc_id") < 3)
       .select(col("doc_id").as("query_id"), col("embeddings"))
     val p = SearchParams(topK = 5, nIvfProbe = Int.MaxValue,
