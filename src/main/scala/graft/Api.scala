@@ -648,18 +648,24 @@ object GraftIndex {
       t.isInstanceOf[java.io.FileNotFoundException]) true
     else isStaleRead(t.getCause)
 
-  /** POST /indices — create from an initial doc batch. */
+  /** POST /indices — create from an initial doc batch. The metadata
+    * table and its FTS read nothing the vector build writes, so they are
+    * built on a second thread while the vector index builds on this one;
+    * `create` returns or throws only once both are done. */
   def create(
       spark: SparkSession,
       path: String,
       docs: DataFrame,
       metaJson: Option[DataFrame] = None,
       cfg: IndexConfig = IndexConfig()): GraftIndex = {
-    MultiVectorIndex.build(spark, docs, path, cfg)
     val gi = new GraftIndex(spark, path)
-    metaJson.foreach { rows =>
-      graft.util.Fs.rewrite(JsonMeta.create(spark, rows), s"$path/meta")
-      FtsIndex.build(spark, gi.textsOf(gi.metadata), "doc_id", "text", s"$path/fts")
+    metaJson match {
+      case None => MultiVectorIndex.build(spark, docs, path, cfg)
+      case Some(rows) =>
+        graft.util.JobScope.alongside("graft-create-meta") {
+          graft.util.Fs.rewrite(JsonMeta.create(spark, rows), s"$path/meta")
+          FtsIndex.build(spark, gi.textsOf(gi.metadata), "doc_id", "text", s"$path/fts")
+        }(MultiVectorIndex.build(spark, docs, path, cfg))
     }
     gi
   }

@@ -168,14 +168,17 @@ object UpdateJobs {
   /** Enqueue `work` on the path's serial executor with full progress
     * tracking (documents.rs:1199-1210's queue-then-spawn shape). The
     * returned future completes with the work's result; a throwing work
-    * records `failed` (error captured) and rethrows on `get()`. */
+    * records `failed` (error captured) and rethrows on `get()`. The work's
+    * Spark jobs carry the submitter's job group, description and tags. */
   def submit[A](path: String, queuedDocs: Long, message: String)(work: () => A): JFuture[A] = {
     recordQueued(path, queuedDocs, message)
+    // the lane's thread predates the caller's job group: carry it over
+    val scoped = graft.util.JobScope.carry(work)
     executor(path).submit(new Callable[A] {
       def call(): A =
         try {
           recordStage(path, "batching", "processing queued update batch")
-          val r = work()
+          val r = scoped()
           recordComplete(path, queuedDocs, "update complete")
           r
         } catch {

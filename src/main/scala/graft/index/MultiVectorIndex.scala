@@ -102,17 +102,18 @@ object MultiVectorIndex {
     // no shuffle). raw_docs stores the POOLED embeddings, so the rebuild
     // path must pass poolFactor=1 (pooling is not idempotent) — Updater
     // handles that and re-records the original factor in the manifest.
-    val docsIn = poolDocs(spark, docs, cfg.poolFactor)
+    // The input is read once: the stats pass fills this cache, and
+    // raw_docs, the B1 sample, B3 and the encode explode it from there.
+    val docsIn = poolDocs(spark, docs, cfg.poolFactor).cache()
 
-    // one pass over the doc table for count + dim (the build used to
-    // spend a separate scan on each)
-    val docStats = docsIn
-      .agg(count(lit(1)).as("n"),
-        first(size(element_at(col("embeddings"), 1))).as("dim"))
-      .collect()(0)
-    val numDocs = docStats.getLong(0)
-    require(numDocs > 0, "empty document set")
-    val dim = docStats.getInt(1)
+    // doc count, token count and dim in one pass, which also holds the
+    // input contract: every doc has at least one token, all tokens one dim
+    val all =
+      try DocStats.of(docsIn).checked
+      catch { case e: Throwable => docsIn.unpersist(); throw e }
+    val numDocs = all.docs
+    val numTokens = all.tokens
+    val dim = all.minDim
 
     // Keep the raw embeddings while the corpus is small enough for the
     // start-from-scratch rebuild path (index.rs:964-969, threshold 999);
@@ -123,13 +124,12 @@ object MultiVectorIndex {
       graft.util.Fs.rewrite(docsIn.select("doc_id", "embeddings"), s"$path/raw_docs")
     }
 
-    val tokens = IndexWriter.tokensOf(docsIn).cache()
+    val tokens = IndexWriter.tokensOf(docsIn)
 
     // --- B1: sample docs, estimate K, train centroids -------------------
     // Hash-threshold doc sampling (no global sort; see GraftKMeans.train).
-    // The sampling predicate only needs numDocs, so the token count AND
-    // the sample stats come out of ONE aggregation pass (which also
-    // populates the cache) instead of two.
+    // The predicate is per doc, so the sample's doc and token counts come
+    // from the cached docs.
     val nSampleDocs = GraftKMeans.numSampleDocs(numDocs)
     val sampledCond =
       if (nSampleDocs >= numDocs) lit(true)
@@ -138,15 +138,10 @@ object MultiVectorIndex {
           math.max((nSampleDocs.toDouble / numDocs * 1e6).toLong, 1L)
         pmod(xxhash64(col("doc_id"), lit(cfg.seed)), lit(1000000L)) < lit(keepPerMillion)
       }
-    val tokenStats = tokens.agg(
-      count(lit(1)).as("total"),
-      sum(when(sampledCond, 1L).otherwise(0L)).as("n"),
-      countDistinct(when(sampledCond, col("doc_id"))).as("d"))
-      .collect()(0)
-    val numTokens = tokenStats.getLong(0)
+    val sample = if (nSampleDocs >= numDocs) all else DocStats.of(docsIn.filter(sampledCond))
     val sampleTokens = tokens.filter(sampledCond).select("doc_id", "tok", "vec")
-    val totalSampleTokens = tokenStats.getLong(1)
-    val actualSampleDocs = math.max(tokenStats.getLong(2), 1L)
+    val totalSampleTokens = sample.tokens
+    val actualSampleDocs = math.max(sample.docs, 1L)
     val avgTokensPerDoc = totalSampleTokens.toDouble / actualSampleDocs
     val estTotalTokens = avgTokensPerDoc * numDocs
     val k = math.min(
@@ -159,7 +154,9 @@ object MultiVectorIndex {
       totalCount = Some(totalSampleTokens))
 
     // --- B3: codec training on a heldout token sample -------------------
-    // heldout = min(5% of tokens, 50k) (index.rs:182-287)
+    // heldout = min(5% of tokens, 50k) (index.rs:182-287); one collect,
+    // put in (doc_id, tok) order on the driver for the quantile/average
+    // folds below
     val heldoutN = math.min((numTokens * 0.05).toLong.max(1L), cfg.heldoutMax.toLong).toInt
     val centBc = spark.sparkContext.broadcast(centroids)
     val heldoutKeepPerMillion =
@@ -167,22 +164,22 @@ object MultiVectorIndex {
     val heldoutResiduals: Array[Array[Float]] = tokens
       .filter(pmod(xxhash64(col("doc_id"), col("tok"), lit(cfg.seed + 2)), lit(1000000L))
         < lit(heldoutKeepPerMillion))
-      // deterministic order for the quantile/average folds below
-      .orderBy("doc_id", "tok")
-      .select("vec").as[Array[Float]]
-      .mapPartitions { vecs =>
+      .select("doc_id", "tok", "vec").as[(Long, Int, Array[Float])]
+      .mapPartitions { rows =>
         val cents = centBc.value
         val kNow = cents.length / dim
         val kern = new NearestKernel(cents, kNow, dim)
-        vecs.map { vec =>
+        rows.map { case (docId, tok, vec) =>
           val code = kern.nearestDotF32(vec)
           val r = new Array[Float](dim)
           var i = 0
           while (i < dim) { r(i) = vec(i) - cents(code * dim + i); i += 1 }
-          r
+          (docId, tok, r)
         }
       }
       .collect()
+      .sortBy(t => (t._1, t._2))
+      .map(_._3)
 
     val flatResiduals = heldoutResiduals.flatten
     val quantizer = Quantizer.train(flatResiduals, cfg.nbits)
@@ -208,7 +205,7 @@ object MultiVectorIndex {
     val encoded = IndexWriter.encode(spark, codec, tokens).drop("rnorm").cache()
     IndexWriter.write(spark, path, encoded, IndexWriter.Fresh(numTokens))
     encoded.unpersist()
-    tokens.unpersist()
+    docsIn.unpersist()
     centBc.destroy()
 
     // --- codec + manifest -------------------------------------------------
@@ -225,6 +222,40 @@ object MultiVectorIndex {
       "pool_factor" -> cfg.poolFactor.toString
     ) ++ IndexWriter.counts(numDocs, numTokens))
     new MultiVectorIndex(spark, path)
+  }
+
+  /** Counts of a doc batch `(doc_id, embeddings)`: docs, token
+    * embeddings, the smallest doc_id holding none (Long.MaxValue when
+    * every doc has one), and the smallest and largest token dim. */
+  private final case class DocStats(docs: Long, tokens: Long, emptyDoc: Long, minDim: Int, maxDim: Int) {
+    def +(o: DocStats): DocStats = DocStats(docs + o.docs, tokens + o.tokens,
+      math.min(emptyDoc, o.emptyDoc), math.min(minDim, o.minDim), math.max(maxDim, o.maxDim))
+
+    /** The build's input contract. */
+    def checked: DocStats = {
+      require(docs > 0, "empty document set")
+      require(emptyDoc == Long.MaxValue,
+        s"every document needs at least one token embedding; doc_id $emptyDoc has none")
+      require(minDim == maxDim && minDim > 0,
+        s"token embeddings must share one dimension; found dims $minDim to $maxDim")
+      this
+    }
+  }
+
+  private object DocStats {
+    /** One Spark job and no shuffle: each partition folds its docs, the
+      * driver folds the partitions. */
+    def of(docs: DataFrame): DocStats = {
+      import docs.sparkSession.implicits._
+      val dims = transform(col("embeddings"), v => coalesce(size(v), lit(0)))
+      docs.select(col("doc_id").cast("long"), coalesce(size(col("embeddings")), lit(0)),
+          coalesce(array_min(dims), lit(Int.MaxValue)), coalesce(array_max(dims), lit(Int.MinValue)))
+        .as[(Long, Int, Int, Int)].rdd
+        .aggregate(DocStats(0L, 0L, Long.MaxValue, Int.MaxValue, Int.MinValue))(
+          { case (acc, (id, n, lo, hi)) =>
+            acc + DocStats(1L, n, if (n > 0) Long.MaxValue else id, lo, hi) },
+          _ + _)
+    }
   }
 
   /** E3 Ward pooling over a doc batch (partition-local; factor ≤ 1 or

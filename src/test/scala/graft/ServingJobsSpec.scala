@@ -31,6 +31,7 @@ class ServingJobsSpec extends AnyFunSuite {
   private object Jobs extends SparkListener {
     val started = new AtomicInteger(0)
     val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var fence = ""
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).flatMap(p => Option(p.getProperty("graft.fence"))) match {
@@ -38,6 +39,7 @@ class ServingJobsSpec extends AnyFunSuite {
         case None =>
           started.incrementAndGet()
           descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+          groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
       }
   }
 
@@ -58,6 +60,7 @@ class ServingJobsSpec extends AnyFunSuite {
     drain()
     Jobs.started.set(0)
     Jobs.descriptions.clear()
+    Jobs.groups.clear()
     f
     drain()
     Jobs.started.get()
@@ -297,5 +300,50 @@ class ServingJobsSpec extends AnyFunSuite {
       assert(hits.minBy(_.getAs[Int]("rank")).getAs[Long]("doc_id") === 3L)
     } finally spark.sparkContext.removeSparkListener(Jobs)
     gi.drop()
+  }
+
+  test("a cold create with metadata runs at most 26 jobs, each under the caller's job group; so does a queued add") {
+    IndexFixtures.requireTestdata()
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val path = "/tmp/graft_serving_jobs_create"
+    graft.util.Fs.deleteRecursively(path)
+    UpdateJobs.reset()
+    val all = IndexFixtures.docs(spark).filter(col("doc_id") < 40).cache()
+    def meta(ids: Range) = ids.map(i =>
+      (i.toLong, s"""{"title": "doc $i", "group": ${i % 3}}""")).toDF("order", "json")
+    val docs = all.filter(col("doc_id") < 30)
+    def batch(from: Int, to: Int) = all.filter(col("doc_id") >= from && col("doc_id") < to)
+      .select((col("doc_id") - from).as("doc_id"), col("embeddings"))
+    all.count()
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      sc.setJobGroup("create-group", "cold create")
+      var gi: GraftIndex = null
+      val createJobs = jobsOf { gi = GraftIndex.create(spark, path, docs, Some(meta(0 until 30))) }
+      // the input is read once into a cache (its stats pass and the cache
+      // stage over this fixture's cached frame are 2 jobs), then raw
+      // docs, k-means, heldout, the writer and the codebook; the JSON
+      // inference, re-sequencer and FTS run on the side. Each extra scan
+      // of the input would add a job here.
+      assert(createJobs <= 26, s"the cold create ran $createJobs jobs")
+      assert(Jobs.groups.toArray.toSet === Set("create-group"))
+
+      // the update lane's thread exists from the first add on and keeps
+      // its own properties: the second add must still carry its caller's
+      sc.setJobGroup("first-add-group", "first add")
+      gi.addDocumentsAsync(batch(30, 35), Some(meta(0 until 5))).get()
+      sc.setJobGroup("add-group", "queued add")
+      val addJobs = jobsOf(gi.addDocumentsAsync(batch(35, 40), Some(meta(0 until 5))).get(): Unit)
+      assert(addJobs > 0)
+      assert(Jobs.groups.toArray.toSet === Set("add-group"))
+      assert(gi.count === 40L)
+    } finally {
+      sc.clearJobGroup()
+      spark.sparkContext.removeSparkListener(Jobs)
+      all.unpersist()
+      UpdateJobs.reset()
+    }
+    GraftIndex.open(spark, path).drop()
   }
 }
