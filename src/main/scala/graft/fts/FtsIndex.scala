@@ -1,7 +1,11 @@
 package graft.fts
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.index.Renumbering
 import graft.util.{Fs, Plan, ResidentSet}
@@ -155,7 +159,7 @@ object FtsIndex {
     * count in df (it counts postings rows before that join). */
   final class Bm25Image private (
       val tokenizer: String,
-      docIdType: org.apache.spark.sql.types.DataType,
+      docIdType: DataType,
       terms: java.util.HashMap[String, Bm25Image.Postings],
       docIds: Array[Long],
       dls: Array[Long]) {
@@ -214,13 +218,32 @@ object FtsIndex {
         .map { case ((d, sc), r) => (docIds(d), sc, r + 1) }.toArray
     }
 
-    /** Hits as the distributed plan's `(doc_id, score, rank)` frame — a
-      * local relation, so collecting it runs no Spark job. */
-    def frame(spark: SparkSession, hits: Array[(Long, Double, Int)]): DataFrame = {
-      import spark.implicits._
-      hits.toSeq.toDF("doc_id", "score", "rank")
-        .select(col("doc_id").cast(docIdType).as("doc_id"), col("score"), col("rank"))
+    /** `doc_id` back in the postings' own type, as the distributed plan
+      * returns it: a Long or an Int as they are, any other type through
+      * the cast that plan applies. */
+    private val docIdCast = Cast(BoundReference(0, LongType, nullable = false), docIdType,
+      Some(SQLConf.get.sessionLocalTimeZone))
+    private val docIdValue: Long => Any = docIdType match {
+      case LongType => d => d
+      case IntegerType => d => d.toInt
+      case t =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(t)
+        d => toScala(docIdCast.eval(InternalRow(d)))
     }
+
+    /** Schema of [[frame]]: the distributed plan's columns and types, and
+      * the nullability its cast of non-null ids gives. */
+    val frameSchema: StructType = StructType(Seq(
+      StructField("doc_id", docIdType, docIdCast.nullable),
+      StructField("score", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false)))
+
+    /** Hits as the distributed plan's `(doc_id, score, rank)` frame,
+      * built from rows by [[graft.search.Searcher.localFrame]]: a local
+      * relation, so collecting it runs no Spark job. */
+    def frame(spark: SparkSession, hits: Array[(Long, Double, Int)]): DataFrame =
+      graft.search.Searcher.localFrame(spark, frameSchema,
+        hits.iterator.map { case (d, sc, r) => Row(docIdValue(d), sc, r) })
   }
 
   object Bm25Image {

@@ -20,10 +20,16 @@ import graft.util.{Plan, ResidentSet}
   * queries whose FTS artifact's resident image is admitted
   * ([[graft.util.ResidentSet]], against
   * `searchParams.localIndexBudgetBytes`) are answered on the driver, as
-  * the reference fuses in memory: both legs are collected (each at most
-  * queries × fetch_k rows), fused by [[Hybrid.rrfLocal]] /
-  * [[Hybrid.relativeScoreLocal]] and cut per query — with a resident
-  * semantic image too, no Spark job runs. Larger batches, a refused
+  * the reference fuses in memory, with driver rows between the legs: the
+  * queries are read once ([[Searcher.readQueries]]; a keyword request
+  * reads only their ids, [[Searcher.readQueryIds]]), the keyword leg's
+  * rows come from the BM25 image and the semantic leg's from the
+  * Searcher's resident funnel ([[Searcher.residentRows]]; each leg at
+  * most queries × fetch_k rows), [[Hybrid.rrfLocal]] /
+  * [[Hybrid.relativeScoreLocal]] fuse and cut them per query, and one
+  * frame is built from the fused rows at the end — with a resident
+  * semantic image too, no Spark job and no SQL execution runs before the
+  * caller collects. Larger batches, a refused
   * image, and filters ([[graft.fts.FtsIndex.boundedIds]]) or tombstone
   * sets whose ids do not fit the budget keep the distributed plan.
   */
@@ -71,24 +77,23 @@ object HybridSearch {
     val budget = params.searchParams.localIndexBudgetBytes
 
     lazy val searcher = searcherOpt.getOrElse(new Searcher(index))
-    def semList(sub: Option[DataFrame]): DataFrame = searcher
-      .search(queries, params.searchParams.copy(topK = fetchK), sub)
-      .select("query_id", "doc_id", "score", "rank")
+    val semParams = params.searchParams.copy(topK = fetchK)
+    // the request's queries, read once, on first use, by every leg
+    // that needs their embeddings
+    lazy val queryMap = Searcher.readQueries(queries)
+    def semList(sub: Option[DataFrame]): DataFrame = searcher.searchMap(queryMap, semParams, sub)
 
     // serving-shaped keyword/hybrid batch over a resident FTS image: the
-    // query ids are collected only once the image serves, and a filter
-    // only when its count fits the budget; the tombstone ids the
-    // Searcher holds serve when their count fits it too
+    // queries are read only once the image serves, and a filter
+    // collected only when its count fits the budget; the tombstone ids
+    // the Searcher holds serve when their count fits it too
     val local: Option[Local] =
       for {
         img <- if (params.mode == "semantic") None
           else pass.fold(fts.residentImage(budget))(fts.residentImage)
-        qids <- {
-          import spark.implicits._
-          val ids = queries.select(col("query_id").cast("long"))
-            .limit(Searcher.LocalMaxBatch + 1).as[Long].collect()
-          if (ids.length > Searcher.LocalMaxBatch) None else Some(ids.distinct.sorted)
-        }
+        qids <-
+          if (params.mode == "keyword") Searcher.readQueryIds(queries, Searcher.LocalMaxBatch)
+          else Some(queryMap).filter(_.size <= Searcher.LocalMaxBatch).map(_.keys.toArray.sorted)
         subsetIds <- subset.fold(Option(Option.empty[Array[Long]]))(
           FtsIndex.boundedIds(_, budget).map(Some(_)))
         tombIds <- Some(searcher.tombstoneIds)
@@ -97,7 +102,7 @@ object HybridSearch {
 
     local match {
       case Some(l) =>
-        searchLocal(spark, searcher, l, textQuery, params, fetchK, subset, semList)
+        searchLocal(spark, searcher, l, queryMap, textQuery, params, semParams, subset, semList)
       case None if params.mode == "semantic" => semList(subset)
       case None =>
         // the FTS leg must not resurface tombstoned docs (the vector leg
@@ -133,40 +138,38 @@ object HybridSearch {
   }
 
   /** A keyword/hybrid request the driver answers: the resident image,
-    * the batch's query ids, and the collected filter and tombstone ids. */
+    * the batch's sorted query ids, and the collected filter and
+    * tombstone ids. */
   private final case class Local(img: FtsIndex.Bm25Image, qids: Array[Long],
       subsetIds: Option[Array[Long]], tombIds: Array[Long])
 
   /** The driver-side keyword/hybrid request: the keyword leg from the
     * resident BM25 image (subset and tombstones applied as driver
-    * sets), the semantic leg collected from the Searcher (at most
-    * queries × fetch_k rows), fusion and per-query top-k on the driver.
-    * The result is a local relation. */
+    * sets), the semantic leg's rows (at most queries × fetch_k) straight
+    * from the Searcher's resident funnel, fusion and per-query top-k on
+    * the driver, and one result frame built from the fused rows. */
   private def searchLocal(
-      spark: SparkSession, searcher: Searcher, l: Local, textQuery: String,
-      params: HybridParams, fetchK: Int, subset: Option[DataFrame],
+      spark: SparkSession, searcher: Searcher, l: Local,
+      queryMap: => Map[Long, Array[Array[Float]]], textQuery: String,
+      params: HybridParams, semParams: SearchParams, subset: Option[DataFrame],
       semList: Option[DataFrame] => DataFrame): DataFrame = {
-    import spark.implicits._
-    val hits = l.img.topK(textQuery, fetchK, l.subsetIds, l.tombIds)
+    val hits = l.img.topK(textQuery, semParams.topK, l.subsetIds, l.tombIds)
     val kw: Seq[Hybrid.Hit] =
       for (q <- l.qids.toSeq; (d, sc, r) <- hits.toSeq) yield (q, d, sc, r)
     val rows =
       if (params.mode == "keyword") kw
       else {
-        // a Searcher answering from its resident image collects the
-        // filter anyway, so it gets the ids already collected (the
-        // filter is evaluated once, not once per leg); any other plan
-        // gets the filter itself, whose subset joins are size-planned
-        val semSubset =
-          if (searcher.servesLocally(params.searchParams, l.qids.length))
-            l.subsetIds.map(_.toSeq.toDF("doc_id"))
-          else subset
-        val sem = semList(semSubset)
-          .select(col("query_id"), col("doc_id"), col("score"), col("rank").cast("int"))
-          .as[(Long, Long, Double, Int)].collect().toSeq
+        // a Searcher answering from its resident image takes the filter
+        // ids already collected (the filter is evaluated once, not once
+        // per leg) and hands back rows; any other plan gets the filter
+        // itself, whose subset joins are size-planned
+        val sem =
+          if (searcher.servesLocally(semParams, l.qids.length))
+            searcher.residentRows(queryMap, semParams, l.subsetIds)
+          else Searcher.rowsOf(semList(subset))
         if (params.fusion == "rrf") Hybrid.rrfLocal(sem, kw, params.alpha, params.topK)
         else Hybrid.relativeScoreLocal(sem, kw, params.alpha, params.topK)
       }
-    rows.toDF("query_id", "doc_id", "score", "rank")
+    Searcher.resultFrame(spark, rows)
   }
 }

@@ -2,9 +2,10 @@ package graft.search
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 import graft.core.MaxSim
 import graft.index.MultiVectorIndex
@@ -98,6 +99,15 @@ final case class SearchParams(
   * [[SearchParams.sparseCentroidThreshold]] centroids the sparse funnel
   * runs instead, as one DataFrame pipeline.
   *
+  * Driver values between the ends: a request is read once into a query
+  * map by [[Searcher.readQueries]] (a local query frame from its rows,
+  * with no SQL execution), every dense placement's funnel yields
+  * `(query_id, doc_id, score, rank)` rows, and [[search]] builds one
+  * [[Searcher.ResultSchema]] frame from them ([[Searcher.resultFrame]]).
+  * The driver image's funnel is also exposed as rows
+  * ([[residentRows]]), so [[HybridSearch]]'s resident path fuses the
+  * semantic leg's rows without a frame round trip.
+  *
   * Open-handle semantics: a Searcher (like its MultiVectorIndex, whose
   * manifest/codec are lazily cached) snapshots the index when first
   * used — the cached images included. After an update lifecycle
@@ -114,31 +124,31 @@ final class Searcher(index: MultiVectorIndex) {
     * of the tokens table — the biggest table in the index). */
   private lazy val docCodes: DataFrame = index.docCodes
 
-  /** Full funnel. `queries(query_id: long, embeddings: array<array<float>>)`;
-    * optional `subset(doc_id)` pre-filter (S4). Returns
-    * (query_id, doc_id, score, rank). */
+  /** Full funnel. `queries(query_id: long, embeddings: array<array<float>>)`,
+    * read by [[Searcher.readQueries]]; optional `subset(doc_id)`
+    * pre-filter (S4). Returns (query_id, doc_id, score, rank): every
+    * dense placement a local relation under [[Searcher.ResultSchema]]
+    * built from the funnel's driver rows, the sparse funnel a lazy plan. */
   def search(
       queries: DataFrame,
       params: SearchParams = SearchParams(),
       subset: Option[DataFrame] = None
+  ): DataFrame = searchMap(Searcher.readQueries(queries), params, subset)
+
+  /** [[search]] over queries already read. */
+  private[search] def searchMap(
+      queryMap: Map[Long, Array[Array[Float]]],
+      params: SearchParams,
+      subset: Option[DataFrame]
   ): DataFrame = {
-    val queryMap = collectQueries(queries)
     val k = index.manifest("num_partitions").toInt
 
     // Serving dispatch: the driver-held image answers every batch it
     // admits (see localIndexBudgetBytes). Its subset ids are collected —
-    // bounded by the corpus, which fits the budget by dispatch — and the
-    // subset's count and eligible codes are read from them and the image.
-    if (servesLocally(params, queryMap.size)) {
-      requireFresh()
-      val img = localImage
-      val ids = subset.map(_.select("doc_id").as[Long].collect())
-      val (nProbe, eligible) = probeScope(params, k, ids.map(_.length.toLong)) { mask =>
-        ids.foreach(_.foreach(d => img.docCodes.get(d).foreach(_.foreach(mask(_) = true))))
-      }
-      return searchResident(Left(img), queryMap, params, nProbe, eligible, filterSets(ids))
-        .toDF("query_id", "doc_id", "score", "rank")
-    }
+    // bounded by the corpus, which fits the budget by dispatch.
+    if (servesLocally(params, queryMap.size))
+      return Searcher.resultFrame(spark,
+        residentRows(queryMap, params, subset.map(_.select("doc_id").as[Long].collect())))
 
     // Subset counted ONCE (drives the placement, probe scaling, and
     // every subset join's plan — a broad filter selecting 10⁹ ids must
@@ -174,9 +184,28 @@ final class Searcher(index: MultiVectorIndex) {
         lazy val img = shardedImage(n)
         (new Searcher.Slices(img, _ => img), filterSets(counted.map(_._1.as[Long].collect())))
       } else (parquetSlices(counted), (None, new java.util.HashSet[java.lang.Long]()))
-    chunks(queryMap, k, params.denseScoreBudgetBytes)
-      .flatMap(c => searchResident(Right(slices), c, params, nProbe, eligible, filters))
-      .toDF("query_id", "doc_id", "score", "rank")
+    Searcher.resultFrame(spark, chunks(queryMap, k, params.denseScoreBudgetBytes)
+      .flatMap(c => searchResident(Right(slices), c, params, nProbe, eligible, filters)))
+  }
+
+  /** The driver-image funnel as rows: (query_id, doc_id, score, rank) of
+    * a batch [[servesLocally]] admits, with the subset's ids already on
+    * the driver; their count and eligible codes are read from them and
+    * the image. [[search]] wraps the rows in a frame; the hybrid
+    * resident path fuses them as they are. Runs no Spark job once the
+    * image is held. */
+  private[graft] def residentRows(
+      queryMap: Map[Long, Array[Array[Float]]],
+      params: SearchParams,
+      subsetIds: Option[Array[Long]]
+  ): Seq[(Long, Long, Double, Int)] = {
+    requireFresh()
+    val img = localImage
+    val k = index.manifest("num_partitions").toInt
+    val (nProbe, eligible) = probeScope(params, k, subsetIds.map(_.length.toLong)) { mask =>
+      subsetIds.foreach(_.foreach(d => img.docCodes.get(d).foreach(_.foreach(mask(_) = true))))
+    }
+    searchResident(Left(img), queryMap, params, nProbe, eligible, filterSets(subsetIds))
   }
 
   /** Query chunks of the executor placements (search.rs:521-640,
@@ -200,13 +229,6 @@ final class Searcher(index: MultiVectorIndex) {
     if (cur.nonEmpty) out += cur
     out.toSeq
   }
-
-  private def collectQueries(queries: DataFrame): Map[Long, Array[Array[Float]]] =
-    queries
-      .select("query_id", "embeddings")
-      .as[(Long, Array[Array[Float]])]
-      .collect()
-      .toMap
 
   /** S4 pre-computation, shared by every funnel: adaptive probe scaling
     * (search.rs:370-382) — with a subset of `n` ids, probe more
@@ -743,7 +765,7 @@ final class Searcher(index: MultiVectorIndex) {
     val dim = codec.dim
     val k = codec.numCentroids
     val cents = codec.centroids
-    val queryMap = collectQueries(queries)
+    val queryMap = Searcher.readQueries(queries)
     // S1 (f64): per token × centroid sequential double dot — products
     // of two f32 are exact in f64, so DuckDB's
     // list_sum(list_transform(... ::DOUBLE ...)) is bit-identical
@@ -836,7 +858,7 @@ final class Searcher(index: MultiVectorIndex) {
     * mirrors the reference's exact n_full_scores path). */
   def bruteForce(queries: DataFrame, topK: Int): DataFrame = {
     val codecBc = spark.sparkContext.broadcast(index.codec)
-    val queriesBc = spark.sparkContext.broadcast(collectQueries(queries))
+    val queriesBc = spark.sparkContext.broadcast(Searcher.readQueries(queries))
     val liveTokens = index.tombstonesOpt match {
       case Some(tomb) => index.tokens.join(tomb, Seq("doc_id"), "left_anti")
       case None       => index.tokens
@@ -888,6 +910,139 @@ object Searcher {
     * up to it; the executor placements run larger batches in chunks of
     * at most this many queries. */
   private[search] val LocalMaxBatch = 4096
+
+  /** Decoder of a collected query frame, derived once: `as[...]` derives
+    * its encoder by reflection on every call. */
+  private val QueryEncoder = Encoders.product[(Long, Array[Array[Float]])]
+
+  /** The one query reader of every placement: `queries(query_id,
+    * embeddings)` as a driver map, query_id long or int.
+    *
+    * A frame whose analyzed plan is a `LocalRelation` — a `Seq.toDF` or
+    * `createDataFrame` frame, as a request handler builds one — or a
+    * projection over one that only selects and renames columns, is read
+    * from the relation's rows ([[localQueries]]): the plan was analyzed
+    * when the Dataset was built, so the read runs no Catalyst pass, no
+    * encoder derivation and no SQL execution. Any other frame (parquet,
+    * filtered, computed) is collected, one SQL execution, through
+    * [[QueryEncoder]]. Both read the same map.
+    *
+    * The ids must be distinct: a map keeps one row per id, so a
+    * duplicated id would silently answer fewer queries than were sent. */
+  private[graft] def readQueries(queries: DataFrame): Map[Long, Array[Array[Float]]] = {
+    val rows = localQueries(queries).getOrElse(
+      queries.select("query_id", "embeddings").as(QueryEncoder).collect().toIndexedSeq)
+    requireDistinct(rows.iterator.map(_._1))
+    rows.toMap
+  }
+
+  /** The sorted query ids of a request that needs no embeddings (a
+    * keyword one), when there are at most `cap`: a local frame's read
+    * from its rows as [[readQueries]] reads them, any other frame's from
+    * a collect of at most `cap + 1` ids, so a larger batch never reaches
+    * the driver; None above `cap`. The ids must be distinct. */
+  private[graft] def readQueryIds(queries: DataFrame, cap: Int): Option[Array[Long]] = {
+    val ids = localQueries(queries).map(_.map(_._1).toArray).getOrElse(
+      queries.select(col("query_id").cast("long")).limit(cap + 1).as(Encoders.scalaLong).collect())
+    requireDistinct(ids.iterator)
+    Some(ids.sorted).filter(_.length <= cap)
+  }
+
+  private def requireDistinct(ids: Iterator[Long]): Unit = {
+    val seen = new scala.collection.mutable.LongMap[Unit]()
+    ids.foreach { q =>
+      require(seen.put(q, ()).isEmpty,
+        s"query_id $q appears more than once in the query frame; query ids must be distinct")
+    }
+  }
+
+  /** The `(query_id, embeddings)` rows of a frame that is a local
+    * relation under zero or more projections that only select and
+    * rename its columns, with `query_id` long or int and `embeddings`
+    * `array<array<float>>` of non-null floats; None for any other frame,
+    * which [[readQueries]] collects instead. */
+  private[graft] def localQueries(
+      queries: DataFrame): Option[IndexedSeq[(Long, Array[Array[Float]])]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+    // the relation's rows and each output column's ordinal in them
+    def columns(plan: LogicalPlan): Option[(Seq[org.apache.spark.sql.catalyst.InternalRow],
+        Seq[(Attribute, Int)])] = plan match {
+      case l: LocalRelation => Some((l.data, l.output.zipWithIndex))
+      case Project(list, child) => columns(child).flatMap { case (data, cols) =>
+        val ordinal = cols.map { case (a, i) => a.exprId -> i }.toMap
+        val out = list.map {
+          case a: AttributeReference => ordinal.get(a.exprId).map(a -> _)
+          case al @ Alias(a: AttributeReference, _) => ordinal.get(a.exprId).map(al.toAttribute -> _)
+          case _ => None
+        }
+        if (out.forall(_.isDefined)) Some((data, out.flatten)) else None
+      }
+      case _ => None
+    }
+    val resolver = queries.sparkSession.sessionState.conf.resolver
+    // the one column named `name`, when its type passes `typeOk`
+    def column(cols: Seq[(Attribute, Int)], name: String)(typeOk: DataType => Boolean) =
+      cols.filter(c => resolver(c._1.name, name)) match {
+        case Seq(c) if typeOk(c._1.dataType) => Some(c)
+        case _ => None
+      }
+    for {
+      (data, cols) <- columns(queries.queryExecution.analyzed)
+      (qAttr, qi) <- column(cols, "query_id")(t => t == LongType || t == IntegerType)
+      (_, ei) <- column(cols, "embeddings") {
+        case ArrayType(ArrayType(FloatType, false), _) => true
+        case _ => false
+      }
+    } yield {
+      val isLong = qAttr.dataType == LongType
+      data.iterator.map { r =>
+        require(!r.isNullAt(qi), "null query_id in the query frame")
+        val q = if (isLong) r.getLong(qi) else r.getInt(qi).toLong
+        val emb =
+          if (r.isNullAt(ei)) null
+          else {
+            val toks = r.getArray(ei)
+            Array.tabulate(toks.numElements())(t =>
+              if (toks.isNullAt(t)) null else toks.getArray(t).toFloatArray())
+          }
+        (q, emb)
+      }.toIndexedSeq
+    }
+  }
+
+  /** Schema of every `(query_id, doc_id, score, rank)` search result
+    * frame: non-null long, long, double and int columns. */
+  val ResultSchema: StructType = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false),
+    StructField("rank", IntegerType, nullable = false)))
+
+  /** The one result builder: driver rows as a local relation under a
+    * fixed `schema` (`SparkSession.createDataFrame` over `Row`s, whose
+    * analysis is one `LocalRelation` node: no encoder derivation, no
+    * SQL execution, and a collect of it runs no Spark job). Each row's
+    * values must have the schema's types, in its column order. */
+  private[graft] def localFrame(spark: SparkSession, schema: StructType,
+      rows: Iterator[Row]): DataFrame = {
+    val list = new java.util.ArrayList[Row]()
+    rows.foreach(list.add)
+    spark.createDataFrame(list, schema)
+  }
+
+  /** `(query_id, doc_id, score, rank)` rows as a [[ResultSchema]] frame. */
+  private[graft] def resultFrame(spark: SparkSession,
+      hits: Iterable[(Long, Long, Double, Int)]): DataFrame =
+    localFrame(spark, ResultSchema, hits.iterator.map { case (q, d, s, r) => Row(q, d, s, r) })
+
+  /** The rows of any `(query_id, doc_id, score, rank)` result frame,
+    * collected once and read by position: no per-call encoder. */
+  private[search] def rowsOf(result: DataFrame): Seq[(Long, Long, Double, Int)] =
+    result.select("query_id", "doc_id", "score", "rank").collect().toSeq.map { r =>
+      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
+        r.getAs[Number](2).doubleValue, r.getAs[Number](3).intValue)
+    }
 
   /** Driver-residency multiplier for the fast-path dispatch:
     * localIndexBudgetBytes bounds a packed image estimated at N bytes

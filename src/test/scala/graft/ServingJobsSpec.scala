@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +15,10 @@ import graft.search.{HybridParams, SearchParams, Searcher}
   * (resident BM25, semantic and metadata images, driver-side fusion),
   * for a single query and for a batch, also after a deferred delete, and
   * a zero resident budget keeps the distributed plan reachable — for
-  * semantic search, one job per funnel phase. */
+  * semantic search, one job per funnel phase. A warm request also starts
+  * no SQL execution before its caller collects (a filtered one at most
+  * its subset's collect): the query frame is read from its local rows
+  * and the result built from driver rows. */
 class ServingJobsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -24,12 +28,18 @@ class ServingJobsSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  /** Counts job starts and records their job descriptions; a job run
-    * under the `graft.fence` local property is a fence: listener events
-    * arrive in order, so once the fence's start is seen every earlier
-    * job start has been counted. */
+  /** Counts job starts and records their job descriptions, and counts
+    * SQL executions (each Dataset action starts one, even one that runs
+    * no job); a job run under the `graft.fence` local property is a
+    * fence: listener events arrive in order, so once the fence's start is
+    * seen every earlier job and execution start has been counted. */
   private object Jobs extends SparkListener {
     val started = new AtomicInteger(0)
+    val executions = new AtomicInteger(0)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+      case _ =>
+    }
     val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var fence = ""
@@ -64,6 +74,50 @@ class ServingJobsSpec extends AnyFunSuite {
     f
     drain()
     Jobs.started.get()
+  }
+
+  /** SQL executions `f` starts, fenced like [[jobsOf]]. */
+  private def executionsOf(f: => Unit): Int = {
+    drain()
+    Jobs.executions.set(0)
+    f
+    drain()
+    Jobs.executions.get()
+  }
+
+  test("warm requests start no SQL execution before the caller collects; a filtered one at most its subset collect") {
+    IndexFixtures.requireTestdata()
+    import spark.implicits._
+    import graft.meta.Where.SLong
+    val path = "/tmp/graft_serving_jobs_executions"
+    graft.util.Fs.deleteRecursively(path)
+    val docs = IndexFixtures.docs(spark).filter(col("doc_id") < 30)
+    val meta = (0L until 30L).map(i =>
+      (i, s"""{"title": "doc $i", "group": ${i % 3}}""")).toDF("order", "json")
+    val gi = GraftIndex.create(spark, path, docs, Some(meta))
+    // local query frames, as a request handler builds them
+    val embs = docs.select("doc_id", "embeddings")
+      .as[(Long, Array[Array[Float]])].collect().sortBy(_._1)
+    val q1 = embs.slice(4, 5).toSeq.toDF("query_id", "embeddings")
+    val q8 = embs.take(8).toSeq.toDF("query_id", "embeddings")
+    val requests: Seq[(String, Int, () => DataFrame)] = Seq(
+      ("1-query semantic", 0, () => gi.search(q1)),
+      ("8-query semantic", 0, () => gi.search(q8)),
+      ("keyword", 0, () => gi.ftsIndex.search("doc", 10))) ++
+      (for (mode <- Seq("semantic", "keyword", "hybrid"); fusion <- Seq("relative_score", "rrf"))
+        yield (s"$mode/$fusion", 0, () => gi.hybrid(q1, "doc", HybridParams(mode = mode, fusion = fusion)))) :+
+      (("filtered", 1, () => gi.searchFiltered(q1, "group = ?", Seq(SLong(1L)))))
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      for ((name, bound, request) <- requests) {
+        request().collect() // warm: the first calls collect the resident images
+        var result: DataFrame = null
+        val executions = executionsOf { result = request() }
+        assert(executions <= bound, s"warm $name request started $executions SQL executions")
+        assert(jobsOf(assert(result.collect().nonEmpty)) === 0, s"$name: collecting the result ran a job")
+      }
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+    gi.drop()
   }
 
   test("warm keyword and hybrid requests run 0 Spark jobs; budget 0 runs the distributed plan") {
